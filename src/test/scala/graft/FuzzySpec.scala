@@ -76,10 +76,11 @@ class FuzzySpec extends SparkSpec {
     val p0 = Serving.searchFuzzy(dir, Seq("hash"), k = 10, maxDist = 0)
       .map(h => (h.id, h.score, h.nTerms))
     assert(p0 === b0)
-    // the RESIDENT-server path: a real IndexCache means the '#terms'
-    // loader runs inside computeIfAbsent — posting rows must be loaded
-    // BEFORE that compute (CHM forbids touching other mappings from a
-    // mapping function). Cold + warm both match the no-cache answer.
+    // the RESIDENT-server path: a real IndexCache fills the per-term
+    // range entries searchBm25 shares (their key sets are the fuzzy
+    // vocabulary; no loader may nest inside another's computeIfAbsent).
+    // Cold + warm both match the no-cache answer, and the cache holds
+    // only the manifest and one entry per range.
     val cache = Serving.newCache()
     val cold = Serving.searchFuzzy(dir, Seq("vecto", "hash"), k = 20,
       cache = cache).map(h => (h.id, h.score, h.nTerms))
@@ -87,6 +88,9 @@ class FuzzySpec extends SparkSpec {
       cache = cache).map(h => (h.id, h.score, h.nTerms))
     assert(cold === probe)
     assert(warm === probe)
+    val ranges = spark.read.parquet(s"$dir/manifest")
+      .filter(col("min_key").isNotNull).count()
+    assert(cache.size === ranges + 1, "manifest + one entry per range")
   }
 
   test("maxDist=0 degenerates to exact term counting") {

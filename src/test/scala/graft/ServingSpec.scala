@@ -13,28 +13,122 @@ class ServingSpec extends SparkSpec {
 
   private def ivfPath: String = AnnQueries.persistedIvfPath(spark, sfDir)
 
-  test("IVF serving probe == Spark searchIvf, hit for hit") {
-    val path = ivfPath
-    val q = VectorQueries.qvec(spark, sfDir, 0)
-    val index = Ann.loadIvf(spark, path)
-    val viaSpark = Ann.searchIvf(index, q, 10, nprobe = 4)
+  /** Run `probe` uncached and on a fresh real [[Serving.IndexCache]]
+    * (cold fill, then warm), asserting all three answers equal `want`. */
+  private def assertUncachedAndCached[A](want: Seq[A], clue: String)
+                                        (probe: Option[Serving.IndexCache] => Seq[A]): Unit = {
+    assert(probe(None) === want, s"uncached: $clue")
+    val cache = Some(Serving.newCache())
+    assert(probe(cache) === want, s"cached cold: $clue")
+    assert(probe(cache) === want, s"cached warm: $clue")
+  }
+
+  private def ivfProbe(path: String, q: Array[Float], k: Int, nprobe: Int)
+                      (cache: Option[Serving.IndexCache]): Seq[(Long, Int, Int, Double)] =
+    cache.fold(Serving.searchIvf(path, q, k, nprobe))(c =>
+      Serving.searchIvf(path, q, k, nprobe, cache = c))
+      .map(h => (h.vecId, h.label, h.cluster, h.dist))
+
+  private def sparkIvf(path: String, q: Seq[Float], k: Int,
+                       nprobe: Int): Seq[(Long, Int, Int, Double)] =
+    Ann.searchIvf(Ann.loadIvf(spark, path), q, k, nprobe = nprobe)
       .select($"vec_id", $"label", $"ivf_cluster".cast("int"), $"dist")
       .as[(Long, Int, Int, Double)].collect().toSeq
-    val viaServing = Serving.searchIvf(path, q.toArray, 10, nprobe = 4)
-      .map(h => (h.vecId, h.label, h.cluster, h.dist))
-    assert(viaServing === viaSpark)
+
+  test("IVF serving probe == Spark searchIvf, hit for hit") {
+    val path = ivfPath
+    val cells = Ann.loadIvf(spark, path).centroids.length
+    for (qi <- Seq(0, 3); k <- Seq(1, 10, 50); nprobe <- Seq(1, 4, cells)) {
+      val q = VectorQueries.qvec(spark, sfDir, qi)
+      assertUncachedAndCached(sparkIvf(path, q, k, nprobe),
+        s"q=$qi k=$k nprobe=$nprobe")(ivfProbe(path, q.toArray, k, nprobe))
+    }
+  }
+
+  test("IVF ties on duplicated vectors go to the lower vec_id, cached and uncached") {
+    // 3 copies of each of 4 base vectors: every probe meets exact
+    // (dist, vec_id) ties that only the id can order
+    val base = Seq(Seq(1f, 0f, 0f), Seq(0f, 1f, 0f), Seq(0f, 0f, 1f),
+      Seq(0.6f, 0.8f, 0f))
+    val emb = (0 until 12).map(i => (11L - i, i % 3, base(i % 4)))
+      .toDF("vec_id", "label", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("ivf-dups").toString
+    Ann.saveIvf(Ann.buildIvf(emb, numClusters = 2), dir)
+    for (b <- base; k <- Seq(1, 3, 5, 12); nprobe <- Seq(1, 2)) {
+      val want = sparkIvf(dir, b, k, nprobe)
+      assertUncachedAndCached(want, s"q=$b k=$k nprobe=$nprobe")(
+        ivfProbe(dir, b.toArray, k, nprobe))
+      val lead = want.takeWhile(_._4 == 0.0).map(_._1)
+      assert(lead === lead.sorted && lead.nonEmpty, s"q=$b: ties by vec_id")
+    }
+  }
+
+  test("bounded top-k keeps sortBy edge semantics: k <= 0 empty, huge k whole ranking, NaN by Double.compare") {
+    val path = ivfPath
+    val index = Ann.loadIvf(spark, path)
+    val bm25 = HybridQueries.persistedBm25(spark, sfDir)
+    val hnsw = AnnQueries.persistedHnswPath(spark, sfDir)
+    val q = VectorQueries.qvec(spark, sfDir, 0).toArray
+    val cache = Serving.newCache()
+    for (k <- Seq(0, -1, Int.MinValue)) {
+      assert(Serving.searchIvf(path, q, k, nprobe = 4).isEmpty)
+      assert(Serving.searchIvf(path, q, k, nprobe = 4, cache = cache).isEmpty)
+      assert(Serving.searchBm25(bm25, Seq("vector"), k).isEmpty)
+      assert(Serving.searchBm25(bm25, Seq("vector"), k, cache = cache).isEmpty)
+      assert(Serving.searchHnsw(hnsw, q, k, ef = 32, nprobe = 4).isEmpty)
+    }
+    // a k past every candidate returns the whole probed ranking
+    val cells = index.centroids.length
+    val all = sparkIvf(path, q.toSeq, index.assigned.count().toInt, cells)
+    assertUncachedAndCached(all, "k = Int.MaxValue")(ivfProbe(path, q, Int.MaxValue, cells))
+    assert(Serving.searchBm25(bm25, Seq("vector"), Int.MaxValue) ===
+      Serving.searchBm25(bm25, Seq("vector"), 1 << 20))
+    // a NaN query makes every distance NaN: the old stable
+    // sortBy((dist, vec_id)) put all NaNs equal, so the ids decide —
+    // replayed here over every cell's rows with the f32 kernel
+    val rows = index.assigned
+      .select($"vec_id", $"label", $"ivf_cluster".cast("int"), $"embedding")
+      .as[(Long, Int, Int, Seq[Float])].collect().toSeq
+    for (nanQ <- Seq(q.updated(5, Float.NaN), Array.fill(q.length)(Float.NaN))) {
+      val want = rows.map { case (id, label, c, v) =>
+        var acc = 0.0f; var d = 0
+        while (d < v.length) { val x = v(d) - nanQ(d); acc += x * x; d += 1 }
+        (id, label, c, math.sqrt(acc.toDouble).toFloat.toDouble)
+      }.sortBy(h => (h._4, h._1)).take(10)
+      assert(want.forall(_._4.isNaN))
+      // NaN != NaN: compare the distances' bits
+      def bits(hs: Seq[(Long, Int, Int, Double)]) =
+        hs.map(h => h.copy(_4 = java.lang.Double.doubleToRawLongBits(h._4)))
+      assertUncachedAndCached(bits(want), "NaN query")(c =>
+        bits(ivfProbe(path, nanQ, 10, cells)(c)))
+    }
   }
 
   test("BM25 serving probe == Spark searchPersistedIndex, hit for hit") {
     val path = HybridQueries.persistedBm25(spark, sfDir)
-    val terms = Seq("vector", "hash", "join")
-    val viaSpark = Bm25.searchPersistedIndex(spark, path, terms, k = 20,
-        rationalIdf = true)
-      .as[(Long, Long, Long)].collect().toSeq
-    val viaServing = Serving.searchBm25(path, terms, k = 20,
-        rationalIdf = true)
-      .map(h => (h.id, h.bm25Fp, h.nTerms))
-    assert(viaServing === viaSpark)
+    val vocab = spark.read.parquet(s"$path/postings").select($"term")
+      .distinct().as[String].collect().sorted.toSeq
+    val queries = Seq(
+      Seq("vector", "hash", "join"),
+      Seq("hash", "vector", "hash", "hash"),              // duplicated terms
+      Seq("zzznotaterm", "vector", "qqq0", "join"),       // absent + present
+      vocab)                                              // whole vocabulary
+    for (terms <- queries; rational <- Seq(true, false)) {
+      val matching = spark.read.parquet(s"$path/postings")
+        .filter($"term".isin(terms: _*)).select($"id").distinct().count().toInt
+      for (k <- Seq(1, 10, 50, matching + 7)) {
+        val viaSpark = Bm25.searchPersistedIndex(spark, path, terms, k = k,
+            rationalIdf = rational)
+          .as[(Long, Long, Long)].collect().toSeq
+        assertUncachedAndCached(viaSpark,
+          s"terms=${terms.take(4)} rational=$rational k=$k") { cache =>
+          cache.fold(Serving.searchBm25(path, terms, k, rationalIdf = rational))(c =>
+            Serving.searchBm25(path, terms, k, rationalIdf = rational, cache = c))
+            .map(h => (h.id, h.bm25Fp, h.nTerms))
+        }
+      }
+    }
+    assert(Serving.searchBm25(path, Seq("zzznotaterm"), 10).isEmpty)
   }
 
   test("IVF-PQ serving probe == Spark searchIvfPq, hit for hit, zero Spark jobs") {
