@@ -1,12 +1,19 @@
 package graft.serving
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.ColumnReader
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.column.page.PageReadStore
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.{GroupType, MessageType}
 
 /** Driver-side LOW-LATENCY probe path over the persisted indexes — the
   * batch/serving split the reference embodies with its HNSW segments
@@ -14,17 +21,20 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
   * layouts ([[graft.operators.Ann.saveIvf]],
   * [[graft.operators.Bm25.buildPersistedIndex]]); a single query does
   * NOT need a Spark job to read them. These functions answer one query
-  * by reading the 1-2 pruned partitions directly through parquet-mr —
-  * no session, no scheduler, no shuffle — with result parity against
-  * the Spark operators spec-pinned (same kernels, same tie-breaks).
+  * by reading the pruned partitions directly through parquet-mr's
+  * column readers — no session, no scheduler, no shuffle — with result
+  * parity against the Spark operators spec-pinned (same kernels, same
+  * tie-breaks).
   *
   * Latency: a warm `local[32]` Spark job floors at ~100-300 ms for the
-  * same probe; these direct reads answer in ~50 ms at gate SF, most of
-  * it parquet-mr reader init (measured in ServingSpec). A resident
-  * server passes an [[IndexCache]] so repeat probes skip the reader
-  * init entirely and run only in-memory kernels: warm p50 of 0.06 ms
-  * (IVF), 0.26 ms (BM25) and 0.44 ms (hybrid RRF) on the sf0.1 fixture
-  * (perfbench serve_warm, 4-vCPU VM, 2 clients). At 100 TB the same
+  * same probe; these direct reads answer uncached with a p50 of 7 ms
+  * (IVF), 11 ms (HNSW, BM25) and 21 ms (hybrid RRF) on the sf0.1
+  * fixture (perfbench serve_cold, 4-vCPU VM, 2 clients), most of it
+  * decoding the probed files' column pages. A resident server passes
+  * an [[IndexCache]] so repeat probes skip the reads entirely and run
+  * only in-memory kernels: warm p50 of 0.06 ms (IVF), 0.26 ms (BM25)
+  * and 0.44 ms (hybrid RRF) on the same fixture (perfbench serve_warm).
+  * At 100 TB the same
   * code serves from the pruned cluster/range directories — the probe
   * reads O(corpus/k) for IVF and O(query postings) for BM25, exactly
   * what the Spark plan reads, minus the job overhead.
@@ -38,12 +48,14 @@ object Serving {
   /** Shared default Hadoop conf: `new Configuration()` parses XML
     * resources on every construction (~tens of ms) — that alone would
     * dwarf the probe's actual IO. Built once, used by every call that
-    * doesn't pass its own. */
+    * doesn't pass its own; every part-file open reuses the conf it is
+    * given (this one or the caller's) and never builds another. */
   private lazy val defaultConf: Configuration = new Configuration()
 
-  /** Opt-in decoded-partition cache for a RESIDENT server: the warm
-    * probe's residual cost is parquet-mr reader init + footer reads
-    * per touched dir, so a server answering repeat probes against the
+  /** Opt-in decoded-partition cache for a RESIDENT server: an uncached
+    * probe lists, opens and decodes every touched dir again (p50 7 ms
+    * for IVF to 21 ms for hybrid RRF on the sf0.1 fixture, perfbench
+    * serve_cold), so a server answering repeat probes against the
     * same index caches the DECODED partition content (centroids,
     * stats, manifest, per-cluster vectors, and per BM25 range a
     * term → (ids ascending, dl, tf) map of primitive posting columns)
@@ -100,24 +112,185 @@ object Serving {
     graft.operators.Maintenance.resolveCurrentFs(fs, base)
   }
 
-  // ------------------------------------------------------ parquet plumbing
+  // ------------------------------------------------------ parquet decoding
 
-  /** Iterate every row group of every part file under `dir` (sorted by
-    * name for determinism), applying `f`. */
-  private def foreachGroup(conf: Configuration, dir: String)(f: Group => Unit): Unit = {
+  /** Decode the `cols` columns of every row group of every part file
+    * under `dir` (sorted by name for determinism), handing each
+    * [[RowGroup]] to `f`; a missing dir decodes nothing. Each file
+    * opens with the caller's `conf` and the listing's status (no
+    * `Configuration` is built and no second status call is made per
+    * file), reads only the requested column chunks, and decodes their
+    * pages straight into primitive arrays — no record assembly. */
+  private[graft] def foreachRowGroup(conf: Configuration, dir: String, cols: String*)
+                                    (f: RowGroup => Unit): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return
-    val files = fs.listStatus(p).toSeq
+    val files = fs.listStatus(p)
       .filter(st => !st.isDirectory && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
-    files.foreach { file =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), file)
-        .withConf(conf).build()
+      .sortBy(_.getPath.getName)
+    files.foreach { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf, st.getPath).build())
       try {
-        var g = reader.read()
-        while (g != null) { f(g); g = reader.read() }
+        val meta = reader.getFooter.getFileMetaData
+        val fileSchema = meta.getSchema
+        val schema = new MessageType(fileSchema.getName,
+          fileSchema.getFields.asScala.filter(t => cols.contains(t.getName)).asJava)
+        reader.setRequestedSchema(schema)
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          f(new RowGroup(s"$dir/${st.getPath.getName}", schema, pages, meta.getCreatedBy))
+          pages = reader.readNextRowGroup()
+        }
       } finally reader.close()
+    }
+  }
+
+  /** The converter tree [[ColumnReadStoreImpl]] requires for `schema`:
+    * values are read from the column readers directly, so it converts
+    * nothing (and declines dictionaries, which the readers then decode). */
+  private object NoopConverter {
+    private val leaf = new PrimitiveConverter {}
+    def apply(t: GroupType): GroupConverter = {
+      val children = t.getFields.asScala.map(f =>
+        if (f.isPrimitive) leaf else apply(f.asGroupType)).toArray[Converter]
+      new GroupConverter {
+        def getConverter(i: Int): Converter = children(i)
+        def start(): Unit = ()
+        def end(): Unit = ()
+      }
+    }
+  }
+
+  /** The requested columns of ONE row group of `file`, each decoded on
+    * request into a primitive array of `rows` entries. Scalar accessors
+    * read a flat column; the list accessors read a Spark-written
+    * `array<…>` column by its one leaf (so list/element naming variants
+    * don't matter), a row starting at each repetition level 0. A null
+    * in a column read as required throws, naming file and column. */
+  private[graft] final class RowGroup(file: String, schema: MessageType,
+                                      pages: PageReadStore, createdBy: String) {
+    val rows: Int = pages.getRowCount.toInt
+    private val store =
+      new ColumnReadStoreImpl(pages, NoopConverter(schema), schema, createdBy)
+
+    def has(col: String): Boolean = schema.containsField(col)
+
+    /** Throw for a null where `col` requires a value. */
+    def nullIn(col: String): Nothing =
+      throw new IllegalStateException(s"$file: null in required column '$col'")
+
+    private def leaf(col: String, repeated: Boolean): ColumnReader = {
+      val d = schema.getColumns.asScala.filter(_.getPath.head == col)
+      if (d.isEmpty) throw new IllegalStateException(s"$file: no column '$col'")
+      require(d.size == 1 && d.head.getMaxRepetitionLevel == (if (repeated) 1 else 0),
+        s"$file: column '$col' is not a ${if (repeated) "list" else "scalar"} column")
+      store.getColumnReader(d.head)
+    }
+
+    /** Walk a flat column: `value(i)` reads row i's value off `r`. */
+    private def scalar(col: String, r: ColumnReader, nullable: Boolean)
+                      (value: Int => Unit): Unit = {
+      val maxDef = r.getDescriptor.getMaxDefinitionLevel
+      var i = 0
+      while (i < rows) {
+        if (r.getCurrentDefinitionLevel == maxDef) value(i)
+        else if (!nullable) nullIn(col)
+        r.consume(); i += 1
+      }
+    }
+
+    def ints(col: String): Array[Int] = {
+      val r = leaf(col, repeated = false); val out = new Array[Int](rows)
+      scalar(col, r, nullable = false)(i => out(i) = r.getInteger)
+      out
+    }
+
+    def longs(col: String): Array[Long] = {
+      val r = leaf(col, repeated = false); val out = new Array[Long](rows)
+      scalar(col, r, nullable = false)(i => out(i) = r.getLong)
+      out
+    }
+
+    def doubles(col: String): Array[Double] = {
+      val r = leaf(col, repeated = false); val out = new Array[Double](rows)
+      scalar(col, r, nullable = false)(i => out(i) = r.getDouble)
+      out
+    }
+
+    def bools(col: String): Array[Boolean] = {
+      val r = leaf(col, repeated = false); val out = new Array[Boolean](rows)
+      scalar(col, r, nullable = false)(i => out(i) = r.getBoolean)
+      out
+    }
+
+    /** UTF-8 strings; with `nullable` a null row is `null`. A dictionary
+      * entry repeated on consecutive rows decodes once. */
+    def strings(col: String, nullable: Boolean = false): Array[String] = {
+      val r = leaf(col, repeated = false); val out = new Array[String](rows)
+      var last: Binary = null; var lastStr: String = null
+      scalar(col, r, nullable) { i =>
+        val b = r.getBinary
+        if (!(b eq last)) { last = b; lastStr = b.toStringUsingUTF8 }
+        out(i) = lastStr
+      }
+      out
+    }
+
+    /** Walk a one-level list column: `elem()` takes the reader's current
+      * element, `close(i)` ends non-null row i after its elements; a
+      * null list leaves row i to the caller's default (null). */
+    private def list(col: String, r: ColumnReader, nullable: Boolean)
+                    (elem: () => Unit)(close: Int => Unit): Unit = {
+      val path = r.getDescriptor.getPath
+      val maxDef = r.getDescriptor.getMaxDefinitionLevel
+      // the list itself is non-null from `listDef`, holds an element
+      // slot from `slotDef`, and a non-null element at `maxDef`
+      val listDef = schema.getMaxDefinitionLevel(path.head)
+      val slotDef = schema.getMaxDefinitionLevel(path.take(2): _*)
+      val total = pages.getPageReader(r.getDescriptor).getTotalValueCount
+      var row = -1; var open = false; var t = 0L
+      while (t < total) {
+        val d = r.getCurrentDefinitionLevel
+        if (r.getCurrentRepetitionLevel == 0) {
+          if (open) close(row)
+          row += 1
+          open = d >= listDef
+          if (!open && !nullable) nullIn(col)
+        }
+        if (d == maxDef) elem()
+        else if (d >= slotDef) nullIn(s"$col.element")
+        r.consume(); t += 1
+      }
+      if (open) close(row)
+      if (row + 1 != rows)
+        throw new IllegalStateException(s"$file: column '$col' holds ${row + 1} of $rows rows")
+    }
+
+    // the list accessors gather a row's elements in one scratch
+    // buffer per column and copy each row out at its exact length
+
+    /** `list<float>` rows; with `nullable` a null list is `null`. */
+    def floatLists(col: String, nullable: Boolean = false): Array[Array[Float]] = {
+      val r = leaf(col, repeated = true); val out = new Array[Array[Float]](rows)
+      var buf = new Array[Float](64); var n = 0
+      list(col, r, nullable) { () =>
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
+        buf(n) = r.getFloat; n += 1
+      } { i => out(i) = java.util.Arrays.copyOf(buf, n); n = 0 }
+      out
+    }
+
+    /** `list<bigint>` rows. */
+    def longLists(col: String): Array[Array[Long]] = {
+      val r = leaf(col, repeated = true); val out = new Array[Array[Long]](rows)
+      var buf = new Array[Long](64); var n = 0
+      list(col, r, nullable = false) { () =>
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
+        buf(n) = r.getLong; n += 1
+      } { i => out(i) = java.util.Arrays.copyOf(buf, n); n = 0 }
+      out
     }
   }
 
@@ -133,7 +306,7 @@ object Serving {
     * next probe reloads, old entries become garbage (bounded by
     * republish count — call [[IndexCache.clear]] on a long-lived
     * server if that ever matters). One FS metadata listing per CACHED
-    * probe — noise next to reader init on a miss, exactly the
+    * probe — noise next to the decode on a miss, exactly the
     * staleness check a resident server wants on a hit, and skipped
     * entirely on the no-cache path (the key is by-name). The INDEX
     * probes (IVF/BM25) keep the documented explicit-clear contract:
@@ -150,17 +323,6 @@ object Serving {
     }
   }
 
-  /** Read a Spark-written `array<float>` column (3-level LIST group)
-    * by field INDEX, so list/element naming variants don't matter. */
-  private def floatArray(g: Group, field: String): Array[Float] = {
-    val list = g.getGroup(field, 0)
-    val n = list.getFieldRepetitionCount(0)
-    val out = new Array[Float](n)
-    var i = 0
-    while (i < n) { out(i) = list.getGroup(0, i).getFloat(0, 0); i += 1 }
-    out
-  }
-
   // ------------------------------------------------------------ IVF probe
 
   /** Decoded centroid table of a saveIvf layout — ONE loader shared by
@@ -169,8 +331,8 @@ object Serving {
                             base: String): Seq[(Int, Array[Float])] = {
     val cents = cache.getOrLoad(s"$base/centroids") {
       val b = mutable.ArrayBuffer.empty[(Int, Array[Float])]
-      foreachGroup(conf, s"$base/centroids") { g =>
-        b += ((g.getInteger("cluster_id", 0), floatArray(g, "centroid")))
+      foreachRowGroup(conf, s"$base/centroids", "cluster_id", "centroid") { rg =>
+        b ++= rg.ints("cluster_id").iterator.zip(rg.floatLists("centroid"))
       }
       b.toSeq
     }
@@ -186,9 +348,11 @@ object Serving {
     val dir = s"$base/corpus/ivf_cluster=$cluster"
     cache.getOrLoad(dir) {
       val b = mutable.ArrayBuffer.empty[(Long, Int, Array[Float])]
-      foreachGroup(conf, dir) { g =>
-        b += ((g.getLong("vec_id", 0), g.getInteger("label", 0),
-          floatArray(g, "embedding")))
+      foreachRowGroup(conf, dir, "vec_id", "label", "embedding") { rg =>
+        val ids = rg.longs("vec_id"); val labels = rg.ints("label")
+        val vecs = rg.floatLists("embedding")
+        var i = 0
+        while (i < rg.rows) { b += ((ids(i), labels(i), vecs(i))); i += 1 }
       }
       b.toSeq
     }
@@ -585,8 +749,10 @@ object Serving {
 
     val (n, avgdl) = cache.getOrLoad(s"$base/stats") {
       var n0 = 0L; var a0 = 0.0; var sawStats = false
-      foreachGroup(conf, s"$base/stats") { g =>
-        n0 = g.getLong("n", 0); a0 = g.getDouble("avgdl", 0); sawStats = true
+      foreachRowGroup(conf, s"$base/stats", "n", "avgdl") { rg =>
+        if (rg.rows > 0) {
+          n0 = rg.longs("n").last; a0 = rg.doubles("avgdl").last; sawStats = true
+        }
       }
       require(sawStats, s"no stats row under $base/stats")
       (n0, a0)
@@ -724,12 +890,18 @@ object Serving {
       // so the map is consulted once per term run, not once per row
       var term: String = null
       var col: TermPostingsBuilder = null
-      foreachGroup(conf, dir) { g =>
-        val t = g.getString("term", 0)
-        if (t != term) {
-          term = t; col = byTerm.getOrElseUpdate(t, new TermPostingsBuilder)
+      foreachRowGroup(conf, dir, "term", "id", "dl", "tf") { rg =>
+        val terms = rg.strings("term"); val ids = rg.longs("id")
+        val dls = rg.longs("dl"); val tfs = rg.longs("tf")
+        var i = 0
+        while (i < rg.rows) {
+          val t = terms(i)
+          if (t != term) {
+            term = t; col = byTerm.getOrElseUpdate(t, new TermPostingsBuilder)
+          }
+          col.add(ids(i), dls(i), tfs(i))
+          i += 1
         }
-        col.add(g.getLong("id", 0), g.getLong("dl", 0), g.getLong("tf", 0))
       }
       byTerm.iterator.map { case (t, bld) => t -> bld.result() }.toMap
     }
@@ -822,10 +994,18 @@ object Serving {
                            cache: IndexCache): Seq[(Int, String, String)] =
     cache.getOrLoad(s"$base/manifest") {
       val b0 = mutable.ArrayBuffer.empty[(Int, String, String)]
-      foreachGroup(conf, s"$base/manifest") { g =>
-        if (g.getFieldRepetitionCount("min_key") > 0)
-          b0 += ((g.getInteger("range_id", 0), g.getString("min_key", 0),
-            g.getString("max_key", 0)))
+      foreachRowGroup(conf, s"$base/manifest", "range_id", "min_key", "max_key") { rg =>
+        val rids = rg.ints("range_id")
+        val lo = rg.strings("min_key", nullable = true)
+        val hi = rg.strings("max_key", nullable = true)
+        var i = 0
+        while (i < rg.rows) {
+          if (lo(i) != null) {
+            if (hi(i) == null) rg.nullIn("max_key")
+            b0 += ((rids(i), lo(i), hi(i)))
+          }
+          i += 1
+        }
       }
       b0.toSeq
     }
@@ -856,9 +1036,11 @@ object Serving {
       val dir = s"$base/postings/range_id=$rid"
       val rows = cache.getOrLoad(dir) {
         val b0 = mutable.ArrayBuffer.empty[(Long, String, Long)]
-        foreachGroup(conf, dir) { g =>
-          b0 += ((g.getLong("id", 0), g.getString("term", 0),
-            g.getLong("pos", 0)))
+        foreachRowGroup(conf, dir, "id", "term", "pos") { rg =>
+          val ids = rg.longs("id"); val terms = rg.strings("term")
+          val pos = rg.longs("pos")
+          var i = 0
+          while (i < rg.rows) { b0 += ((ids(i), terms(i), pos(i))); i += 1 }
         }
         b0.toSeq
       }
@@ -935,8 +1117,8 @@ object Serving {
     val base = modelDir.stripSuffix("/")
     val llr = cache.getOrLoad(freshKey(conf, s"$base/model")) {
       val m = mutable.HashMap.empty[String, Long]
-      foreachGroup(conf, s"$base/model") { g =>
-        m(g.getString("token", 0)) = g.getLong("llr_fp", 0)
+      foreachRowGroup(conf, s"$base/model", "token", "llr_fp") { rg =>
+        m ++= rg.strings("token").iterator.zip(rg.longs("llr_fp"))
       }
       // fail LOUD on a missing/empty model dir (mid-republish race, bad
       // path): a silent empty map would score bare priors forever —
@@ -946,8 +1128,8 @@ object Serving {
     }
     val priorFp = cache.getOrLoad(freshKey(conf, s"$base/prior")) {
       var p = 0L; var saw = false
-      foreachGroup(conf, s"$base/prior") { g =>
-        p = g.getLong("prior_fp", 0); saw = true
+      foreachRowGroup(conf, s"$base/prior", "prior_fp") { rg =>
+        if (rg.rows > 0) { p = rg.longs("prior_fp").last; saw = true }
       }
       require(saw, s"no prior row under $base/prior")
       java.lang.Long.valueOf(p)
@@ -981,8 +1163,8 @@ object Serving {
                            base: String): Map[String, Long] =
     cache.getOrLoad(freshKey(conf, s"$base/vocab")) {
       val m = mutable.HashMap.empty[String, Long]
-      foreachGroup(conf, s"$base/vocab") { g =>
-        m(g.getString("token", 0)) = g.getLong("logp_fp", 0)
+      foreachRowGroup(conf, s"$base/vocab", "token", "logp_fp") { rg =>
+        m ++= rg.strings("token").iterator.zip(rg.longs("logp_fp"))
       }
       require(m.nonEmpty, s"no vocab rows under $base/vocab")
       m.toMap
@@ -992,8 +1174,8 @@ object Serving {
                         base: String): Long =
     cache.getOrLoad(freshKey(conf, s"$base/stats")) {
       var p = 0L; var saw = false
-      foreachGroup(conf, s"$base/stats") { g =>
-        p = g.getLong("oov_logp_fp", 0); saw = true
+      foreachRowGroup(conf, s"$base/stats", "oov_logp_fp") { rg =>
+        if (rg.rows > 0) { p = rg.longs("oov_logp_fp").last; saw = true }
       }
       require(saw, s"no stats row under $base/stats")
       java.lang.Long.valueOf(p)
@@ -1003,8 +1185,8 @@ object Serving {
                             base: String): Map[(String, String), Long] =
     cache.getOrLoad(freshKey(conf, s"$base/bigrams")) {
       val m = mutable.HashMap.empty[(String, String), Long]
-      foreachGroup(conf, s"$base/bigrams") { g =>
-        m((g.getString("ctx", 0), g.getString("tok", 0))) = g.getLong("logp_fp", 0)
+      foreachRowGroup(conf, s"$base/bigrams", "ctx", "tok", "logp_fp") { rg =>
+        m ++= rg.strings("ctx").iterator.zip(rg.strings("tok")).zip(rg.longs("logp_fp"))
       }
       require(m.nonEmpty, s"no bigram rows under $base/bigrams")
       m.toMap
@@ -1014,8 +1196,8 @@ object Serving {
                              base: String): Map[String, Long] =
     cache.getOrLoad(freshKey(conf, s"$base/contexts")) {
       val m = mutable.HashMap.empty[String, Long]
-      foreachGroup(conf, s"$base/contexts") { g =>
-        m(g.getString("ctx", 0)) = g.getLong("oov_logp_fp", 0)
+      foreachRowGroup(conf, s"$base/contexts", "ctx", "oov_logp_fp") { rg =>
+        m ++= rg.strings("ctx").iterator.zip(rg.longs("oov_logp_fp"))
       }
       require(m.nonEmpty, s"no context rows under $base/contexts")
       m.toMap
@@ -1099,9 +1281,14 @@ object Serving {
     val base = modelDir.stripSuffix("/")
     val vocab = cache.getOrLoad(freshKey(conf, s"$base/vocab")) {
       val m = mutable.HashMap.empty[String, mutable.HashMap[String, Long]]
-      foreachGroup(conf, s"$base/vocab") { g =>
-        m.getOrElseUpdate(g.getString("token", 0), mutable.HashMap.empty)
-          .update(g.getString("grp", 0), g.getLong("logp_fp", 0))
+      foreachRowGroup(conf, s"$base/vocab", "token", "grp", "logp_fp") { rg =>
+        val tokens = rg.strings("token"); val grps = rg.strings("grp")
+        val lps = rg.longs("logp_fp")
+        var i = 0
+        while (i < rg.rows) {
+          m.getOrElseUpdate(tokens(i), mutable.HashMap.empty).update(grps(i), lps(i))
+          i += 1
+        }
       }
       require(m.nonEmpty, s"no vocab rows under $base/vocab")
       m.map { case (t, by) => t -> by.toMap }.toMap
@@ -1109,12 +1296,12 @@ object Serving {
     val classes = cache.getOrLoad(freshKey(conf, s"$base/stats") + "|" +
         freshKey(conf, s"$base/priors")) {
       val oov = mutable.HashMap.empty[String, Long]
-      foreachGroup(conf, s"$base/stats") { g =>
-        oov(g.getString("grp", 0)) = g.getLong("oov_logp_fp", 0)
+      foreachRowGroup(conf, s"$base/stats", "grp", "oov_logp_fp") { rg =>
+        oov ++= rg.strings("grp").iterator.zip(rg.longs("oov_logp_fp"))
       }
       val pri = mutable.HashMap.empty[String, Long]
-      foreachGroup(conf, s"$base/priors") { g =>
-        pri(g.getString("grp", 0)) = g.getLong("prior_fp", 0)
+      foreachRowGroup(conf, s"$base/priors", "grp", "prior_fp") { rg =>
+        pri ++= rg.strings("grp").iterator.zip(rg.longs("prior_fp"))
       }
       require(oov.nonEmpty, s"no stats rows under $base/stats")
       require(pri.nonEmpty, s"no prior rows under $base/priors")
@@ -1152,9 +1339,9 @@ object Serving {
     val base = modelDir.stripSuffix("/")
     val ranks = cache.getOrLoad(freshKey(conf, s"$base/merges")) {
       val rows = mutable.ArrayBuffer.empty[(Int, String, String)]
-      foreachGroup(conf, s"$base/merges") { g =>
-        rows += ((g.getInteger("rank", 0),
-          g.getString("left", 0), g.getString("right", 0)))
+      foreachRowGroup(conf, s"$base/merges", "rank", "left", "right") { rg =>
+        rows ++= rg.ints("rank").iterator.zip(rg.strings("left")).zip(rg.strings("right"))
+          .map { case ((r, l), rt) => (r, l, rt) }
       }
       require(rows.nonEmpty, s"no merge rows under $base/merges")
       rows.sortBy(_._1).map { case (r, l, rt) => (l, rt) -> r }.toMap
@@ -1179,8 +1366,8 @@ object Serving {
     val base = modelDir.stripSuffix("/")
     val pieces = cache.getOrLoad(freshKey(conf, s"$base/unigram_vocab")) {
       val rows = mutable.ArrayBuffer.empty[(String, Long)]
-      foreachGroup(conf, s"$base/unigram_vocab") { g =>
-        rows += ((g.getString("piece", 0), g.getLong("logp_fp", 0)))
+      foreachRowGroup(conf, s"$base/unigram_vocab", "piece", "logp_fp") { rg =>
+        rows ++= rg.strings("piece").iterator.zip(rg.longs("logp_fp"))
       }
       require(rows.nonEmpty, s"no vocab rows under $base/unigram_vocab")
       rows.toMap
@@ -1207,8 +1394,8 @@ object Serving {
     val base = modelDir.stripSuffix("/")
     val (vset, maxLen) = cache.getOrLoad(freshKey(conf, s"$base/wordpiece_vocab")) {
       val rows = mutable.ArrayBuffer.empty[String]
-      foreachGroup(conf, s"$base/wordpiece_vocab") { g =>
-        rows += g.getString("piece", 0)
+      foreachRowGroup(conf, s"$base/wordpiece_vocab", "piece") { rg =>
+        rows ++= rg.strings("piece")
       }
       require(rows.nonEmpty, s"no vocab rows under $base/wordpiece_vocab")
       (rows.toSet, graft.operators.WordPiece.maxMatchLen(rows.toSeq))
@@ -1220,27 +1407,16 @@ object Serving {
 
   // ------------------------------------------------------------ HNSW probe
 
-  /** Read a Spark-written `array<bigint>` column (3-level LIST group)
-    * by field index — the int64 twin of [[floatArray]]. */
-  private def longArray(g: Group, field: String): Array[Long] = {
-    val list = g.getGroup(field, 0)
-    val n = list.getFieldRepetitionCount(0)
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) { out(i) = list.getGroup(0, i).getLong(0, 0); i += 1 }
-    out
-  }
-
   /** Hyper-parameters of a [[graft.operators.Hnsw.saveHnsw]] layout —
     * the one-row `params` file, cache-keyed by dir. */
   private def loadHnswParams(conf: Configuration, cache: IndexCache,
                              base: String): graft.operators.Hnsw.HnswParams =
     cache.getOrLoad(s"$base/params") {
       var p: graft.operators.Hnsw.HnswParams = null
-      foreachGroup(conf, s"$base/params") { g =>
-        p = graft.operators.Hnsw.HnswParams(
-          g.getInteger("m", 0), g.getInteger("ef_construction", 0),
-          g.getLong("seed", 0))
+      foreachRowGroup(conf, s"$base/params", "m", "ef_construction", "seed") { rg =>
+        if (rg.rows > 0)
+          p = graft.operators.Hnsw.HnswParams(rg.ints("m").last,
+            rg.ints("ef_construction").last, rg.longs("seed").last)
       }
       require(p != null, s"no params row under $base/params")
       p
@@ -1259,18 +1435,22 @@ object Serving {
     val dir = s"$base/graph/shard=$shard"
     cache.getOrLoad(dir) {
       val rows = mutable.ArrayBuffer.empty[graft.operators.Hnsw.GraphRow]
-      foreachGroup(conf, dir) { g =>
-        val emb =
-          if (g.getFieldRepetitionCount("embedding") == 0) null
-          else floatArray(g, "embedding").toSeq
+      foreachRowGroup(conf, dir, "vec_id", "level", "layer", "neighbors",
+          "embedding", "deleted") { rg =>
+        val ids = rg.longs("vec_id"); val levels = rg.ints("level")
+        val layers = rg.ints("layer"); val nbrs = rg.longLists("neighbors")
+        val embs = rg.floatLists("embedding", nullable = true)
         // pre-tombstone layouts lack the column — default all-live,
         // the same compat rule as Hnsw.loadHnsw
-        val del = g.getType.containsField("deleted") &&
-          g.getBoolean("deleted", 0)
-        rows += graft.operators.Hnsw.GraphRow(
-          g.getLong("vec_id", 0), g.getInteger("level", 0),
-          g.getInteger("layer", 0), longArray(g, "neighbors").toSeq, emb,
-          del)
+        val del = if (rg.has("deleted")) rg.bools("deleted") else new Array[Boolean](rg.rows)
+        var i = 0
+        while (i < rg.rows) {
+          // a null embedding stays null (not an empty list)
+          rows += graft.operators.Hnsw.GraphRow(ids(i), levels(i), layers(i),
+            ArraySeq.unsafeWrapArray(nbrs(i)),
+            if (embs(i) == null) null else ArraySeq.unsafeWrapArray(embs(i)), del(i))
+          i += 1
+        }
       }
       graft.operators.Hnsw.HnswGraph.fromRows(rows.toSeq, params)
     }
