@@ -1,65 +1,85 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE_CODEC=zstd halves shuffle/spill file size vs
-    // the lz4 default (the ScaleProbe knob): at derived-100× the
-    // output-quadratic pair queries are DISK-bound on a single box —
-    // the global presentation sort of a 7.6B-row result retains its
-    // whole compressed run on local scratch
-    val codec = sys.env.get("SPARK_GRAFT_SHUFFLE_CODEC")
-    // r17-opt (guide §2.2 "fewer, larger reduce partitions"): with
-    // parallelismFirst=true (the Spark default) AQE refuses to
-    // coalesce below the core count, so at the gate SF every exchange
-    // runs `cpus` reduce tasks over kilobytes — pure scheduling
-    // overhead (the r16 scaling block: median 8c/32c ratio 0.875, the
-    // suite ran FASTER on fewer cores). parallelismFirst=false lets
-    // AQE size reduce partitions by bytes (advisory 256m, guide §9),
-    // which is scale-ADAPTIVE, not local tuning: tiny shuffles
-    // coalesce to one task, 100 TB shuffles get bytes/256m tasks.
-    // spark.sql.shuffle.partitions stays cpus-derived as the pre-AQE
-    // upper bound so the cpus env contract still governs fan-out.
-    // Both knobs env-overridable for A/B (plans/r17).
-    val parFirst = sys.env.getOrElse("SPARK_GRAFT_AQE_PAR_FIRST", "false")
-    val advisory = sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "256m")
-    // coalesce FLOOR (spark.sql.adaptive.coalescePartitions.
-    // minPartitionNum overrides the parallelismFirst fallback when set
-    // explicitly — verified against the 4.1.2 bytecode): a small floor
-    // (cores/4) bounds the damage on CPU-dense-but-byte-light stages —
-    // the engine's array-heavy dedup cores lose partial aggregation if
-    // they declared width via repartition, so the floor is the only
-    // seam that keeps them parallel — without giving back the
-    // tiny-shuffle win (measured: dedup_jaccard 4.9 → 2.6 s at floor 8
-    // with the 200-query window unchanged). Scale-honest: derived from
-    // the cpus contract, and at real volumes bytes/advisory ≫ floor.
-    val minParts = sys.env.get("SPARK_GRAFT_AQE_MIN_PARTITIONS")
-      .orElse(Some((cpus.toInt / 4).max(1).toString))
-    val b00 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", parFirst)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
-      .config("spark.ui.enabled", "false")
-    val b0 = minParts.fold(b00)(m =>
-      b00.config("spark.sql.adaptive.coalescePartitions.minPartitionNum", m))
-    val spark = codec.fold(b0)(c => b0.config("spark.io.compression.codec", c))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // bench mode: gate queries skip their oracle-handoff parquet
-    // writes (graft.queries.Handoff) — correctness-gate plumbing must
-    // not sit inside the measured window
-    sys.props("graft.bench.mode") = "true"
-    // warmup: touch the parquet footers and spin up codegen/shuffle
-    // machinery once so the first measured query doesn't pay session
-    // startup (it is measured work in every real deployment, but it is
-    // not a property of any single operator)
+  import graft.queries._
+
+  /** Shared builds the timed queries read, in build order: (the queries
+    * that read it, its label, what a timed window pays if it fails,
+    * the builder). Persisted indexes (IVF, HNSW, BM25, positional) are
+    * an offline step in any real deployment, like the reference
+    * building its HNSW at ingest; the shared frames (span flags,
+    * overlap report, refined graph, DSIR model) are each read by two or
+    * three gates, so neither timed window pays the build (and the
+    * second never pays it twice). */
+  private val sharedBuilds
+      : Seq[(Set[String], String, String, (SparkSession, String) => Any)] = Seq(
+    (Set("ann_ivf", "ann_ivfpq", "ann_ivf_append", "cluster_domains",
+      "ann_recall_report", "mine_hard_negatives", "ann_ivf_filtered",
+      "ann_ivf_sq8", "ann_ivf_bq", "ann_ndcg_report", "ann_mrr_report",
+      "ann_ivf_delete"), "IVF", "ann_ivf timing will include index construction",
+      AnnQueries.persistedIvf(_, _)),
+    // HNSW gates search/append against the PERSISTED graph (built over
+    // the same IVF)
+    (Set("ann_hnsw", "ann_hnsw_recall", "ann_hnsw_append", "ann_hnsw_filtered"),
+      "HNSW", "ann_hnsw timing will include graph construction",
+      AnnQueries.persistedHnsw(_, _)),
+    // semdedup's cluster count scales with the corpus (may differ from
+    // the ANN k=16 at derived SFs)
+    (Set("semdedup_keep", "knn_graph", "knn_graph_recall", "outlier_knn",
+      "outlier_knn_refined"), "corpus-proportional IVF",
+      "semdedup_keep/knn_graph timing will include the fit",
+      ModelQueries.semdedupIndex(_, _)),
+    (Set("dedup_spans_profile", "dedup_spans_trim"), "span-flags",
+      "dedup_spans_* timing will include the shared fingerprint build",
+      DedupQueries.spanFlagsPath(_, _)),
+    (Set("decontam_overlap", "curation_pipeline"), "overlap-report",
+      "decontam_overlap/curation_pipeline timing will include the shared n-gram pass",
+      CurationQueries.overlapReportPath(_, _)),
+    (Set("knn_graph_recall", "outlier_knn_refined"), "refined-graph",
+      "knn_graph_recall/outlier_knn_refined timing will include the shared graph build",
+      AnnQueries.refinedGraphPath(_, _)),
+    // DSIR: the trio scores against ONE trained artifact
+    // (nightly-retrain semantics, like the persisted indexes)
+    (Set("dsir_weights", "dsir_select", "dsir_resample"), "DSIR",
+      "dsir_* timing will include model training", ModelQueries.dsirShared(_, _)),
+    (Set("phrase_search_indexed"), "positional-index",
+      "phrase_search_indexed timing will include index construction",
+      HybridQueries.persistedPositional(_, _)),
+    (Set("bm25_indexed"), "BM25 index",
+      "bm25_indexed timing will include index construction",
+      HybridQueries.persistedBm25(_, _)),
+    (Set("bm25_append"), "BM25 baseline",
+      "bm25_append timing will include the baseline build",
+      HybridQueries.baselineBm25(_, _)))
+
+  /** Everything a timed window must not pay, run before the first one:
+    * the session warm-up, then each shared build a `selected` query
+    * reads. A failed build is LOUD, because the timed query would
+    * silently build it inside its measured window. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String, selected: Set[String]): Unit = {
+    // touch the parquet footers and spin up codegen/shuffle machinery
+    // once so the first measured query doesn't pay session startup (it
+    // is measured work in every real deployment, but it is not a
+    // property of any single operator)
     try {
       Tables.documents(spark, sfDir).limit(1).count()
       Tables.embeddings(spark, sfDir).limit(1).count()
       spark.range(1000000).selectExpr("sum(id)").count()
     } catch { case _: Throwable => () }
+    for ((readers, label, cost, build) <- sharedBuilds if readers.exists(selected))
+      try build(spark, sfDir)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] WARNING: $label warmup failed (${e.getMessage}); $cost") }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.builder(GraftSession.envCpus(4)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // bench mode: gate queries skip their oracle-handoff parquet
+    // writes (graft.queries.Handoff) — correctness-gate plumbing must
+    // not sit inside the measured window
+    sys.props("graft.bench.mode") = "true"
     // SPARK_GRAFT_BENCH_QUERIES=a,b,c restricts the run to a subset —
     // the spot-bench knob for scale runs (e.g. the 10 heaviest at a
     // 100x-derived SF) without paying the full suite
@@ -71,95 +91,7 @@ object Bench {
       if (unknown.nonEmpty)
         System.err.println(s"[bench] WARNING: unknown queries ignored: $unknown")
     }
-    // ensure the persisted indexes exist before timing: ann_ivf /
-    // bm25_indexed bench the pruned probe-scan of a PERSISTED index
-    // (index construction is an offline/amortized step in any real
-    // deployment, like the reference building its HNSW at ingest). A
-    // failure here must be LOUD: the timed query would silently fall
-    // back to building the index inside its measured window. Skipped
-    // when the subset doesn't touch them.
-    if (Seq("ann_ivf", "ann_ivfpq", "ann_ivf_append", "cluster_domains",
-        "ann_recall_report", "mine_hard_negatives", "ann_ivf_filtered",
-        "ann_ivf_sq8", "ann_ivf_bq", "ann_ndcg_report",
-        "ann_mrr_report", "ann_ivf_delete").exists(selected.contains))
-      try graft.queries.AnnQueries.persistedIvf(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: IVF warmup failed (${e.getMessage}); " +
-          "ann_ivf timing will include index construction") }
-    // HNSW gates search/append against the PERSISTED graph (built
-    // over the same IVF) — warm it so graph construction never sits
-    // in a timed window
-    if (Seq("ann_hnsw", "ann_hnsw_recall", "ann_hnsw_append",
-        "ann_hnsw_filtered").exists(selected.contains))
-      try graft.queries.AnnQueries.persistedHnsw(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: HNSW warmup failed (${e.getMessage}); " +
-          "ann_hnsw timing will include graph construction") }
-    // semdedup's cluster count scales with the corpus (may differ from
-    // the ANN k=16 at derived SFs) — warm ITS index so the fit never
-    // sits in the timed window
-    if (Seq("semdedup_keep", "knn_graph", "knn_graph_recall",
-        "outlier_knn", "outlier_knn_refined").exists(selected.contains))
-      try graft.queries.ModelQueries.semdedupIndex(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: corpus-proportional IVF warmup " +
-          s"failed (${e.getMessage}); semdedup_keep/knn_graph timing will " +
-          "include the fit") }
-    // the two span gates consume ONE persisted dup-flags frame — same
-    // shared-build warmup contract as the refined graph below
-    if (Seq("dedup_spans_profile", "dedup_spans_trim")
-        .exists(selected.contains))
-      try graft.queries.DedupQueries.spanFlagsPath(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: span-flags warmup failed " +
-          s"(${e.getMessage}); dedup_spans_* timing will include the " +
-          "shared fingerprint build") }
-    // the two decontamination gates consume ONE persisted overlap
-    // report — same shared-build warmup contract
-    if (Seq("decontam_overlap", "curation_pipeline")
-        .exists(selected.contains))
-      try graft.queries.CurationQueries.overlapReportPath(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: overlap-report warmup failed " +
-          s"(${e.getMessage}); decontam_overlap/curation_pipeline timing " +
-          "will include the shared n-gram pass") }
-    // the two refined-graph gates consume ONE persisted wide graph —
-    // warm the shared build so neither timed window pays it (and the
-    // second never pays it twice)
-    if (Seq("knn_graph_recall", "outlier_knn_refined")
-        .exists(selected.contains))
-      try graft.queries.AnnQueries.refinedGraphPath(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: refined-graph warmup failed " +
-          s"(${e.getMessage}); knn_graph_recall/outlier_knn_refined timing " +
-          "will include the shared graph build") }
-    // DSIR: the trio (weights/select/resample) scores against ONE
-    // trained artifact (nightly-retrain semantics, like the persisted
-    // IVF/BM25 indexes) — warm the build-once cache so training never
-    // sits in a timed window
-    if (Seq("dsir_weights", "dsir_select", "dsir_resample").exists(selected.contains))
-      try graft.queries.ModelQueries.dsirShared(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: DSIR warmup failed (${e.getMessage}); " +
-          "dsir_* timing will include model training") }
-    // the positional index gate times the pruned range reads +
-    // positional joins, not the index write — same warmup contract
-    if (selected.contains("phrase_search_indexed"))
-      try graft.queries.HybridQueries.persistedPositional(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: positional-index warmup failed " +
-          s"(${e.getMessage}); phrase_search_indexed timing will include " +
-          "index construction") }
-    if (selected.contains("bm25_indexed"))
-      try graft.queries.HybridQueries.persistedBm25(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: BM25 index warmup failed (${e.getMessage}); " +
-          "bm25_indexed timing will include index construction") }
-    if (selected.contains("bm25_append"))
-      try graft.queries.HybridQueries.baselineBm25(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] WARNING: BM25 baseline warmup failed (${e.getMessage}); " +
-          "bm25_append timing will include the baseline build") }
+    warmUp(spark, sfDir, selected.keySet)
     // materialize via the noop sink: count() would let Catalyst prune
     // computed columns and eliminate final sorts, timing a bare scan
     // instead of the operator's actual work.
@@ -171,25 +103,22 @@ object Bench {
     // one loaded window without hiding a real regression. Scale runs
     // that can't afford 3 passes set the env to 1 explicitly.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
-    // between-run cache hygiene (default ON; SPARK_GRAFT_BENCH_RELEASE=0
-    // disables for A/B), OUTSIDE the timed window. Measured rationale
-    // (SCALEBENCH r15): watermark-retained frames are tiny at sf0.1
-    // (peak 6 RDDs / 5 MB — NOT a memory effect), but CacheManager
-    // plan-matching let repeat k+1 reuse repeat k's still-cached
-    // frames, so cache-heavy medians measured a WARM rerun
+    val verbose = sys.env.getOrElse("SPARK_GRAFT_BENCH_VERBOSE", "0") == "1"
+    // between-run cache hygiene, OUTSIDE the timed window. Measured
+    // rationale (SCALEBENCH r15): watermark-retained frames are tiny at
+    // sf0.1 (peak 6 RDDs / 5 MB — NOT a memory effect), but
+    // CacheManager plan-matching let repeat k+1 reuse repeat k's
+    // still-cached frames, so cache-heavy medians measured a WARM rerun
     // (dedup_editdist 2-3 s warm vs ~6 s cold). Releasing between runs
     // makes every repeat measure the operator cold; at larger SFs it
     // also bounds retention.
-    val releaseBetween =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RELEASE", "1") != "0"
-    val verbose = sys.env.getOrElse("SPARK_GRAFT_BENCH_VERBOSE", "0") == "1"
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); -1.0 }
-      finally if (releaseBetween) graft.operators.Dedup.releasePending()
+      finally graft.operators.Dedup.releasePending()
     }
     val results = selected.map { case (name, fn) =>
       val runs = (1 to repeats).map(_ => timeOnce(name, fn))

@@ -9,44 +9,44 @@ import graft.functions._
 
 /** SparkSessionExtensions entry point — registers the engine's custom
   * Catalyst expressions as SQL functions, so
-  * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `Graft.init(spark)` programmatically) makes them available to pure
-  * SQL users: `SELECT cos_sim_f32(embedding, q) ...`.
+  * `--conf spark.sql.extensions=graft.GraftExtensions` (set by
+  * [[GraftSession]], or `Graft.init(spark)` programmatically) makes them
+  * available to pure SQL users: `SELECT cos_sim_f32(embedding, q) ...`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Graft.functions.foreach { case (name, build) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo("graft", name), build))
+    }
+}
 
-  private def fn(name: String, arity: Int, build: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo("graft", name),
-      (es: Seq[Expression]) => {
+object Graft {
+
+  /** The engine's SQL functions, name → arity-checked builder: the one
+    * list both registration paths read. */
+  private[graft] val functions: Seq[(String, Seq[Expression] => Expression)] = {
+    def fn(name: String, arity: Int)(build: Seq[Expression] => Expression) =
+      name -> { (es: Seq[Expression]) =>
         require(es.length == arity,
           s"$name expects exactly $arity argument(s), got ${es.length}")
         build(es)
-      })
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(fn("dot_f32", 2, es => DotProductF32(es(0), es(1))))
-    ext.injectFunction(fn("l2_dist_f32", 2, es => EuclideanDistF32(es(0), es(1))))
-    ext.injectFunction(fn("l2sq_f32", 2, es => L2SqF32(es(0), es(1))))
-    ext.injectFunction(fn("cos_sim_f32", 2, es => CosineSimF32(es(0), es(1))))
-    ext.injectFunction(fn("sorted_intersect_size", 2, es => SortedIntersectSize(es(0), es(1))))
-    ext.injectFunction(fn("explode_zip", 1, es => ExplodeZip(es(0))))
+      }
+    Seq(
+      fn("dot_f32", 2)(es => DotProductF32(es(0), es(1))),
+      fn("l2_dist_f32", 2)(es => EuclideanDistF32(es(0), es(1))),
+      fn("l2sq_f32", 2)(es => L2SqF32(es(0), es(1))),
+      fn("cos_sim_f32", 2)(es => CosineSimF32(es(0), es(1))),
+      fn("sorted_intersect_size", 2)(es => SortedIntersectSize(es(0), es(1))),
+      fn("explode_zip", 1)(es => ExplodeZip(es(0))))
   }
-}
 
-/** Programmatic init for sessions created without the extensions conf. */
-object Graft {
-  def init(spark: SparkSession): Unit = {
-    VectorFunctions.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size", es => {
-        require(es.length == 2, s"sorted_intersect_size expects 2 arguments, got ${es.length}")
-        SortedIntersectSize(es(0), es(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "explode_zip", es => {
-        require(es.length == 1, s"explode_zip expects 1 argument, got ${es.length}")
-        ExplodeZip(es(0))
-      }, "built-in")
-  }
+  /** Programmatic init for sessions built without the extensions conf.
+    * Idempotent: `createOrReplaceTempFunction` makes a second call
+    * harmless. */
+  def init(spark: SparkSession): Unit =
+    functions.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "built-in")
+    }
 }

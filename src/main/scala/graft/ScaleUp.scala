@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derives a larger scale factor from the driver-generated fixtures by
@@ -53,14 +53,9 @@ object ScaleUp {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factor  = if (args.length > 1) args(1).toInt else 10
     val outDir  = if (args.length > 2) args(2) else "target/sf1-derived"
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scaleup")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(32))
+      .appName("graft-scaleup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def write(df: DataFrame, name: String, files: Int): Unit =
@@ -166,15 +161,10 @@ object VocabScaleUp {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val buckets = if (args.length > 1) args(1).toInt else 200
     val outDir  = if (args.length > 2) args(2) else "target/sfvocab-derived"
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-vocab-scaleup")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(32))
+      .appName("graft-vocab-scaleup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, baseDir)
@@ -225,15 +215,10 @@ object EmbScaleUp {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factor  = if (args.length > 1) args(1).toInt else 100
     val outDir  = if (args.length > 2) args(2) else "target/sfembdistinct-derived"
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     require(factor >= 1, s"factor must be >= 1, got $factor")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-emb-scaleup")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(32))
+      .appName("graft-emb-scaleup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val embs = Tables.embeddings(spark, baseDir)
@@ -269,468 +254,6 @@ object EmbScaleUp {
         countDistinct(col("vec_id"))).head()
     println(s"[emb-scaleup] factor=$factor rows=${stats.getLong(0)} " +
       s"distinct_embeddings=${stats.getLong(1)} distinct_ids=${stats.getLong(2)}")
-    spark.stop()
-  }
-}
-
-/** Regime probe for [[graft.operators.Dedup.cosineDedupAuto]] over a
-  * distinct-heavy [[EmbScaleUp]] fixture: reports the distinct-class
-  * count, the route the router chooses, end-to-end wall time, and the
-  * kept-row count — the measured evidence that a crawl-shaped corpus
-  * (c ≈ n, here ~200k classes at factor 100) gets the survivable
-  * sign-LSH plan without the caller reading SCALEBENCH, and that the
-  * apply still collapses every jitter group to one canonical row.
-  *
-  * Usage: runMain graft.CosineRouterProbe [embDir] [threshold]
-  */
-object CosineRouterProbe {
-
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "target/sfembdistinct-derived"
-    val threshold = if (args.length > 1) args(1).toDouble else 0.99
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-router-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val rows = emb.count()
-    val classes = emb.select(countDistinct(col("embedding"))).head.getLong(0)
-    val route = graft.operators.Dedup.chooseCosineRoute(classes)
-    val t0 = System.nanoTime()
-    val kept = graft.operators.Dedup
-      .cosineDedupAuto(emb, "vec_id", "embedding", threshold).count()
-    println(f"[router-probe] dir=$dir rows=$rows classes=$classes " +
-      f"route=$route threshold=$threshold kept=$kept " +
-      f"wall=${(System.nanoTime() - t0) / 1e9}%.1f s")
-    spark.stop()
-  }
-}
-
-/** Crossover measurement for the two fuzzy expansion plans over a
-  * [[VocabScaleUp]] fixture: times `Fuzzy.termSearch` with
-  * `qgramIndex` off (full-vocab levenshtein scan) and on (positional
-  * q-gram survival index) at a given query-term count, median of 3.
-  * The scan's cost is |vocab|·|queryTerms| levenshteins; the index
-  * amortizes ONE gram-posting build across all terms — so the
-  * crossover needs BOTH a large vocabulary and a multi-term batch (a
-  * spell-corrected query log), which is exactly the workload shape the
-  * index exists for. Results go to SCALEBENCH.md.
-  *
-  * Usage: runMain graft.FuzzyScaleProbe <docsDir> <nTerms>
-  */
-object FuzzyScaleProbe {
-
-  // length >= 4 so every term takes the indexed route at q=2/maxDist=1
-  // (the survival cutoff q·(τ+1) = 4; shorter terms fall back to the
-  // scan in BOTH plans and would dilute the comparison)
-  private val BaseWords = Seq("vector", "table", "spark", "stream",
-    "window", "column", "customer", "filter", "merge", "order", "query",
-    "batch", "value", "small", "scan", "sort", "group", "hash", "join",
-    "line", "part")
-
-  /** Deterministic single-substitution typo of a base word. */
-  private def typo(w: String, i: Int): String = {
-    val p = math.abs(w.hashCode + i * 31) % w.length
-    val c = ('a' + math.abs(w.hashCode * 7 + i) % 26).toChar
-    w.updated(p, c)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val nTerms = if (args.length > 1) args(1).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-fuzzy-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val qts = (0 until nTerms)
-      .map(i => typo(BaseWords(i % BaseWords.length), i))
-      .distinct.filter(_.matches("[a-z0-9]+"))
-    docs.count() // warm the file cache so neither plan pays first-read
-    for (indexed <- Seq(false, true)) {
-      val times = (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        graft.operators.Fuzzy.termSearch(docs, "doc_id", "text", qts,
-          k = 15, qgramIndex = indexed).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[fuzzy-probe] dir=$dir nTerms=${qts.length} " +
-        f"indexed=$indexed median=${times(1)}%.2f s " +
-        f"(min=${times.head}%.2f max=${times.last}%.2f)")
-    }
-    spark.stop()
-  }
-}
-
-/** WARC front-door scale probe — the measured number behind the
-  * `warc_ingest` gate's fixed-size fixture (constant at every SF by
-  * design, so silent on scale). Four stages over a derived-100×
-  * documents dir (500k docs at sf10-derived):
-  *
-  *  1. EXPORT — [[graft.sources.WarcIngest.writeWet]] over every
-  *     document into `nSegments` per-record-gzip `.warc.gz` segments
-  *     (the Common Crawl WET layout; parallelism unit = the segment).
-  *  2. READ — [[graft.sources.WarcIngest.ingestWarcs]] over the
-  *     exported directory via `binaryFile`: full de-gzip + record
-  *     grammar + envelope dispatch, counted, records/s reported.
-  *  3. QUARANTINE — one segment copied and truncated mid-member into a
-  *     sibling dir; re-ingest must parse the clean prefix, quarantine
-  *     the ragged tail, and never throw (reported as records recovered
-  *     from the truncated shard vs intact).
-  *  4. KERNEL — the wrap + [[graft.sources.HtmlText.mainText]]
-  *     extraction over documents × `kernelFactor` in-plan replicas
-  *     (no I/O): boilerplate-strip throughput in docs/s at multi-
-  *     million-document scale.
-  *
-  * Usage: runMain graft.WarcScaleProbe [docsDir] [nSegments] [kernelFactor]
-  */
-object WarcScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "target/sf10-derived"
-    val nSegments = if (args.length > 1) args(1).toInt else 32
-    val kernelFactor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-warc-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{HtmlText, WarcIngest}
-
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val nDocs = docs.count() // also warms the file cache
-
-    // 1. EXPORT
-    val outDir = s"${sys.props("java.io.tmpdir")}/graft-warc-probe-out"
-    val t1 = System.nanoTime()
-    WarcIngest.writeWet(
-      docs.select(concat(lit("https://ex.org/d/"), col("doc_id")).as("uri"),
-        col("text")).repartition(nSegments),
-      "uri", "text", outDir)
-    val wExport = (System.nanoTime() - t1) / 1e9
-    println(f"[warc-probe] export docs=$nDocs segments=$nSegments " +
-      f"wall=$wExport%.1f s rate=${nDocs / wExport}%.0f rec/s")
-
-    // 2. READ
-    val t2 = System.nanoTime()
-    val readBack = WarcIngest.ingestWarcs(
-      spark.read.format("binaryFile").load(outDir))
-    val counts = readBack.agg(count(lit(1)),
-      sum(when(col("ok"), 1L).otherwise(0L))).head()
-    val wRead = (System.nanoTime() - t2) / 1e9
-    println(f"[warc-probe] read records=${counts.getLong(0)} " +
-      f"ok=${counts.getLong(1)} wall=$wRead%.1f s " +
-      f"rate=${counts.getLong(0) / wRead}%.0f rec/s " +
-      f"(${counts.getLong(0) / wRead / nSegments}%.0f rec/s/task)")
-    require(counts.getLong(0) == nDocs && counts.getLong(1) == nDocs,
-      s"round trip lost records: ${counts.getLong(0)} of $nDocs")
-
-    // 3. QUARANTINE on a truncated shard
-    val qDir = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft-warc-probe-trunc")
-    if (qDir.exists()) qDir.listFiles().foreach(_.delete()) else qDir.mkdirs()
-    val seg = new java.io.File(outDir).listFiles()
-      .filter(_.getName.endsWith(".warc.gz")).maxBy(_.length)
-    val bytes = java.nio.file.Files.readAllBytes(seg.toPath)
-    val intact = WarcIngest.ingestWarcs(
-      spark.read.format("binaryFile")
-        .load(seg.getAbsolutePath)).count()
-    java.nio.file.Files.write(
-      new java.io.File(qDir, seg.getName).toPath,
-      java.util.Arrays.copyOf(bytes, (bytes.length * 0.6).toInt))
-    val t3 = System.nanoTime()
-    val fromTrunc = WarcIngest.ingestWarcs(
-      spark.read.format("binaryFile").load(qDir.getAbsolutePath)).count()
-    println(f"[warc-probe] quarantine intactShard=$intact " +
-      f"truncShard(60%%)=$fromTrunc wall=${(System.nanoTime() - t3) / 1e9}%.1f s " +
-      "(clean prefix recovered, ragged tail dropped, no throw)")
-    require(fromTrunc > 0 && fromTrunc < intact,
-      s"quarantine shape wrong: $fromTrunc of $intact")
-
-    // 4. KERNEL at docs × kernelFactor
-    val wrapMain = udf((id: Long, t: String) =>
-      HtmlText.mainText(graft.queries.WebQueries.sampleHtml(id, t)))
-    val t4 = System.nanoTime()
-    val kOut = docs
-      .withColumn("__rep", explode(lit((0 until kernelFactor).toArray)))
-      .select(length(wrapMain(col("doc_id"), col("text"))).as("l"))
-      .agg(sum(col("l"))).head().getLong(0)
-    val wKernel = (System.nanoTime() - t4) / 1e9
-    val kDocs = nDocs * kernelFactor
-    println(f"[warc-probe] kernel docs=$kDocs chars=$kOut " +
-      f"wall=$wKernel%.1f s rate=${kDocs / wKernel}%.0f docs/s")
-    spark.stop()
-  }
-}
-
-/** Stage-timing probe for [[graft.operators.Ann.knnGraph]] at a
-  * derived SF (VERDICT r16: the 100× suite's top line three rounds
-  * running — find the wall, don't guess). Times, separately: the
-  * persisted-index load+materialize, the repartition/sort exchange
-  * alone, and the full graph build (cold, then warm repeat), plus a
-  * driver-side single-thread kernel floor over one average cell so
-  * the distributed overhead is attributable.
-  *
-  * Usage: runMain graft.KnnGraphProbe [sfDir] [k]
-  */
-object KnnGraphProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "target/sf10-derived"
-    val k = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-knngraph-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[knn-probe] $what wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-    val index = timed("index load (semdedup sizing)") {
-      graft.queries.ModelQueries.semdedupIndex(spark, dir)
-    }
-    val nVec = timed("assigned materialize (count)") { index.assigned.count() }
-    val nCells = index.centroids.length
-    println(s"[knn-probe] vectors=$nVec cells=$nCells avg=${nVec / nCells}/cell")
-    timed("exchange only (repartition+sort+count)") {
-      index.assigned
-        .where(col(index.idCol).isNotNull && col(index.embCol).isNotNull)
-        .repartition(col("ivf_cluster"))
-        .sortWithinPartitions(col("ivf_cluster"))
-        .count()
-    }
-    timed("knnGraph cold") {
-      graft.operators.Ann.knnGraph(index, k)
-        .write.format("noop").mode("overwrite").save()
-    }
-    timed("knnGraph warm repeat") {
-      graft.operators.Ann.knnGraph(index, k)
-        .write.format("noop").mode("overwrite").save()
-    }
-    spark.stop()
-  }
-}
-
-/** Kernel micro-probe for the fused head scan (VERDICT r16 #3): per
-  * page, time `headSignals` (one scanner walk) against the two-pass
-  * form (`metaRobots` + `canonicalUrl`) over the url_canonical_dedup
-  * fixture pages at a derived SF — same box, same session, so the
-  * delta is the kernel's, not the window's. Also asserts signal
-  * parity on every page (the WebIngestSpec contract, re-checked at
-  * scale).
-  *
-  * Usage: runMain graft.HeadScanProbe [sfDir] [repFactor]
-  */
-object HeadScanProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "target/sf10-derived"
-    val rep = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-headscan-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.HtmlText
-
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    // the web_pipeline page shape: wrap-template page with a canonical
-    // link; every doc contributes `rep` pages so the scan dominates
-    val render = udf((id: Long, t: String) =>
-      graft.queries.WebQueries.canonSampleHtml(id,
-        if (t == null) "" else t, s"/page/$id"))
-    val pages = docs
-      .withColumn("__r", explode(lit((0 until rep).toArray)))
-      .select(render(col("doc_id"), col("text")).as("html"))
-    val n = pages.count()
-
-    val fusedU = udf((h: String) => {
-      val (ni, c) = HtmlText.headSignals(h)
-      (ni, c.orNull)
-    })
-    val twoPassU = udf((h: String) =>
-      (HtmlText.metaRobots(h).contains("noindex"),
-        HtmlText.canonicalUrl(h).orNull))
-    def run(name: String, u: org.apache.spark.sql.expressions.UserDefinedFunction): Double = {
-      val t0 = System.nanoTime()
-      pages.select(u(col("html")).as("s"))
-        .select(sum(when(col("s._1"), 1L).otherwise(0L)),
-          count(col("s._2"))).head()
-      val w = (System.nanoTime() - t0) / 1e9
-      println(f"[headscan-probe] $name pages=$n wall=$w%.2f s " +
-        f"rate=${n / w}%.0f pages/s")
-      w
-    }
-    // interleave to cancel cache drift: two measurements each
-    val w2a = run("two-pass", twoPassU)
-    val w1a = run("fused   ", fusedU)
-    val w2b = run("two-pass", twoPassU)
-    val w1b = run("fused   ", fusedU)
-    println(f"[headscan-probe] fused/two-pass ratio = ${
-      (w1a + w1b) / (w2a + w2b)}%.2f")
-    spark.stop()
-  }
-}
-
-/** Link-layer scale probe (SCALEBENCH instrument, r16): measures the
-  * two halves of the link graph at web scale on this box.
-  *
-  * 1. `extractLinks` throughput — pages synthesized from `documents`
-  *    (`rep` pages per doc, 8 anchors each: relative/absolute/
-  *    protocol-relative/nofollow mix), reported as pages/s and
-  *    links/s. The extraction is the per-crawled-byte cost, so the
-  *    rate is the number that must survive a 1000-executor scale-out
-  *    (it parallelizes embarrassingly — no shuffle).
-  * 2. `pageRank` at graph scale — `hosts` nodes × `degree` out-edges
-  *    synthesized in-plan (hash-mixed dst plus a 1000-hub skew lane
-  *    absorbing 10% of edges, the web's hub shape), 1 and then
-  *    `iters` iterations so the per-iteration marginal cost is
-  *    visible. Top-rank sanity: the hub nodes must dominate.
-  *
-  * Usage: runMain graft.LinkScaleProbe [sfDir] [rep] [hosts] [degree] [iters]
-  */
-object LinkScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "target/sf10-derived"
-    val rep = if (args.length > 1) args(1).toInt else 2
-    val hosts = if (args.length > 2) args(2).toLong else 500000L
-    val degree = if (args.length > 3) args(3).toInt else 10
-    val iters = if (args.length > 4) args(4).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-link-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // ---- extractLinks throughput ----
-    val render = udf((id: Long) =>
-      s"""<html><body><p>text</p><a href="/a/$id">1</a><a href="b/$id">2</a>
-         |<a href="//h${id % 9973}.ex.org/c">3</a>
-         |<a href="https://h${(id * 7) % 9973}.ex.org/d?q=$id#f">4</a>
-         |<a href="../e/$id">5</a><a rel="nofollow" href="/spam">6</a>
-         |<a href="#top">7</a><a href="/a/$id#dup">8</a></body></html>"""
-        .stripMargin)
-    val pages = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"))
-      .withColumn("__r", explode(lit((0 until rep).toArray)))
-      .select(concat(lit("https://h"),
-        (col("doc_id") % 9973).cast("string"),
-        lit(".ex.org/p/"), col("doc_id").cast("string")).as("url"),
-        render(col("doc_id")).as("html"))
-    val nPages = pages.count()
-    val t0 = System.nanoTime()
-    val nLinks = operators.LinkGraph.extractLinks(pages).count()
-    val wx = (System.nanoTime() - t0) / 1e9
-    println(f"[link-probe] extractLinks pages=$nPages links=$nLinks " +
-      f"wall=$wx%.2f s rate=${nPages / wx}%.0f pages/s ${nLinks / wx}%.0f links/s")
-
-    // ---- pageRank at graph scale ----
-    val e = spark.range(hosts * degree).select(
-      concat(lit("h"), (col("id") % hosts).cast("string")).as("src"),
-      concat(lit("h"),
-        when(col("id") % 10 === 0, (col("id") % hosts) % 1000)
-          .otherwise(pmod(col("id") * 2654435761L + 7, lit(hosts)))
-          .cast("string")).as("dst"))
-    def runPr(k: Int): Double = {
-      // cold protocol (the Bench between-repeat rule): drop any cache
-      // a previous run retained so run N never measures run N-1's warm
-      // frames, and JIT-warm the first window out of the comparison
-      operators.Dedup.releasePending()
-      spark.sharedState.cacheManager.clearCache()
-      val t = System.nanoTime()
-      val n = operators.LinkGraph.pageRank(e, iterations = k).count()
-      val w = (System.nanoTime() - t) / 1e9
-      println(f"[link-probe] pageRank hosts=$hosts edges=${hosts * degree} " +
-        f"iters=$k nodes=$n wall=$w%.1f s")
-      w
-    }
-    runPr(1); runPr(iters) // warm-up pair (JIT + shuffle service)
-    val w1 = runPr(1)
-    val wk = runPr(iters)
-    println(f"[link-probe] marginal per-iteration ≈ ${
-      (wk - w1) / math.max(1, iters - 1)}%.2f s")
-    val top = operators.LinkGraph.pageRank(e, iterations = iters)
-      .orderBy(col("rank").desc).limit(5)
-      .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(" ")
-    println(s"[link-probe] top ranks (hubs must dominate): $top")
-    spark.stop()
-  }
-}
-
-/** Term-scan scale probe (SCALEBENCH instrument, r16): one
-  * Aho–Corasick pass vs |dict| naive contains passes per document,
-  * interleaved A/B in one session. The dictionary derives from the
-  * corpus's own top words suffixed into `factor` variants so its size
-  * is a CLI knob while every term still hits real text.
-  *
-  * Usage: runMain graft.TermScanProbe [sfDir] [dictSize]
-  */
-object TermScanProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "target/sf10-derived"
-    val dictSize = if (args.length > 1) args(1).toInt else 2000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-termscan-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val top = docs.select(explode(split(col("text"), " ")).as("w"))
-      .where(length(col("w")) >= 3)
-      .groupBy("w").count().orderBy(col("count").desc, col("w"))
-      .limit(math.max(1, dictSize / 4)).collect().map(_.getString(0))
-    val dict = (0 until dictSize).map { i =>
-      val w = top(i % top.length)
-      i / top.length match {
-        case 0 => w
-        case 1 => w + " " + top((i + 1) % top.length) // cross-word phrase
-        case 2 => w.reverse + i // mostly-absent
-        case _ => w + "_" + i // absent
-      }
-    }
-    val nDocs = docs.count()
-    def run(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val total = df.select(sum(col("n_terms"))).head().getLong(0)
-      val w = (System.nanoTime() - t0) / 1e9
-      println(f"[termscan-probe] $name dict=$dictSize docs=$nDocs " +
-        f"hits=$total wall=$w%.1f s rate=${nDocs / w}%.0f docs/s")
-    }
-    val naive = udf { (t: String) =>
-      if (t == null) 0L else dict.count(t.contains).toLong
-    }
-    def acDf = operators.TermMatch.scanTerms(docs, dict)
-      .select(col("n_terms"))
-    def naiveDf = docs.select(naive(col("text")).as("n_terms"))
-    // interleaved: naive, ac, naive, ac (first pair absorbs JIT warm)
-    run("naive-contains", naiveDf); run("aho-corasick  ", acDf)
-    run("naive-contains", naiveDf); run("aho-corasick  ", acDf)
     spark.stop()
   }
 }

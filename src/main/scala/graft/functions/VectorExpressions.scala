@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -233,18 +232,4 @@ object VectorFunctions {
   def l2DistF32(a: Column, b: Column): Column = bin(EuclideanDistF32.apply)(a, b)
   def l2SqF32(a: Column, b: Column): Column = bin(L2SqF32.apply)(a, b)
   def cosSimF32(a: Column, b: Column): Column = bin(CosineSimF32.apply)(a, b)
-
-  /** Register SQL-callable names on the session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def reg2(name: String, f: (Expression, Expression) => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, es => {
-        require(es.length == 2, s"$name expects exactly 2 arguments, got ${es.length}")
-        f(es(0), es(1))
-      }, "built-in")
-    reg2("dot_f32", DotProductF32.apply)
-    reg2("l2_dist_f32", EuclideanDistF32.apply)
-    reg2("l2sq_f32", L2SqF32.apply)
-    reg2("cos_sim_f32", CosineSimF32.apply)
-  }
 }

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Catalog/listing surface (SURVEY §2.C): full-collection scan, distinct
-  * documents, chunks grouped per document. All built-ins; Catalyst prunes
+/** Catalog/listing surface (SURVEY §2.C): full-collection scan and
+  * distinct documents (C3, chunks grouped per document, is built inline
+  * by `c3_chunks_by_doc`). All built-ins; Catalyst prunes
   * the wide columns (`content`, `embedding`) out of the parquet scan when
   * the projection doesn't need them — the C2 listing reads 2 columns of a
   * ~4 KB row, which at 100 TB is the difference between a metadata-sized
@@ -26,15 +27,4 @@ object Catalog {
       .agg(
         min_by(col(nameCol), col(orderCol)).as(nameCol),
         count(lit(1)).as("chunk_count"))
-
-  /** C3: chunks grouped under their document, per-chunk payload kept in
-    * chunk order (`app.py:549-577`) — collect_list + sort_array on a
-    * (chunk_index, payload) struct so the aggregation itself stays
-    * order-insensitive (partial aggregation safe) and the final array is
-    * canonical. */
-  def chunksByDocument(chunks: DataFrame, docCol: String,
-                       orderCol: String, payload: Column*): DataFrame =
-    chunks.groupBy(col(docCol))
-      .agg(sort_array(collect_list(struct((col(orderCol) +: payload): _*)))
-        .as("chunks"))
 }

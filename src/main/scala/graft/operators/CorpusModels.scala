@@ -835,11 +835,6 @@ object CorpusModels {
     prior.coalesce(1).write.mode("overwrite").parquet(s"$dir/prior")
   }
 
-  /** Load a [[saveNbModel]] layout back into (model, prior) frames. */
-  def loadNbModel(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/model"), spark.read.parquet(s"$dir/prior"))
-
   /** Persist a trained [[unigramLm]] (`dir/vocab`, `dir/stats`) for
     * [[graft.serving.Serving.scorePpl]] — same split as
     * [[saveNbModel]]: nightly batch retrain, driver-latency serve. */
@@ -847,11 +842,6 @@ object CorpusModels {
     vocab.coalesce(1).write.mode("overwrite").parquet(s"$dir/vocab")
     stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
-
-  /** Load a [[saveLmModel]] layout back into (vocab, stats) frames. */
-  def loadLmModel(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/vocab"), spark.read.parquet(s"$dir/stats"))
 
   /** Persist a trained [[bigramLm]] (`dir/bigrams`, `dir/contexts`)
     * for [[graft.serving.Serving.scoreBigramPpl]] — the same
@@ -862,11 +852,6 @@ object CorpusModels {
     bigrams.coalesce(1).write.mode("overwrite").parquet(s"$dir/bigrams")
     contexts.coalesce(1).write.mode("overwrite").parquet(s"$dir/contexts")
   }
-
-  /** Load a [[saveBigramLm]] layout back into (bigrams, contexts). */
-  def loadBigramLm(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/bigrams"), spark.read.parquet(s"$dir/contexts"))
 
   /** Persist a trained multiclass NB model (`dir/vocab`, `dir/stats`,
     * `dir/priors`) for [[graft.serving.Serving.scoreMcNb]] — the same
@@ -880,12 +865,6 @@ object CorpusModels {
     stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
     priors.coalesce(1).write.mode("overwrite").parquet(s"$dir/priors")
   }
-
-  /** Load a [[saveMcNbModel]] layout back into (vocab, stats, priors). */
-  def loadMcNbModel(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/vocab"), spark.read.parquet(s"$dir/stats"),
-      spark.read.parquet(s"$dir/priors"))
 
   /** Collect a [[unigramLm]] vocab into the closure-sized map
     * [[pplScoreColumn]] wants — cap-bounded by construction. */

@@ -64,17 +64,7 @@ object EdJoin {
     * 98 s → the core re-runs at base-corpus size and only the ~f²
     * output expansion scales. */
   def editDistanceJoin(docs: DataFrame, idCol: String, textCol: String,
-                       tau: Int, q: Int = 3): DataFrame =
-    editDistanceJoinImpl(docs, idCol, textCol, tau, q, bagFilter = true)
-
-  /** [[editDistanceJoin]] with the bag-distance filter switchable —
-    * package-private so EdJoinProbe can interleave the two shapes in
-    * ONE session (the only honest A/B on a noisy-neighbor box) and
-    * EdJoinSpec can pin filtered == unfiltered. Production callers go
-    * through the public wrapper (filter always on). */
-  private[graft] def editDistanceJoinImpl(docs: DataFrame, idCol: String,
-                                          textCol: String, tau: Int, q: Int,
-                                          bagFilter: Boolean): DataFrame = {
+                       tau: Int, q: Int = 3): DataFrame = {
     require(tau >= 0, s"tau must be >= 0, got $tau")
     require(q >= 1, s"q must be >= 1, got $q")
     // class collapse in ONE text-keyed pass (r17-opt, the cosineClasses
@@ -102,7 +92,7 @@ object EdJoin {
     // distinct text, expanded across both member lists
     val reps = m0.filter(col("__id") === col("__rep"))
       .select(col("__id"), col("__text"))
-    val repPairs = editDistanceJoinDistinct(reps, tau, q, bagFilter)
+    val repPairs = editDistanceJoinDistinct(reps, tau, q)
     val xa = members.select(col("__rep").as("id_a"), col("__id").as("__xa"))
     val xb = members.select(col("__rep").as("id_b"), col("__id").as("__xb"))
     val crossPairs = repPairs.join(xa, "id_a").join(xb, "id_b")
@@ -150,8 +140,7 @@ object EdJoin {
     * wrapper guarantees it, which is why no distance-0 pair can
     * appear here). */
   private def editDistanceJoinDistinct(docsDistinct: DataFrame,
-                                       tau: Int, q: Int,
-                                       useBag: Boolean): DataFrame = {
+                                       tau: Int, q: Int): DataFrame = {
     val base = docsDistinct
       .withColumn("__len", length(col("__text")))
       .withColumn("__hist", histU(col("__text")))
@@ -256,11 +245,9 @@ object EdJoin {
     // the text columns are attached or any DP cell is computed
     val ha = base.select(col("__id").as("id_a"), col("__hist").as("__ha"))
     val hb = base.select(col("__id").as("id_b"), col("__hist").as("__hb"))
-    val bagged =
-      if (!useBag) cands
-      else cands.join(ha, "id_a").join(hb, "id_b")
-        .filter(bagFilter("__ha", "__hb", tau))
-        .select(col("id_a"), col("id_b"))
+    val bagged = cands.join(ha, "id_a").join(hb, "id_b")
+      .filter(bagFilter("__ha", "__hb", tau))
+      .select(col("id_a"), col("id_b"))
     // --- verify with the banded Levenshtein (threshold form: -1 past tau)
     val ta = base.select(col("__id").as("id_a"), col("__text").as("__text_a"))
     val tb = base.select(col("__id").as("id_b"), col("__text").as("__text_b"))
@@ -280,7 +267,7 @@ object EdJoin {
     val shortPairs = broadcast(shorts).join(base,
         col("id_s") =!= col("__id") &&
           abs(col("len_s") - col("__len")) <= tau &&
-          (if (useBag) bagFilter("__hs", "__hist", tau) else lit(true)))
+          bagFilter("__hs", "__hist", tau))
       .withColumn("edit_dist",
         levenshtein(col("__text_s"), col("__text"), tau).cast("long"))
       .filter(col("edit_dist") >= 0)

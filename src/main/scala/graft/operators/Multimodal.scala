@@ -106,7 +106,7 @@ object Multimodal {
   // SPI: every AudioSystem.getAudioInputStream/write call routes
   // through JDK13Services.getProviders — a synchronized static that
   // re-scans the ServiceLoader — which SERIALIZES all executor
-  // threads (measured on this JRE, AudioKernelProbe: encode+decode of
+  // threads (measured on this JRE, SCALEBENCH.md r13: encode+decode of
   // 20k clips takes 3.7 s on 32 threads vs 2.5 s on one — negative
   // scaling; the r12 100× audio pair spent ~220 s mostly queued on
   // that lock). Calling the resolved provider directly is the SAME

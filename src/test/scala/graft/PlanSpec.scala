@@ -118,6 +118,17 @@ class PlanSpec extends SparkSpec {
     assert(r.getInt(2) === 1)
   }
 
+  test("the suite session runs the GraftSession profile") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") === "false")
+    assert(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes") === "256m")
+    assert(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum") === "1")
+    assert(conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.sql.extensions") === "graft.GraftExtensions")
+    assert(GraftSession.builder(4).getOrCreate() eq spark)
+  }
+
   test("temperatureMix: counts broadcast, no shuffle join, one window exchange") {
     import graft.operators.Refresh
     val plan = Refresh.temperatureMix(Tables.documents(spark, sfDir),
