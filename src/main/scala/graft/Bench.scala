@@ -70,6 +70,9 @@ object Bench {
       try build(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] WARNING: $label warmup failed (${e.getMessage}); $cost") }
+    // the warm-up is a query too: its caches must not serve (warm) the
+    // first timed run
+    graft.operators.Dedup.releasePending()
   }
 
   def main(args: Array[String]): Unit = {
@@ -104,14 +107,14 @@ object Bench {
     // that can't afford 3 passes set the env to 1 explicitly.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
     val verbose = sys.env.getOrElse("SPARK_GRAFT_BENCH_VERBOSE", "0") == "1"
-    // between-run cache hygiene, OUTSIDE the timed window. Measured
-    // rationale (SCALEBENCH r15): watermark-retained frames are tiny at
-    // sf0.1 (peak 6 RDDs / 5 MB — NOT a memory effect), but
-    // CacheManager plan-matching let repeat k+1 reuse repeat k's
-    // still-cached frames, so cache-heavy medians measured a WARM rerun
-    // (dedup_editdist 2-3 s warm vs ~6 s cold). Releasing between runs
-    // makes every repeat measure the operator cold; at larger SFs it
-    // also bounds retention.
+    // each run ends at the query boundary (Dedup.releasePending),
+    // OUTSIDE the timed window. Measured rationale (SCALEBENCH r15):
+    // retained frames are tiny at sf0.1 (peak 6 RDDs / 5 MB — NOT a
+    // memory effect), but CacheManager plan-matching let repeat k+1
+    // reuse repeat k's still-cached frames, so cache-heavy medians
+    // measured a WARM rerun (dedup_editdist 2-3 s warm vs ~6 s cold).
+    // Releasing after every run makes every repeat measure the
+    // operator cold; at larger SFs it also bounds retention.
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()

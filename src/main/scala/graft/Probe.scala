@@ -22,6 +22,10 @@ import scala.collection.mutable.ArrayBuffer
   *    re-optimization, persist bookkeeping) — whether a slow query needs
   *    fewer stages or faster kernels.
   *
+  * `count` and `gaps` lines end in `cached=<n>`: the persistent RDDs
+  * left after the query boundary (`Dedup.releasePending`) — 0 unless
+  * something outlives its query.
+  *
   * Each listed query runs once; list a name twice to repeat it. A result
   * dump is [[Verify]] with `SPARK_GRAFT_VERIFY_QUERIES`, subset timing
   * is [[Bench]] with `SPARK_GRAFT_BENCH_QUERIES`.
@@ -63,14 +67,15 @@ object Probe {
       val t0 = System.nanoTime()
       def secs = (System.nanoTime() - t0) / 1e9
       val df = SparkEntry.queries(name)(spark, sfDir)
-      mode match {
+      val report = mode match {
         case "explain" =>
           val plan = df.queryExecution.explainString(FormattedMode)
           outDir.fold(println(s"===== $name =====\n$plan"))(d =>
             Files.writeString(Paths.get(s"$d/$name.txt"), plan))
+          None
         case "count" =>
           val rows = df.count()
-          println(f"[probe] $name: $rows rows, $secs%.2f s")
+          Some(f"[probe] $name: $rows rows, $secs%.2f s")
         case "gaps" =>
           df.write.format("noop").mode("overwrite").save()
           val wall = secs
@@ -82,10 +87,12 @@ object Probe {
             case (acc, iv) => iv :: acc
           }
           val inJob = merged.map { case (s, e) => e - s }.sum / 1e3
-          println(f"[gap] $name%-28s wall=$wall%7.3f s jobs=${snap.length}%3d " +
+          Some(f"[gap] $name%-28s wall=$wall%7.3f s jobs=${snap.length}%3d " +
             f"inJob=$inJob%7.3f s gap=${wall - inJob}%7.3f s")
       }
       graft.operators.Dedup.releasePending()
+      val cached = spark.sparkContext.getPersistentRDDs.size
+      report.foreach(r => println(s"$r cached=$cached"))
     }
     spark.stop()
   }

@@ -37,6 +37,7 @@ object Verify {
         }
         rmTree(new java.io.File(s"$outDir/$name"))
       }
+      finally graft.operators.Dedup.releasePending()
     }
     writeOracleJson(outDir)
     spark.stop()

@@ -974,8 +974,7 @@ object Ann {
       // one projection, many consumers (seed homes+queries, per-round
       // embedding attach + pivot self rows) — all consumed EAGERLY by
       // the per-stage localCheckpoints, so the explicit unpersist at
-      // the end is safe (multi-action loop: persist + unpersist, not
-      // releaseAfterUse)
+      // the end frees it before the caller's action even starts
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val idType = index.assigned.schema(index.idCol).dataType
     require(idType == org.apache.spark.sql.types.LongType,
@@ -1038,8 +1037,8 @@ object Ann {
     // per src, one fused repartition+heap merges them ([[topKPerSrc]]:
     // dedup + rank in ONE exchange, no agg + window pair). Checkpoint:
     // each round consumes `edges` twice.
-    var edges = topKPerSrc(
-      spark.createDataFrame(seedRows, edgeSchema), kk).localCheckpoint()
+    var edges = Dedup.localCheckpoint(topKPerSrc(
+      spark.createDataFrame(seedRows, edgeSchema), kk), eager = true)
 
     val embF = clean.select(col("__id").as("__eid"), col("__emb"))
     var round = 0
@@ -1092,9 +1091,9 @@ object Ann {
       // dedup + re-rank fused into one exchange; localCheckpoint
       // truncates lineage (each round's plan would otherwise nest the
       // previous round's full DAG — the connectedComponents rule)
-      edges = topKPerSrc(
-        spark.createDataFrame(pairRows, edgeSchema).unionByName(edges), kk)
-        .localCheckpoint()
+      edges = Dedup.localCheckpoint(topKPerSrc(
+        spark.createDataFrame(pairRows, edgeSchema).unionByName(edges), kk),
+        eager = true)
       round += 1
     }
 

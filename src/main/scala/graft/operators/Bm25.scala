@@ -173,13 +173,9 @@ object Bm25 {
     * cached frame), and the pass-2 postings + stats; only query
     * postings ever shuffle in either pass. Driver round-trips between
     * the phases carry fbDocs ids and fbTerms strings — the ANN
-    * candidate-list contract. The cache self-releases on the caller's
-    * first ACTION over the returned frame — a caller that only
-    * inspects the plan (explain/PlanSpec-style usage) never triggers
-    * one, leaving the tokenize cache resident for the session; such
-    * callers should `spark.catalog.clearCache()` (or run one action)
-    * when they care. Acceptable for interactive use — the cache is
-    * corpus-token-sized, bounded, and re-registered per call. */
+    * candidate-list contract. The tokenize cache is released at the
+    * query boundary ([[Dedup.releasePending]]), whether or not the
+    * returned plan ever ran. */
   def prfTopK(docs: DataFrame, idCol: String, textCol: String,
               queryTerms: Seq[String], k: Int,
               fbDocs: Int = 10, fbTerms: Int = 8,
@@ -206,8 +202,6 @@ object Bm25 {
         .orderBy(col("cnt").desc, col("term"))
         .limit(fbTerms)
         .collect().map(_.getString(0)).toSeq
-    // both internal actions are done — the caller's first action over
-    // the returned frame (pass 2) frees the tokenize cache
     Dedup.releaseAfterUse(tok)
     val union = queryTerms ++ expTerms
     val weights: Map[String, Long] =

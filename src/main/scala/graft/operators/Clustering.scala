@@ -119,8 +119,7 @@ object Clustering {
         Ann.fp(graft.functions.VectorFunctions.l2DistF32(
           col(index.embCol), col("__centroid")).cast("double")).as("dist_fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // shared tail: flag every base row with its survival verdict and
-    // release the base cache on the caller's first action
+    // shared tail: flag every base row with its survival verdict
     def flagKept(keptIds: DataFrame): DataFrame = {
       val kept = keptIds.select(col(index.idCol)).withColumn("__kept", lit(true))
       val out = base.select(col(index.idCol), col("ivf_cluster"), col("dist_fp"))
@@ -140,8 +139,7 @@ object Clustering {
       // `base`, so refinedPairs=true does corpus work at PLAN time; a
       // caller that executes the result amortizes it (the cache
       // serves every downstream phase), but a plan-only caller pays
-      // the scan and leaves the cache for releaseAfterUse's listener
-      // (the prfTopK plan-only contract).
+      // the scan.
       val norm = sqrt(graft.functions.VectorFunctions
         .dotF32(col(index.embCol), col(index.embCol)).cast("double"))
       val ns = base.agg(min(norm), max(norm)).head()
@@ -250,9 +248,9 @@ object Clustering {
       s"kCenterCoreset id column must be long, got $idType")
     val spark = corpus.sparkSession
     import spark.implicits._
-    // explicit unpersist AFTER the loop, NOT releaseAfterUse: the
-    // greedy rounds are k separate actions and the listener would
-    // free the cache after the first one (the seed pick)
+    // explicit unpersist AFTER the loop, NOT releaseAfterUse: the k
+    // greedy rounds are the only readers, so the cache is freed as
+    // soon as they end instead of at the query boundary
     val clean = corpus
       .where(col(idCol).isNotNull && col(embCol).isNotNull)
       .select(col(idCol).as("id"), col(embCol))

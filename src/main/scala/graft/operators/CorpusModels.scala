@@ -1339,7 +1339,7 @@ object CorpusModels {
 
   /** Fused train+score DSIR over one corpus (the self-weighting shape
     * the curation pipeline runs): the bigram occurrence stream
-    * materializes ONCE (persisted, self-releasing) and feeds both the
+    * materializes ONCE (persisted to the query boundary) and feeds both the
     * model aggregation and the per-doc weight sums, and (with
     * `dictEncode`, the default) the train agg's distinct-gram table
     * doubles as the scoring dictionary — no second explode, no

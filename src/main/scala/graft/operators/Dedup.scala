@@ -24,93 +24,50 @@ import graft.functions.VectorFunctions._
   */
 object Dedup {
 
-  /** Self-releasing cache: unpersist `cached` when the first query that
-    * actually READS the cache completes (matched by the cached plan's
-    * output attribute ids inside the completed query's InMemoryRelation
-    * nodes — unrelated queries never evict it). In the intended use
-    * (build plan → run one action over it) this releases the cache the
-    * moment the result materializes; a caller running several actions
-    * over the same result pays a recompute from the second on — a perf
-    * trade, never a correctness one (unpersist is safe mid-flight). A
-    * plan that is built but never executed keeps its (lazy, therefore
-    * empty) cache entry plus this listener for the session's lifetime —
-    * bounded by [[releasePending]], which a harness calls between
-    * queries to drop everything the watermark rule retained. */
-  private[graft] def releaseAfterUse(cached: DataFrame): Unit = {
-    val lm = cached.sparkSession.listenerManager
-    val ids = cached.queryExecution.analyzed.output.map(_.exprId).toSet
-    // STALE-EVENT watermark: the execution-listener bus is async, so a
-    // listener registered here can still be DELIVERED completion
-    // events of queries that finished BEFORE registration — exactly
-    // the builder's own internal actions over `cached` (they reference
-    // it by construction), which would free the cache the instant the
-    // bus drains, silently defeating the optimization for the caller's
-    // real first action. Ignore any query whose ANALYSIS began before
-    // this registration; a pre-analyzed plan executed later is then
-    // never auto-released (a benign bounded leak, the documented
-    // plan-only trade), which beats releasing early.
-    val regTimeMs = System.currentTimeMillis()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def fresh(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
-        scala.util.Try(qe.tracker.phases
-          .get(org.apache.spark.sql.catalyst.QueryPlanningTracker.ANALYSIS)
-          .forall(_.startTimeMs >= regTimeMs)).getOrElse(true)
-      private def refs(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
-        // optimizedPlan re-throws for queries that FAILED in analysis —
-        // such a query never read the cache, so treat it as no-reference
-        scala.util.Try(qe.optimizedPlan.exists {
-          case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-            r.output.exists(a => ids.contains(a.exprId))
-          case _ => false
-        }).getOrElse(false)
-      private def cleanup(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        if (fresh(qe) && refs(qe)) {
-          // remove the pending entry BEFORE unpersisting: an observer
-          // that polls for the unpersist (releasePending callers, the
-          // DedupSpec self-release pin) must never see the unpersist
-          // land while the entry still reads as pending — the old
-          // order had that microsecond window and lost the race under
-          // a loaded box
-          pendingReleases.remove(this)
-          cached.unpersist(blocking = false); lm.unregister(this)
-        }
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = cleanup(qe)
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = cleanup(qe)
+  /** Caches and checkpoints made for the query being built, released at
+    * the query boundary. Strong refs are intended: the cache entry
+    * itself keeps the plan alive inside Spark's CacheManager anyway. */
+  private val pending = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
+
+  /** Register a persisted intermediate for release at the query
+    * boundary ([[releasePending]]). Until then every action over the
+    * frame — an operator's internal count as much as the caller's
+    * action — reads the cache; a plan that is built but never run is
+    * released all the same. */
+  private[graft] def releaseAfterUse(cached: DataFrame): Unit =
+    pending.add(() => cached.unpersist(blocking = true))
+
+  /** `df.localCheckpoint(eager)` with the checkpointed RDD registered
+    * for release at the query boundary. A local checkpoint persists its
+    * RDD — those blocks ARE the truncated lineage — so it stays cached
+    * until someone unpersists it; unregistered, that is whenever a GC
+    * lets the ContextCleaner find it. A frame over a released
+    * checkpoint fails loudly when run again, so a caller must not keep
+    * one past its query. */
+  private[graft] def localCheckpoint(df: DataFrame, eager: Boolean): DataFrame = {
+    val cp = df.localCheckpoint(eager)
+    cp.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        pending.add(() => r.rdd.unpersist(blocking = true))
+      case _ =>
     }
-    pendingReleases.put(listener, cached)
-    lm.register(listener)
+    cp
   }
 
-  /** Every releaseAfterUse registration whose listener has not fired
-    * yet — the frames the analysis-start watermark deliberately
-    * retains (a pre-analyzed plan executed later never auto-releases).
-    * Strong refs are intended: the cache entry itself keeps the plan
-    * alive inside Spark's CacheManager anyway. */
-  private val pendingReleases = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.util.QueryExecutionListener, DataFrame]()
-
-  /** Drop every cache the watermark rule retained: unpersist each
-    * still-pending releaseAfterUse frame and unregister its listener.
-    * Correctness-safe at any time (unpersist is safe mid-flight; the
-    * worst case is a recompute). Harness seam: a suite runner (Bench,
-    * Verify) calls this BETWEEN queries so a 3-repeat 183-query run
-    * does not accumulate hundreds of dead cached frames whose eviction
-    * pressure lands on whichever cache-heavy query runs last. Returns
-    * the number of entries released. */
+  /** The query boundary: unpersist every registered frame and
+    * checkpoint, synchronously, and return how many were released. The
+    * owner of a query calls it once the query's action has returned or
+    * thrown — Bench and Probe per run and after the warm-up, Verify per
+    * query, a spec per test, perfbench per batch query (reflectively,
+    * by this name). Never call it while a query is running: its
+    * checkpoints would vanish under it. */
   private[graft] def releasePending(): Int = {
     var n = 0
-    val it = pendingReleases.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      it.remove()
+    var release = pending.poll()
+    while (release != null) {
+      scala.util.Try(release())
       n += 1
-      val df = e.getValue
-      scala.util.Try(df.unpersist(blocking = false))
-      scala.util.Try(df.sparkSession.listenerManager.unregister(e.getKey))
+      release = pending.poll()
     }
     n
   }
@@ -460,7 +417,7 @@ object Dedup {
   /** Slim tokenized projection — feeds THREE consumers (prefix explode
     * + both verify joins), so it is persisted (tokenize/hash once, not
     * three times; MEMORY_AND_DISK spills instead of OOMing at scale)
-    * and self-releases after the first consuming action. Expects an
+    * and released at the query boundary. Expects an
     * `is_new` tag column (constant true for the non-incremental path). */
   private def hashedTokenProjection(docs: DataFrame, idCol: String,
                                     textCol: String, blockCol: String): DataFrame = {
@@ -789,8 +746,7 @@ object Dedup {
     * tokens would otherwise concentrate in a few reducers — with exact
     * twins already collapsed by the classing, the knob measured ~free
     * at the 10×/100× twin fixtures (SCALEBENCH.md); enable it when the
-    * corpus is known boilerplate-heavy, exactly like
-    * [[graft.operators.Skew]]'s salted joins. */
+    * corpus is known boilerplate-heavy. */
   def jaccardPairsPrefixIncremental(newDocs: DataFrame, corpus: DataFrame,
                                     idCol: String, textCol: String,
                                     blockCol: String, threshold: Double,
@@ -866,11 +822,11 @@ object Dedup {
     // on the converged state being a star forest, so no new assumption
     // is introduced. localCheckpoint stays LAZY — the star screen is
     // the round's materializing action (one job per round).
-    var edges = init.localCheckpoint(false)
+    var edges = localCheckpoint(init, eager = false)
     var converged = isStarForest(edges)
     var it = 0
     while (!converged && it < maxIter) {
-      edges = ccRound(edges).localCheckpoint(false)
+      edges = localCheckpoint(ccRound(edges), eager = false)
       converged = isStarForest(edges)
       it += 1
     }
@@ -1047,7 +1003,7 @@ object Dedup {
     * [[Sharding.shardId]] hex-parse parity trick, so a DuckDB oracle
     * computes the identical BIGINT). The gram STRING never leaves the
     * projection — only 8-byte fingerprints shuffle. The result is
-    * persisted with the self-releasing cache: both consumers feed it
+    * persisted until the query boundary: both consumers feed it
     * into a frequency agg AND a re-attachment join, and the
     * window-concat + md5 projection is the dominant cost — computing
     * it once instead of twice nearly halves the job. */
@@ -1282,8 +1238,8 @@ object Dedup {
     * `maxBucket` caps degenerate hot buckets (boilerplate corpora —
     * thousands of identical embeddings) the same way [[nearDupMinHash]]
     * does. The corpus projection is persisted for its four consumers
-    * (sizing count, bucketing, both verify joins) and self-releases
-    * after the result materializes.
+    * (sizing count, bucketing, both verify joins) and released at the
+    * query boundary.
     *
     * Sizing without executing the upstream: `nBits` only gates bucket
     * OCCUPANCY, so any count within ~2× is fine — pass `corpusCount`
@@ -1301,15 +1257,11 @@ object Dedup {
     require(maxBucket > 1, s"maxBucket must be > 1, got $maxBucket")
     val e = emb.select(col(idCol), col(embCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // fallback sizing count FIRST (it also warms the cache), listener
-    // AFTER — a listener registered before the count would see the
-    // count itself as the first cache-referencing query and evict the
-    // cache before the LSH job ever reads it
+    releaseAfterUse(e)
     val bits =
       if (nBits > 0) nBits
       else if (corpusCount > 0) lshBitsFor(corpusCount)
       else lshBitsFor(e.count())
-    releaseAfterUse(e)
     require(bits <= 24, s"nBits must be <= 24 (got $bits): the bucket key " +
       "would overflow the Int signature")
     val l = if (bands > 0) bands else signLshBands(threshold, bits, targetRecall)
@@ -1399,8 +1351,8 @@ object Dedup {
   /** Classes of IDENTICAL embeddings. Returns `(classes, members)`:
     * `classes` — one row per distinct embedding, `(__rep` = min member
     * id, `__k` = member count, `__emb`, `__nz` = any element ≠ 0`)`,
-    * persisted (register [[releaseAfterUse]] or unpersist at the call
-    * site); `members` — `(__mid, __rep)`, lazy and unpersisted. One
+    * persisted (the caller registers [[releaseAfterUse]] or
+    * unpersists); `members` — `(__mid, __rep)`, lazy and unpersisted. One
     * shuffle total: a window over the embedding key labels members and
     * classes in the same pass. */
   def cosineClasses(emb: DataFrame, idCol: String,
@@ -1434,12 +1386,9 @@ object Dedup {
     * small side re-bucketed so task count stays ~parallelism²) — the
     * same pair multiset, no broadcast, still O(c²) compute BY DESIGN:
     * this is the declared oracle, not the scale route. The class-count
-    * action is cheap (callers hand in the persisted `classes` frame)
-    * and must run BEFORE [[releaseAfterUse]] is registered on it —
+    * action is cheap (callers hand in the persisted `classes` frame);
     * callers that already know the class count pass it via
-    * `knownClassCount` and the guard runs NO action at all (an
-    * unpersisted `classes` frame is then never recomputed, and a
-    * release-registered one is never freed by the guard's count). */
+    * `knownClassCount` and the guard runs NO action at all. */
   def cosineClassPairs(classes: DataFrame, threshold: Double,
                        maxBroadcastClasses: Long = 500000L,
                        knownClassCount: Option[Long] = None): DataFrame = {
@@ -1578,13 +1527,8 @@ object Dedup {
                        threshold: Double): DataFrame = {
     val (classes, members) = cosineClasses(emb, idCol, embCol)
     val repPairs = cosineClassPairs(classes, threshold)
-    val out = cosineExpandComponents(classes, members, repPairs, threshold)
-    // register AFTER cosineExpandComponents: its connectedComponents
-    // call eagerly checkpoints the rep edge set (referencing classes),
-    // so the next cache-reading action is the caller's — which also
-    // reads classes through the expansion joins
     releaseAfterUse(classes)
-    out
+    cosineExpandComponents(classes, members, repPairs, threshold)
   }
 
   /** Route chooser for the cosine dedup family, in one place so specs

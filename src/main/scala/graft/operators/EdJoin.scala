@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   * gram string) bucketed by gram — never all-pairs — and verification
   * is per-candidate, output-bound like the PPJoin engine. The base
   * and prefix projections each feed multiple consumers, so both are
-  * persisted and self-release after the first action (the
-  * hashedTokenProjection pattern).
+  * persisted until the query boundary (the hashedTokenProjection
+  * pattern).
   *
   * The survival lemma needs a string to OWN q·τ+1 grams: with fewer
   * (length < q·(τ+1)), every gram can be destroyed and the prefix

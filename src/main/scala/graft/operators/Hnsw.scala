@@ -814,7 +814,7 @@ object Hnsw {
     // recompute): the incoming graph frame is typically a parquet
     // read + tombstone join and feeds THREE consumers here (the
     // dead-fraction agg, the untouched pass-through, the rebuild
-    // input) — persist once, self-release after the caller's action.
+    // input) — persist once, released at the query boundary.
     val g = graph.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val doomed = g.filter(col("layer") === 0)
       .groupBy(col("shard"))

@@ -206,9 +206,9 @@ object LinkGraph {
     * micro-units of `scale`.
     *
     * Scale shape: the degree-joined edge frame persists once
-    * (released after the consuming action via the
-    * [[Dedup.releaseAfterUse]] watermark seam) and each iteration is
-    * one join of the node-cardinality rank frame onto it plus one
+    * (released at the query boundary, [[Dedup.releaseAfterUse]]) and
+    * each iteration is one join of the node-cardinality rank frame onto
+    * it plus one
     * map-side-combined hash agg on `dst` — the edge side shuffles
     * once for the whole run, the rank side once per iteration, which
     * is PageRank's floor. Iteration count is a small constant (the

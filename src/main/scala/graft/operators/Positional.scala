@@ -79,8 +79,8 @@ object Positional {
   def phraseOccurrences(postings: DataFrame, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase must be non-empty")
     // an n-term phrase reads the postings n times (one filter branch
-    // per term): persist once, self-release on the first action — the
-    // tokenize scan / pruned index read must not re-run per term
+    // per term): persist once — the tokenize scan / pruned index read
+    // must not re-run per term
     val src =
       if (phrase.length <= 1) postings
       else {
@@ -120,7 +120,7 @@ object Positional {
                      window: Long): DataFrame = {
     require(termA != termB, "proximity terms must differ")
     require(window >= 1, s"window must be >= 1, got $window")
-    // two filter branches over one source: persist once, self-release
+    // two filter branches over one source: persist once
     val src = postings.persist()
     Dedup.releaseAfterUse(src)
     val pa = src.filter(col("term") === termA)

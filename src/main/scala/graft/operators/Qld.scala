@@ -64,9 +64,8 @@ object Qld {
     // (id, dl) over ALL docs: a null/empty text has dl = 0 (DuckDB's
     // unnest-of-NULL emits no token rows; the oracle left-join
     // coalesces to the same 0). Both dl and the postings feed several
-    // branches (score + every lnTable union leg): persist once,
-    // self-release on the first consuming action — the tokenize scan
-    // must not re-run per branch.
+    // branches (score + every lnTable union leg): persist once — the
+    // tokenize scan must not re-run per branch.
     val dl = docs.select(col(idCol).as("id"),
       coalesce(size(Bm25.terms(col(textCol))), lit(0)).cast("long").as("dl"))
       .persist()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
 
@@ -140,16 +141,19 @@ class DedupSpec extends SparkSpec {
     assert(prefix.nonEmpty, "fixture should contain near-dup pairs")
   }
 
-  test("jaccardPairsPrefix releases its cached projection after the first action") {
+  test("jaccardPairsPrefix keeps its projection cached to the boundary") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = Dedup.jaccardPairsPrefix(Tables.documents(spark, sfDir),
-      "doc_id", "text", "lang", 0.8).collect()
-    assert(out.nonEmpty)
-    // the unpersist listener fires asynchronously on the listener bus
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    val deadline = System.currentTimeMillis() + 30000
-    while (leaked.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-    assert(leaked.isEmpty, s"cached RDDs leaked after action: $leaked")
+      "doc_id", "text", "lang", 0.8)
+    assert(out.collect().nonEmpty)
+    // a second action before the boundary still reads the cache
+    val again = out.select($"id_a", $"id_b")
+    assert(again.collect().length === out.count())
+    assert(again.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
+      again.queryExecution.executedPlan.toString)
+    assert(Dedup.releasePending() >= 1)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"cached RDDs left after the boundary: $leaked")
   }
 
   test("jaccardPairsPrefix: threshold boundaries and degenerate docs") {
@@ -668,30 +672,49 @@ class DedupSpec extends SparkSpec {
     assert(recall >= 0.9, s"victim recall $recall over ${exactVictims.size}")
   }
 
-  test("releasePending drops watermark-retained caches; fired listeners " +
-    "leave nothing behind") {
-    // drain whatever earlier suites left pending so counts are ours
+  test("releasePending releases run and never-run frames at once") {
+    // the registry is process-wide: start from an empty one
     Dedup.releasePending()
-    // a frame whose cache-reading action ran through a PRE-REGISTRATION
-    // analyzed plan: the watermark rule retains it -> pending
-    val df = spark.range(100).toDF("id").persist()
-    df.count() // analyzed + executed before registration
+    val ran = spark.range(100).toDF("id").persist()
+    Dedup.releaseAfterUse(ran)
+    assert(ran.count() === 100)
+    assert(ran.count() === 100) // a second action does not release it
+    val neverRun = spark.range(50).toDF("id").persist()
+    Dedup.releaseAfterUse(neverRun)
+    assert(ran.storageLevel.useMemory && neverRun.storageLevel.useMemory)
+    assert(Dedup.releasePending() === 2)
+    assert(ran.storageLevel === StorageLevel.NONE)
+    assert(neverRun.storageLevel === StorageLevel.NONE)
+    assert(Dedup.releasePending() === 0)
+  }
+
+  test("releasePending releases a frame whose action threw") {
+    val df = spark.range(10).toDF("id").persist()
     Dedup.releaseAfterUse(df)
-    Thread.sleep(300) // let the async bus deliver the stale event
-    assert(df.storageLevel.useMemory, "watermark must retain the cache")
-    val n = Dedup.releasePending()
-    assert(n >= 1, s"expected >=1 pending release, got $n")
-    assert(!df.storageLevel.useMemory, "releasePending must unpersist")
-    // normal path: a fresh post-registration query fires the listener,
-    // which must ALSO clear its pending entry (eventually)
-    val df2 = spark.range(50).toDF("id").persist()
-    Dedup.releaseAfterUse(df2)
-    df2.count()
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (df2.storageLevel.useMemory && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(!df2.storageLevel.useMemory, "listener must self-release")
-    assert(Dedup.releasePending() === 0,
-      "a fired listener must remove its own pending entry")
+    intercept[Exception](df.select(assert_true($"id" < 5)).collect())
+    assert(df.storageLevel.useMemory)
+    Dedup.releasePending()
+    assert(df.storageLevel === StorageLevel.NONE)
+  }
+
+  test("connectedComponents checkpoints are released at the boundary") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a 64-node path is far from a star forest: several rounds, each
+    // ending in a local checkpoint
+    val path = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val labels = Dedup.connectedComponents(path)
+    assert(labels.select($"component").distinct().as[Long].collect().toSeq === Seq(1L))
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.size >= 2, s"expected one checkpoint RDD per round, got $held")
+    assert(Dedup.releasePending() >= held.size)
+    // no System.gc(): the boundary alone brings the count back
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"checkpoint RDDs left after the boundary: $left")
+    // a frame kept past its query fails loudly, never reads stale rows
+    val e = intercept[Exception](labels.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("Checkpoint block")), e.toString)
   }
 }

@@ -129,6 +129,23 @@ class PlanSpec extends SparkSpec {
     assert(GraftSession.builder(4).getOrCreate() eq spark)
   }
 
+  test("the AQE partition floor key still sets the coalesced partition count") {
+    // GraftSession's cpus/4 floor rides a key Spark marks deprecated:
+    // if a later Spark ignores it, the floor vanishes without a word
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
+    val s = spark.newSession()
+    // a groupBy whose shuffle outgrows the 1 MB minimum coalesced
+    // partition size several times, so only the floor keeps partitions
+    // apart; the final RDD's partitions are the coalesced ones read
+    def partitionsRead(): Int = s.range(0L, 1000000L, 1L, 4)
+      .groupBy((col("id") * 7919L % 1000000L).as("k")).count()
+      .queryExecution.toRdd.getNumPartitions
+    s.conf.set(key, "3")
+    assert(partitionsRead() >= 3)
+    s.conf.unset(key)
+    assert(partitionsRead() === 1)
+  }
+
   test("temperatureMix: counts broadcast, no shuffle join, one window exchange") {
     import graft.operators.Refresh
     val plan = Refresh.temperatureMix(Tables.documents(spark, sfDir),
@@ -229,40 +246,22 @@ class PlanSpec extends SparkSpec {
     // index + stats, pass-2 index + stats); all phases now share one
     // cached (id, __terms) frame — a re-split in the returned plan
     // means the fold regressed
-    // doc_id < 397 makes this call's tokenize plan canonically UNIQUE:
-    // with the shared corpus plan, the CacheManager dedups this persist
-    // onto another suite's identical entry, whose in-flight self-release
-    // listener can then unpersist it between our persist and the plan
-    // inspection (suite-order flake; correctness unaffected — recompute)
-    def passTwoPlan(cut: Int) = {
-      val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < cut)
-      val out = graft.operators.Bm25.prfTopK(docs, "doc_id", "text",
+    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 397)
+    val exec = graft.operators.Bm25.prfTopK(docs, "doc_id", "text",
         Seq("spark", "table"), k = 5, fbDocs = 3, fbTerms = 2)
-      out.queryExecution.executedPlan match {
+      .queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           a.executedPlan
         case p => p
       }
+    val cacheScans = exec.collect {
+      case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => i
     }
-    def cacheScans(exec: org.apache.spark.sql.execution.SparkPlan) =
-      exec.collect {
-        case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => i
-      }
     // tree traversal stops at the cache boundary: the InMemoryRelation's
     // cached BUILD plan (which rightly contains the one split) is not
     // part of the executed tree, so any StringSplit found here is a
-    // fresh corpus re-split.
-    // ONE retry with a DIFFERENT filter constant: even with a unique
-    // plan, a concurrent suite's in-flight async self-release can
-    // unpersist between our persist and the plan inspection
-    // (documented flake — the listener bus offers no public drain),
-    // and a same-constant retry would DEDUPE onto the first attempt's
-    // cache entry and trip over ITS still-live listener. A REAL
-    // regression — the persist removed from prfTopK — fails both
-    // attempts deterministically.
-    var exec = passTwoPlan(397)
-    if (cacheScans(exec).isEmpty) exec = passTwoPlan(398)
-    assert(cacheScans(exec).nonEmpty,
+    // fresh corpus re-split
+    assert(cacheScans.nonEmpty,
       s"pass 2 must read the persisted tokenize:\n$exec")
     val resplits = exec.collect { case p => p }.flatMap(_.expressions)
       .flatMap(_.collect {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for operator specs (one JVM-wide session —
@@ -10,6 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Each test is one query boundary: the caches and checkpoints its
+    * operators registered are released when it ends, pass or fail. */
+  override protected def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally graft.operators.Dedup.releasePending()
 
   /** Recursive delete (shared by every temp-dir-using spec). */
   protected def rmTree(f: java.io.File): Unit = {

@@ -5,11 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.functions.HashingEmbedder
-import graft.operators.{Ann, ChunkStore, Skew, TextChunker}
+import graft.operators.{Ann, ChunkStore, TextChunker}
 
-/** Storage-layout + skew specs: the parts of the 100 TB story that are
+/** Storage-layout specs: the parts of the 100 TB story that are
   * observable at test scale — partition pruning on the IVF layout,
-  * delete-as-rewrite round trip, salted-join equivalence. */
+  * delete-as-rewrite round trip. */
 class StorageSpec extends SparkSpec {
   import spark.implicits._
 
@@ -98,17 +98,6 @@ class StorageSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS emb_meta_b")
       spark.sql("DROP TABLE IF EXISTS emb_vec_b")
     }
-  }
-
-  test("saltedJoin == plain join (row multiset), spread across salts") {
-    // skewed left: 90% of rows share one key
-    val left = (1 to 1000).map(i => (if (i <= 900) 1L else i.toLong, s"l$i")).toDF("k", "lv")
-    val right = Seq((1L, "hot"), (50L, "a"), (901L, "b")).toDF("k", "rv")
-    val plain = left.join(right, Seq("k")).select($"k", $"lv", $"rv")
-    val salted = Skew.saltedJoin(left, right, "k", saltFactor = 8)
-      .select($"k", $"lv", $"rv")
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
-    assert(salted.count() === plain.count())
   }
 
   test("compactParquet: many small files -> few, rows preserved exactly") {
@@ -534,14 +523,5 @@ class StorageSpec extends SparkSpec {
     val mixedByDomain = mixed.groupBy($"domain").count().as[(String, Long)].collect().toMap
     assert(!mixed.select($"doc_id").as[Long].collect().exists(_ >= 9001L))
     assert(mixedByDomain === byDomain)
-  }
-
-  test("saltedAggregate == plain aggregate for algebraic aggs") {
-    val df = (1 to 1000).map(i => (if (i <= 900) "hot" else s"k$i", i.toLong)).toDF("k", "v")
-    val plain = df.groupBy($"k").agg(sum($"v").as("s"), count(lit(1)).as("n"))
-    val salted = Skew.saltedAggregate(df, "k", 8)(
-      _.agg(sum($"v").as("ps"), count(lit(1)).as("pn")),
-      _.agg(sum($"ps").as("s"), sum($"pn").as("n")))
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
   }
 }
