@@ -30,12 +30,28 @@ import scala.collection.mutable.ArrayBuffer
   * dump is [[Verify]] with `SPARK_GRAFT_VERIFY_QUERIES`, subset timing
   * is [[Bench]] with `SPARK_GRAFT_BENCH_QUERIES`.
   *
+  * `decode <dir> [reps]` needs no session: it is the microbenchmark of
+  * the serving read path ([[graft.serving.Serving]]) over the part files
+  * of one persisted dir, such as an IVF `corpus/ivf_cluster=<c>` or a
+  * BM25 `postings/range_id=<r>` dir. Per part file it prints the median
+  * µs of list+open+footer, of the chunk read and of each column's
+  * decode, over `reps` timed passes (default 200) after as many
+  * warm-up passes, beside the same figures for passes that only read
+  * and decompress each column's pages (the floor under its decode).
+  *
   * Usage: runMain graft.Probe <explain|count|gaps> <sfDir> <q1,q2,...> [outDir]
+  *        runMain graft.Probe decode <dir> [reps]
   */
 object Probe {
-  private val usage = "usage: graft.Probe <explain|count|gaps> <sfDir> <q1,q2,...> [outDir]"
+  private val usage = "usage: graft.Probe <explain|count|gaps> <sfDir> <q1,q2,...> [outDir]" +
+    " | graft.Probe decode <dir> [reps]"
 
   def main(args: Array[String]): Unit = {
+    if (args.headOption.contains("decode")) {
+      require(args.length == 2 || args.length == 3, usage)
+      decode(args(1), args.lift(2).fold(200)(_.toInt))
+      return
+    }
     require(args.length == 3 || (args.length == 4 && args(0) == "explain"), usage)
     val Array(mode, sfDir, qlist) = args.take(3)
     require(Set("explain", "count", "gaps")(mode), usage)
@@ -95,5 +111,102 @@ object Probe {
       report.foreach(r => println(s"$r cached=$cached"))
     }
     spark.stop()
+  }
+
+  /** The `decode` mode: see the object's scaladoc. */
+  private def decode(dir: String, reps: Int): Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.parquet.column.ColumnDescriptor
+    import org.apache.parquet.column.page.{DataPageV1, DataPageV2, PageReadStore}
+    import graft.serving.Serving
+    require(reps >= 1, s"reps must be >= 1, got $reps")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val files = Serving.partFiles(conf, dir)
+    require(files.nonEmpty, s"no part files under $dir")
+    // every top-level column the serving decoder reads, by its accessor
+    val (probe, _) = Serving.openPart(conf, files.head, Seq.empty)
+    val fileSchema = try probe.getFooter.getFileMetaData.getSchema finally probe.close()
+    val columns: Seq[(String, ColumnDescriptor, Serving.RowGroup => Any)] =
+      fileSchema.getFields.asScala.toSeq.flatMap { f =>
+        val name = f.getName
+        fileSchema.getColumns.asScala.filter(_.getPath.head == name).toSeq match {
+          case Seq(d) =>
+            val t = d.getPrimitiveType.getPrimitiveTypeName
+            val read: Option[Serving.RowGroup => Any] = (d.getMaxRepetitionLevel, t) match {
+              case (0, INT32) => Some(_.ints(name))
+              case (0, INT64) => Some(_.longs(name))
+              case (0, DOUBLE) => Some(_.doubles(name))
+              case (0, BOOLEAN) => Some(_.bools(name))
+              case (0, BINARY) => Some(_.strings(name, nullable = true))
+              case (1, FLOAT) => Some(_.floatLists(name, nullable = true))
+              case (1, INT64) => Some(_.longLists(name))
+              case _ => None
+            }
+            read.map(r => (s"$name (${if (d.getMaxRepetitionLevel == 1) s"list<$t>" else t})", d, r))
+          case _ => None
+        }
+      }
+    val names = columns.map(_._2.getPath.head)
+    var rows = 0L
+
+    /** Read and decompress every page of one column chunk, decoding none. */
+    def pagesOnly(pages: PageReadStore, d: ColumnDescriptor): Unit = {
+      val r = pages.getPageReader(d)
+      Option(r.readDictionaryPage()).foreach(_.getBytes.toByteBuffer)
+      var p = r.readPage()
+      while (p != null) {
+        p match {
+          case v1: DataPageV1 => v1.getBytes.toByteBuffer
+          case v2: DataPageV2 => v2.getData.toByteBuffer
+        }
+        p = r.readPage()
+      }
+    }
+
+    /** One pass over the dir: ns of list+open+footer (with close), of
+      * the chunk reads, and of each column's decode (with `floor`, of
+      * reading and decompressing its pages only). */
+    def pass(floor: Boolean): Array[Long] = {
+      val ns = new Array[Long](2 + columns.size)
+      var t = System.nanoTime()
+      def lap(i: Int): Unit = { val now = System.nanoTime(); ns(i) += now - t; t = now }
+      val listed = Serving.partFiles(conf, dir)
+      rows = 0L
+      listed.foreach { st =>
+        val (reader, schema) = Serving.openPart(conf, st, names)
+        val createdBy = reader.getFooter.getFileMetaData.getCreatedBy
+        lap(0)
+        try {
+          var pages = reader.readNextRowGroup()
+          lap(1)
+          while (pages != null) {
+            val rg = new Serving.RowGroup(st.getPath.toString, schema, pages, createdBy)
+            rows += rg.rows
+            columns.indices.foreach { i =>
+              if (floor) pagesOnly(pages, columns(i)._2) else columns(i)._3(rg)
+              lap(2 + i)
+            }
+            pages = reader.readNextRowGroup()
+            lap(1)
+          }
+        } finally { reader.close(); lap(0) }
+      }
+      ns
+    }
+
+    // decode and floor passes alternate, so drift hits both alike
+    (1 to reps).foreach { _ => pass(floor = false); pass(floor = true) }
+    val timed = Array.fill(reps)((pass(floor = false), pass(floor = true)))
+    def medianUs(xs: Array[Long]): Double = xs.sorted.apply(xs.length / 2) / 1e3 / files.length
+    val labels = Seq("list+open+footer", "chunk read") ++ columns.map(_._1)
+    println(f"[decode] $dir: ${files.length} part files, $rows rows, $reps reps; " +
+      "median us per part file: decode | read+decompress pages only")
+    labels.indices.foreach { i =>
+      println(f"[decode]   ${labels(i)}%-28s ${medianUs(timed.map(_._1(i)))}%10.1f | " +
+        f"${medianUs(timed.map(_._2(i)))}%10.1f")
+    }
+    println(f"[decode]   ${"total"}%-28s ${medianUs(timed.map(_._1.sum))}%10.1f | " +
+      f"${medianUs(timed.map(_._2.sum))}%10.1f")
   }
 }

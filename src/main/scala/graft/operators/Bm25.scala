@@ -242,7 +242,9 @@ object Bm25 {
     *   `postings/` — range-sorted on `term` via
     *     [[Sharding.exportSorted]]: each term lives in exactly one
     *     `range_id` directory and parquet row-group min/max stats are
-    *     tight, so a query's terms prune to a handful of files;
+    *     tight, so a query's terms prune to a handful of files; within
+    *     a term, rows are in `id` order, the order a serving probe
+    *     merges postings in, so its loader need not sort them;
     *   `manifest/` — the persisted zone map over the term ranges;
     *   `schema/` — a footer-bearing EMPTY postings file pinning the
     *     postings schema (incl. the id column's true type) for query
@@ -253,7 +255,7 @@ object Bm25 {
                                                     nRanges: Int,
                                                     base: String): Unit = {
     val manifest = Sharding.exportSorted(postings, "term", nRanges,
-      s"$base/postings")
+      s"$base/postings", thenBy = Seq("id"))
     manifest.write.mode("overwrite").parquet(s"$base/manifest")
     postings.filter(lit(false)).repartition(1)
       .write.mode("overwrite").parquet(s"$base/schema")
@@ -290,7 +292,7 @@ object Bm25 {
     *    deterministic rule that only ever WIDENS a range's manifest
     *    interval, so zone-map pruning stays correct;
     *  - each touched range merges existing + delta postings, re-sorted
-    *    on term (row-group stats stay tight); ALL merges stage before
+    *    on (term, id) (row-group stats stay tight); ALL merges stage before
     *    ANY publish (two-phase), publishes are aside-renames, and
     *    manifest/stats go through write-swap — a failure during the
     *    heavy staging phase leaves the live index byte-untouched, and
@@ -389,8 +391,9 @@ object Bm25 {
     val futures = touched.map { rid => Future {
       val staging = s"$base/postings/.append_r$rid"
       val existing = spark.read.parquet(s"$base/postings/range_id=$rid")
+      // the layout's (term, id) order (writeShardedPostingsLayout)
       val replacement = staged(rid, existing)
-        .sortWithinPartitions(col("term"))
+        .sortWithinPartitions(col("term"), col("id"))
       val obs = if (!collectStats) None
         else Some(new org.apache.spark.sql.Observation(s"stage_r$rid"))
       obs.fold(replacement)(o => replacement.observe(o,
@@ -570,7 +573,7 @@ object Bm25 {
     *    outside every manifest interval carry no postings and are
     *    dropped before they can touch a range;
     *  - each touched range rewrites to its SURVIVORS only (one id
-    *    anti-join against the victim-id set), re-sorted on term;
+    *    anti-join against the victim-id set), re-sorted on (term, id);
     *    untouched ranges are NOT rewritten (spec-pinned via file
     *    listings); staging/park/rollback is the append's two-phase
     *    protocol ([[stageRanges]]/[[publishRanges]]), so a failure

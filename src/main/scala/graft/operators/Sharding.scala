@@ -188,9 +188,11 @@ object Sharding {
     * guaranteed to describe exactly what landed on disk. Range
     * boundaries come from Spark's sampling range partitioner — the
     * LAYOUT may vary run to run, but the manifest invariants
-    * (disjoint, covering, sorted) always hold and are spec-gated. */
+    * (disjoint, covering, sorted) always hold and are spec-gated.
+    * `thenBy` orders the rows that share a `sortCol` value (it changes
+    * neither the ranges nor the manifest). */
   def exportSorted(docs: DataFrame, sortCol: String, nRanges: Int,
-                   path: String): DataFrame = {
+                   path: String, thenBy: Seq[String] = Nil): DataFrame = {
     val spark = docs.sparkSession
     val ranged = docs.repartitionByRange(nRanges, col(sortCol))
       .withColumn("range_id", spark_partition_id())
@@ -199,7 +201,7 @@ object Sharding {
       // ordering on the partition column and would otherwise insert its
       // OWN sort on range_id alone, whose spill-merge may reorder the
       // sortCol-sorted rows
-      .sortWithinPartitions(col("range_id"), col(sortCol))
+      .sortWithinPartitions((col("range_id") +: (sortCol +: thenBy).map(col)): _*)
     ranged.write.mode("overwrite").partitionBy("range_id").parquet(path)
     // read back with the explicit schema: empty input writes no parquet
     // files and schema inference would throw instead of returning the

@@ -4,16 +4,20 @@ import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.column.ColumnReader
-import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.column.page.PageReadStore
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.{CorruptDeltaByteArrays, HadoopReadOptions}
+import org.apache.parquet.bytes.{ByteBufferInputStream, BytesInput, BytesUtils}
+import org.apache.parquet.column.{ColumnDescriptor, Encoding, ValuesType}
+import org.apache.parquet.column.page.{DataPageV1, DataPageV2, PageReadStore, PageReader}
+import org.apache.parquet.column.values.{RequiresPreviousReader, ValuesReader}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
-import org.apache.parquet.schema.{GroupType, MessageType}
+import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 /** Driver-side LOW-LATENCY probe path over the persisted indexes — the
   * batch/serving split the reference embodies with its HNSW segments
@@ -21,16 +25,18 @@ import org.apache.parquet.schema.{GroupType, MessageType}
   * layouts ([[graft.operators.Ann.saveIvf]],
   * [[graft.operators.Bm25.buildPersistedIndex]]); a single query does
   * NOT need a Spark job to read them. These functions answer one query
-  * by reading the pruned partitions directly through parquet-mr's
-  * column readers — no session, no scheduler, no shuffle — with result
+  * by reading the pruned partitions directly: parquet-mr opens the
+  * files and reads their column chunks, and [[RowGroup]] decodes the
+  * pages in bulk — no session, no scheduler, no shuffle — with result
   * parity against the Spark operators spec-pinned (same kernels, same
   * tie-breaks).
   *
   * Latency: a warm `local[32]` Spark job floors at ~100-300 ms for the
-  * same probe; these direct reads answer uncached with a p50 of 7 ms
-  * (IVF), 11 ms (HNSW, BM25) and 21 ms (hybrid RRF) on the sf0.1
-  * fixture (perfbench serve_cold, 4-vCPU VM, 2 clients), most of it
-  * decoding the probed files' column pages. A resident server passes
+  * same probe; these direct reads answer uncached with a p50 of 6-7 ms
+  * (IVF), 10-13 ms (HNSW), 7-8 ms (BM25) and 13-16 ms (hybrid RRF) on
+  * the sf0.1 fixture (perfbench serve_cold traced runs, 4-vCPU VM, 2
+  * clients), most of it opening the probed part files and reading
+  * their footers and column chunks. A resident server passes
   * an [[IndexCache]] so repeat probes skip the reads entirely and run
   * only in-memory kernels: warm p50 of 0.06 ms (IVF), 0.26 ms (BM25)
   * and 0.44 ms (hybrid RRF) on the same fixture (perfbench serve_warm).
@@ -53,8 +59,8 @@ object Serving {
   private lazy val defaultConf: Configuration = new Configuration()
 
   /** Opt-in decoded-partition cache for a RESIDENT server: an uncached
-    * probe lists, opens and decodes every touched dir again (p50 7 ms
-    * for IVF to 21 ms for hybrid RRF on the sf0.1 fixture, perfbench
+    * probe lists, opens and decodes every touched dir again (p50 6-7 ms
+    * for IVF to 13-16 ms for hybrid RRF on the sf0.1 fixture, perfbench
     * serve_cold), so a server answering repeat probes against the
     * same index caches the DECODED partition content (centroids,
     * stats, manifest, per-cluster vectors, and per BM25 range a
@@ -114,66 +120,64 @@ object Serving {
 
   // ------------------------------------------------------ parquet decoding
 
-  /** Decode the `cols` columns of every row group of every part file
-    * under `dir` (sorted by name for determinism), handing each
-    * [[RowGroup]] to `f`; a missing dir decodes nothing. Each file
-    * opens with the caller's `conf` and the listing's status (no
-    * `Configuration` is built and no second status call is made per
-    * file), reads only the requested column chunks, and decodes their
-    * pages straight into primitive arrays — no record assembly. */
-  private[graft] def foreachRowGroup(conf: Configuration, dir: String, cols: String*)
-                                    (f: RowGroup => Unit): Unit = {
+  /** The `.parquet` part files directly under `dir`, sorted by name for
+    * determinism: one listing call, and a missing dir lists none. */
+  private[graft] def partFiles(conf: Configuration, dir: String): Array[FileStatus] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return
-    val files = fs.listStatus(p)
-      .filter(st => !st.isDirectory && st.getPath.getName.endsWith(".parquet"))
+    val listed =
+      try p.getFileSystem(conf).listStatus(p)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    listed.filter(st => !st.isDirectory && st.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
-    files.foreach { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
-        HadoopReadOptions.builder(conf, st.getPath).build())
+  }
+
+  /** Open one listed part file with the caller's `conf` and the
+    * listing's status (no `Configuration` is built and no second status
+    * call is made), reading only the top-level fields in `cols`; returns
+    * the reader and the requested schema. */
+  private[graft] def openPart(conf: Configuration, st: FileStatus,
+                              cols: Seq[String]): (ParquetFileReader, MessageType) = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+      HadoopReadOptions.builder(conf, st.getPath).build())
+    try {
+      val fileSchema = reader.getFooter.getFileMetaData.getSchema
+      val schema = new MessageType(fileSchema.getName,
+        fileSchema.getFields.asScala.filter(t => cols.contains(t.getName)).asJava)
+      reader.setRequestedSchema(schema)
+      (reader, schema)
+    } catch { case e: Throwable => reader.close(); throw e }
+  }
+
+  /** Decode the `cols` columns of every row group of every part file
+    * under `dir` ([[partFiles]]), handing each [[RowGroup]] to `f`; a
+    * missing dir decodes nothing. Each file reads only the requested
+    * column chunks ([[openPart]]), and their pages decode straight into
+    * primitive arrays — no record assembly. */
+  private[graft] def foreachRowGroup(conf: Configuration, dir: String, cols: String*)
+                                    (f: RowGroup => Unit): Unit =
+    partFiles(conf, dir).foreach { st =>
+      val (reader, schema) = openPart(conf, st, cols)
       try {
-        val meta = reader.getFooter.getFileMetaData
-        val fileSchema = meta.getSchema
-        val schema = new MessageType(fileSchema.getName,
-          fileSchema.getFields.asScala.filter(t => cols.contains(t.getName)).asJava)
-        reader.setRequestedSchema(schema)
+        val createdBy = reader.getFooter.getFileMetaData.getCreatedBy
         var pages = reader.readNextRowGroup()
         while (pages != null) {
-          f(new RowGroup(s"$dir/${st.getPath.getName}", schema, pages, meta.getCreatedBy))
+          f(new RowGroup(s"$dir/${st.getPath.getName}", schema, pages, createdBy))
           pages = reader.readNextRowGroup()
         }
       } finally reader.close()
     }
-  }
-
-  /** The converter tree [[ColumnReadStoreImpl]] requires for `schema`:
-    * values are read from the column readers directly, so it converts
-    * nothing (and declines dictionaries, which the readers then decode). */
-  private object NoopConverter {
-    private val leaf = new PrimitiveConverter {}
-    def apply(t: GroupType): GroupConverter = {
-      val children = t.getFields.asScala.map(f =>
-        if (f.isPrimitive) leaf else apply(f.asGroupType)).toArray[Converter]
-      new GroupConverter {
-        def getConverter(i: Int): Converter = children(i)
-        def start(): Unit = ()
-        def end(): Unit = ()
-      }
-    }
-  }
 
   /** The requested columns of ONE row group of `file`, each decoded on
-    * request into a primitive array of `rows` entries. Scalar accessors
-    * read a flat column; the list accessors read a Spark-written
-    * `array<…>` column by its one leaf (so list/element naming variants
-    * don't matter), a row starting at each repetition level 0. A null
-    * in a column read as required throws, naming file and column. */
+    * request into a primitive array of `rows` entries by one pass over
+    * its pages ([[Chunk]]); each column can be read once. Scalar
+    * accessors read a flat column; the list accessors read a
+    * Spark-written `array<…>` column by its one leaf (so list/element
+    * naming variants don't matter), a row starting at each repetition
+    * level 0. A null in a column read as required throws, naming file
+    * and column. */
   private[graft] final class RowGroup(file: String, schema: MessageType,
                                       pages: PageReadStore, createdBy: String) {
     val rows: Int = pages.getRowCount.toInt
-    private val store =
-      new ColumnReadStoreImpl(pages, NoopConverter(schema), schema, createdBy)
 
     def has(col: String): Boolean = schema.containsField(col)
 
@@ -181,87 +185,98 @@ object Serving {
     def nullIn(col: String): Nothing =
       throw new IllegalStateException(s"$file: null in required column '$col'")
 
-    private def leaf(col: String, repeated: Boolean): ColumnReader = {
+    private def leaf(col: String, repeated: Boolean, kind: PrimitiveTypeName): Chunk = {
       val d = schema.getColumns.asScala.filter(_.getPath.head == col)
       if (d.isEmpty) throw new IllegalStateException(s"$file: no column '$col'")
       require(d.size == 1 && d.head.getMaxRepetitionLevel == (if (repeated) 1 else 0),
         s"$file: column '$col' is not a ${if (repeated) "list" else "scalar"} column")
-      store.getColumnReader(d.head)
+      val held = d.head.getPrimitiveType.getPrimitiveTypeName
+      require(held == kind, s"$file: column '$col' holds $held, not $kind")
+      new Chunk(file, col, d.head, pages.getPageReader(d.head), createdBy)
     }
 
-    /** Walk a flat column: `value(i)` reads row i's value off `r`. */
-    private def scalar(col: String, r: ColumnReader, nullable: Boolean)
-                      (value: Int => Unit): Unit = {
-      val maxDef = r.getDescriptor.getMaxDefinitionLevel
+    /** Walk a flat column, slot i being row i: `read(i, n)` reads the
+      * values of rows i until i+n, a run at a time where the level runs
+      * show every row holds one; a null row is left to the caller's
+      * default (null), or throws unless `nullable`. */
+    private def scalar(col: String, c: Chunk, nullable: Boolean)
+                      (read: (Int, Int) => Unit): Unit = {
       var i = 0
       while (i < rows) {
-        if (r.getCurrentDefinitionLevel == maxDef) value(i)
-        else if (!nullable) nullIn(col)
-        r.consume(); i += 1
+        val n = c.values(rows - i)
+        if (n > 0) { read(i, n); i += n }
+        else {
+          if (c.next() == c.maxDef) read(i, 1) else if (!nullable) nullIn(col)
+          i += 1
+        }
       }
     }
 
     def ints(col: String): Array[Int] = {
-      val r = leaf(col, repeated = false); val out = new Array[Int](rows)
-      scalar(col, r, nullable = false)(i => out(i) = r.getInteger)
+      val c = leaf(col, repeated = false, PrimitiveTypeName.INT32)
+      val out = new Array[Int](rows)
+      scalar(col, c, nullable = false)(c.ints(out, _, _))
       out
     }
 
     def longs(col: String): Array[Long] = {
-      val r = leaf(col, repeated = false); val out = new Array[Long](rows)
-      scalar(col, r, nullable = false)(i => out(i) = r.getLong)
+      val c = leaf(col, repeated = false, PrimitiveTypeName.INT64)
+      val out = new Array[Long](rows)
+      scalar(col, c, nullable = false)(c.longs(out, _, _))
       out
     }
 
     def doubles(col: String): Array[Double] = {
-      val r = leaf(col, repeated = false); val out = new Array[Double](rows)
-      scalar(col, r, nullable = false)(i => out(i) = r.getDouble)
+      val c = leaf(col, repeated = false, PrimitiveTypeName.DOUBLE)
+      val out = new Array[Double](rows)
+      scalar(col, c, nullable = false)(c.doubles(out, _, _))
       out
     }
 
     def bools(col: String): Array[Boolean] = {
-      val r = leaf(col, repeated = false); val out = new Array[Boolean](rows)
-      scalar(col, r, nullable = false)(i => out(i) = r.getBoolean)
+      val c = leaf(col, repeated = false, PrimitiveTypeName.BOOLEAN)
+      val out = new Array[Boolean](rows)
+      scalar(col, c, nullable = false)(c.bools(out, _, _))
       out
     }
 
-    /** UTF-8 strings; with `nullable` a null row is `null`. A dictionary
-      * entry repeated on consecutive rows decodes once. */
+    /** UTF-8 strings; with `nullable` a null row is `null`. Rows holding
+      * one dictionary entry share its one decoded `String`. */
     def strings(col: String, nullable: Boolean = false): Array[String] = {
-      val r = leaf(col, repeated = false); val out = new Array[String](rows)
-      var last: Binary = null; var lastStr: String = null
-      scalar(col, r, nullable) { i =>
-        val b = r.getBinary
-        if (!(b eq last)) { last = b; lastStr = b.toStringUsingUTF8 }
-        out(i) = lastStr
-      }
+      val c = leaf(col, repeated = false, PrimitiveTypeName.BINARY)
+      val out = new Array[String](rows)
+      scalar(col, c, nullable)(c.strings(out, _, _))
       out
     }
 
-    /** Walk a one-level list column: `elem()` takes the reader's current
-      * element, `close(i)` ends non-null row i after its elements; a
-      * null list leaves row i to the caller's default (null). */
-    private def list(col: String, r: ColumnReader, nullable: Boolean)
-                    (elem: () => Unit)(close: Int => Unit): Unit = {
-      val path = r.getDescriptor.getPath
-      val maxDef = r.getDescriptor.getMaxDefinitionLevel
+    /** Walk a one-level list column: `elems(n)` takes the chunk's next
+      * `n` values into the open row, a run at a time where the level
+      * runs show they all continue it; `close(i)` ends non-null row i
+      * after its elements; a null list leaves row i to the caller's
+      * default (null). */
+    private def list(col: String, c: Chunk, nullable: Boolean)
+                    (elems: Int => Unit)(close: Int => Unit): Unit = {
+      val path = c.desc.getPath
       // the list itself is non-null from `listDef`, holds an element
       // slot from `slotDef`, and a non-null element at `maxDef`
       val listDef = schema.getMaxDefinitionLevel(path.head)
       val slotDef = schema.getMaxDefinitionLevel(path.take(2): _*)
-      val total = pages.getPageReader(r.getDescriptor).getTotalValueCount
       var row = -1; var open = false; var t = 0L
-      while (t < total) {
-        val d = r.getCurrentDefinitionLevel
-        if (r.getCurrentRepetitionLevel == 0) {
-          if (open) close(row)
-          row += 1
-          open = d >= listDef
-          if (!open && !nullable) nullIn(col)
+      while (t < c.total) {
+        val n = c.values(math.min(c.total - t, Int.MaxValue).toInt)
+        if (n > 0) { elems(n); t += n }
+        else {
+          val d = c.next()
+          if (c.rep == 0) {
+            if (open) close(row)
+            row += 1
+            open = d >= listDef
+            if (!open && !nullable) nullIn(col)
+          }
+          if (d == c.maxDef) elems(1)
+          else if (d >= slotDef) nullIn(s"$col.element")
+          t += 1
         }
-        if (d == maxDef) elem()
-        else if (d >= slotDef) nullIn(s"$col.element")
-        r.consume(); t += 1
       }
       if (open) close(row)
       if (row + 1 != rows)
@@ -273,24 +288,434 @@ object Serving {
 
     /** `list<float>` rows; with `nullable` a null list is `null`. */
     def floatLists(col: String, nullable: Boolean = false): Array[Array[Float]] = {
-      val r = leaf(col, repeated = true); val out = new Array[Array[Float]](rows)
+      val c = leaf(col, repeated = true, PrimitiveTypeName.FLOAT)
+      val out = new Array[Array[Float]](rows)
       var buf = new Array[Float](64); var n = 0
-      list(col, r, nullable) { () =>
-        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
-        buf(n) = r.getFloat; n += 1
+      list(col, c, nullable) { k =>
+        if (n + k > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, n + k))
+        c.floats(buf, n, k); n += k
       } { i => out(i) = java.util.Arrays.copyOf(buf, n); n = 0 }
       out
     }
 
     /** `list<bigint>` rows. */
     def longLists(col: String): Array[Array[Long]] = {
-      val r = leaf(col, repeated = true); val out = new Array[Array[Long]](rows)
+      val c = leaf(col, repeated = true, PrimitiveTypeName.INT64)
+      val out = new Array[Array[Long]](rows)
       var buf = new Array[Long](64); var n = 0
-      list(col, r, nullable = false) { () =>
-        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
-        buf(n) = r.getLong; n += 1
+      list(col, c, nullable = false) { k =>
+        if (n + k > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, n + k))
+        c.longs(buf, n, k); n += k
       } { i => out(i) = java.util.Arrays.copyOf(buf, n); n = 0 }
       out
+    }
+  }
+
+  /** One RLE/bit-packed hybrid stream of levels or dictionary ids over
+    * `b(start until end)` of a little-endian heap buffer, decoded a run
+    * at a time: a run header is a ULEB128 varint; an RLE run repeats
+    * one little-endian value of ⌈width/8⌉ bytes, a bit-packed run holds
+    * groups of 8 values of `width` bits each, least significant bit
+    * first, unpacked a group at a time. The last group of a page may
+    * pad past the values the page holds, and a writer may cut its bytes
+    * short; padding is never asked for, and bytes past `end` read as 0
+    * (or, where the buffer goes on, as whatever follows: only padding
+    * bits land there, and they are masked off). */
+  private final class Hybrid(b: ByteBuffer, start: Int, end: Int, width: Int) {
+    private val mask = if (width >= 32) -1L else (1L << width) - 1
+    private val group = new Array[Int](8)
+    private var g = 8         // the next value's index in `group`
+    private var pos = start   // the next run header or packed group
+    private var left = 0      // values left in the current run
+    private var packed = false
+    private var value = 0     // the RLE run's value
+
+    def next(): Int = {
+      while (left == 0) run()
+      left -= 1
+      if (!packed) value
+      else {
+        if (g == 8) unpack()
+        val v = group(g); g += 1; v
+      }
+    }
+
+    /** How many upcoming values are known to equal `v`: the rest of the
+      * current RLE run when it repeats `v`, else 0. A stream must hold
+      * another value when this is asked. */
+    def runOf(v: Int): Int = {
+      while (left == 0) run()
+      if (!packed && value == v) left else 0
+    }
+
+    /** Pass `n` values of the current run ([[runOf]] at most). */
+    def skip(n: Int): Unit = left -= n
+
+    /** The next `n` values into dst(0 until n), a run at a time. */
+    def read(dst: Array[Int], n: Int): Unit = {
+      var i = 0
+      while (i < n) {
+        while (left == 0) run()
+        val k = math.min(left, n - i)
+        if (!packed) java.util.Arrays.fill(dst, i, i + k, value)
+        else {
+          var j = i; var gg = g
+          while (j < i + k) {
+            if (gg == 8) { unpack(); gg = 0 }
+            dst(j) = group(gg); gg += 1; j += 1
+          }
+          g = gg
+        }
+        left -= k; i += k
+      }
+    }
+
+    private def byteAt(i: Int): Int = if (i < end) b.get(i) & 0xff else 0
+
+    private def run(): Unit = {
+      if (pos >= end) throw new IllegalStateException(
+        s"RLE/bit-packed stream ends after ${pos - start} bytes")
+      var h = 0; var shift = 0; var byte = 0x80
+      while ((byte & 0x80) != 0) {
+        byte = byteAt(pos); pos += 1
+        h |= (byte & 0x7f) << shift; shift += 7
+      }
+      packed = (h & 1) == 1
+      if (packed) { left = (h >>> 1) * 8; g = 8 }
+      else {
+        left = h >>> 1
+        val n = (width + 7) >>> 3
+        value = 0; var i = 0
+        while (i < n) { value |= byteAt(pos + i) << (i << 3); i += 1 }
+        pos += n
+      }
+    }
+
+    /** The next group of 8 packed values, `width` bytes: value i sits
+      * at bit i·width, so one 8-byte load holds it (width ≤ 32, shift
+      * ≤ 7); near the buffer's end the bytes are gathered one by one. */
+    private def unpack(): Unit = {
+      var i = 0
+      if (pos + width + 8 <= b.limit) {
+        while (i < 8) {
+          val at = i * width
+          group(i) = ((b.getLong(pos + (at >>> 3)) >>> (at & 7)) & mask).toInt
+          i += 1
+        }
+      } else {
+        var acc = 0L; var bits = 0; var j = pos
+        while (i < 8) {
+          while (bits < width) { acc |= byteAt(j).toLong << bits; j += 1; bits += 8 }
+          group(i) = (acc & mask).toInt
+          acc >>>= width; bits -= width; i += 1
+        }
+      }
+      pos += width
+      g = 0
+    }
+  }
+
+  private object Chunk {
+    // how the current page holds its values
+    final val Plain = 0
+    final val Dict = 1
+    final val Other = 2
+
+    /** A page section as a little-endian heap buffer indexed from 0
+      * (copied only when the section is not array-backed). */
+    def le(bytes: BytesInput): ByteBuffer = {
+      val b = bytes.toByteBuffer().slice()
+      val heap = if (b.hasArray) b else {
+        val a = new Array[Byte](b.remaining); b.get(a); ByteBuffer.wrap(a)
+      }
+      heap.order(ByteOrder.LITTLE_ENDIAN)
+    }
+
+    def utf8(b: ByteBuffer, at: Int, len: Int): String =
+      new String(b.array, b.arrayOffset + at, len, StandardCharsets.UTF_8)
+
+    def width(maxLevel: Int): Int = BytesUtils.getWidthFromMaxInt(maxLevel)
+  }
+
+  /** One column chunk, decoded straight off its page bytes, v1 or v2
+    * (the next data page is decoded once the current one is spent).
+    * The walk goes by value slots: [[values]] steps past a run of slots
+    * that the level runs show all hold a value, whose values the reader
+    * of the column's type then takes in bulk; [[next]] steps one slot
+    * and returns its definition level, with [[rep]] its repetition
+    * level, and a slot at [[maxDef]] carries one value for the reader.
+    * Levels and dictionary ids are [[Hybrid]] runs; the dictionary page
+    * is decoded once into a primitive array (a BINARY entry into one
+    * `String` that every row using it shares); PLAIN values are read
+    * off a little-endian buffer, dictionary values gathered through
+    * their ids, and any other value encoding (DELTA_*, RLE booleans,
+    * BYTE_STREAM_SPLIT) goes through parquet-mr's `ValuesReader`. */
+  private final class Chunk(file: String, col: String, val desc: ColumnDescriptor,
+                            pages: PageReader, createdBy: String) {
+    import Chunk._
+
+    val maxDef: Int = desc.getMaxDefinitionLevel
+    private val maxRep = desc.getMaxRepetitionLevel
+    val total: Long = pages.getTotalValueCount
+    var rep = 0
+
+    private val dict: AnyRef = {
+      val page = pages.readDictionaryPage()
+      if (page == null) null
+      else {
+        val enc = page.getEncoding
+        if (enc != Encoding.PLAIN && enc != Encoding.PLAIN_DICTIONARY)
+          throw new IllegalStateException(s"$file: column '$col' has a $enc dictionary")
+        val b = le(page.getBytes); val n = page.getDictionarySize
+        desc.getPrimitiveType.getPrimitiveTypeName match {
+          case PrimitiveTypeName.INT32 =>
+            val a = new Array[Int](n); var i = 0
+            while (i < n) { a(i) = b.getInt(i << 2); i += 1 }
+            a
+          case PrimitiveTypeName.INT64 =>
+            val a = new Array[Long](n); var i = 0
+            while (i < n) { a(i) = b.getLong(i << 3); i += 1 }
+            a
+          case PrimitiveTypeName.FLOAT =>
+            val a = new Array[Float](n); var i = 0
+            while (i < n) { a(i) = b.getFloat(i << 2); i += 1 }
+            a
+          case PrimitiveTypeName.DOUBLE =>
+            val a = new Array[Double](n); var i = 0
+            while (i < n) { a(i) = b.getDouble(i << 3); i += 1 }
+            a
+          case PrimitiveTypeName.BINARY =>
+            val a = new Array[String](n); var at = 0; var i = 0
+            while (i < n) {
+              val len = b.getInt(at); a(i) = utf8(b, at + 4, len)
+              at += 4 + len; i += 1
+            }
+            a
+          case t => throw new IllegalStateException(s"$file: column '$col' has a $t dictionary")
+        }
+      }
+    }
+
+    private var left = 0          // slots left in the current page
+    private var reps: Hybrid = null // null when every level is 0
+    private var defs: Hybrid = null
+    private var off = 0           // v1: where the page's next section starts
+    private var mode = Plain
+    private var buf: ByteBuffer = null // Plain: the page's values
+    private var at = 0                 // Plain: the next value's offset in `buf`
+    private var bit = 0                // Plain booleans: the next value's bit
+    private var ids: Hybrid = null     // Dict
+    private var idBatch: Array[Int] = null // Dict: ids read ahead of their gather
+    private var other: ValuesReader = null // Other
+
+    /** Step to the next slot; returns its definition level. */
+    def next(): Int = {
+      while (left == 0) page()
+      left -= 1
+      if (reps != null) rep = reps.next()
+      if (defs == null) maxDef else defs.next()
+    }
+
+    /** Step past the next run of up to `max` slots of the current page
+      * that the level runs show all hold a value and, in a list column,
+      * all continue the current row; returns its length, which is 0
+      * when the next slot is not known to be such a slot. The run's
+      * values are read next, in bulk. */
+    def values(max: Int): Int = {
+      while (left == 0) page()
+      var n = math.min(left, max)
+      if (reps != null) n = math.min(n, reps.runOf(maxRep))
+      if (n > 0 && defs != null) n = math.min(n, defs.runOf(maxDef))
+      if (n > 0) {
+        left -= n
+        if (reps != null) { reps.skip(n); rep = maxRep }
+        if (defs != null) defs.skip(n)
+      }
+      n
+    }
+
+    private def page(): Unit = {
+      val p = pages.readPage()
+      if (p == null)
+        throw new IllegalStateException(s"$file: column '$col' ends before its $total values")
+      left = p.getValueCount
+      p match {
+        case v1: DataPageV1 =>
+          // rep levels, def levels, values, back to back; an RLE level
+          // section is prefixed by its 4-byte length
+          val b = le(v1.getBytes)
+          off = 0
+          reps = v1Levels(b, v1.getRlEncoding, maxRep)
+          defs = v1Levels(b, v1.getDlEncoding, maxDef)
+          openValues(b, off, v1.getValueEncoding)
+        case v2: DataPageV2 =>
+          // levels are unprefixed RLE sections of their own
+          reps = if (maxRep == 0) null else v2Levels(v2.getRepetitionLevels, maxRep)
+          defs = if (maxDef == 0) null else v2Levels(v2.getDefinitionLevels, maxDef)
+          openValues(le(v2.getData), 0, v2.getDataEncoding)
+      }
+    }
+
+    private def v2Levels(bytes: BytesInput, max: Int): Hybrid = {
+      val b = le(bytes)
+      new Hybrid(b, 0, b.limit, width(max))
+    }
+
+    /** The v1 level section at `off` (none when `max` is 0), moving
+      * `off` past it. parquet-mr writes RLE levels (its footers name
+      * BIT_PACKED only for levels of max 0, which hold no bytes); a
+      * section in the deprecated BIT_PACKED encoding fails loudly. */
+    private def v1Levels(b: ByteBuffer, enc: Encoding, max: Int): Hybrid =
+      if (max == 0) null
+      else {
+        if (enc != Encoding.RLE)
+          throw new IllegalStateException(s"$file: column '$col' has $enc levels")
+        val len = b.getInt(off)
+        val levels = new Hybrid(b, off + 4, off + 4 + len, width(max))
+        off += 4 + len
+        levels
+      }
+
+    /** Set the page's value section at `start` up for the readers. */
+    private def openValues(b: ByteBuffer, start: Int, enc: Encoding): Unit =
+      if (enc.usesDictionary) {
+        if (dict == null) throw new IllegalStateException(
+          s"$file: column '$col' has $enc values but no dictionary page")
+        // one byte of id width, then the ids (an all-null page may hold neither)
+        val w = if (start < b.limit) b.get(start) & 0xff else 0
+        ids = new Hybrid(b, start + 1, b.limit, w)
+        if (idBatch == null) idBatch = new Array[Int](math.min(total, 1024L).toInt)
+        mode = Dict
+      } else if (enc == Encoding.PLAIN) {
+        buf = b; at = start; bit = 0
+        mode = Plain
+      } else {
+        val prev = other
+        other = enc.getValuesReader(desc, ValuesType.VALUES)
+        // parquet-mr's fix for DELTA_BYTE_ARRAY files whose early
+        // writers carried the previous value across pages
+        other match {
+          case r: RequiresPreviousReader
+              if prev != null && CorruptDeltaByteArrays.requiresSequentialReads(createdBy, enc) =>
+            r.setPreviousReader(prev)
+          case _ =>
+        }
+        other.initFromPage(left, ByteBufferInputStream.wrap(b.duplicate().position(start)))
+        mode = Other
+      }
+
+    // the value readers, one per physical type: each reads the next
+    // `n` values into dst(to until to + n)
+
+    def ints(dst: Array[Int], to: Int, n: Int): Unit = {
+      var i = to; val end = to + n
+      mode match {
+        case Plain =>
+          var p = at
+          while (i < end) { dst(i) = buf.getInt(p); p += 4; i += 1 }
+          at = p
+        case Dict =>
+          val d = dict.asInstanceOf[Array[Int]]
+          while (i < end) {
+            val k = math.min(end - i, idBatch.length); ids.read(idBatch, k)
+            var j = 0
+            while (j < k) { dst(i + j) = d(idBatch(j)); j += 1 }
+            i += k
+          }
+        case _ => while (i < end) { dst(i) = other.readInteger(); i += 1 }
+      }
+    }
+
+    def longs(dst: Array[Long], to: Int, n: Int): Unit = {
+      var i = to; val end = to + n
+      mode match {
+        case Plain =>
+          var p = at
+          while (i < end) { dst(i) = buf.getLong(p); p += 8; i += 1 }
+          at = p
+        case Dict =>
+          val d = dict.asInstanceOf[Array[Long]]
+          while (i < end) {
+            val k = math.min(end - i, idBatch.length); ids.read(idBatch, k)
+            var j = 0
+            while (j < k) { dst(i + j) = d(idBatch(j)); j += 1 }
+            i += k
+          }
+        case _ => while (i < end) { dst(i) = other.readLong(); i += 1 }
+      }
+    }
+
+    def floats(dst: Array[Float], to: Int, n: Int): Unit = {
+      var i = to; val end = to + n
+      mode match {
+        case Plain =>
+          var p = at
+          while (i < end) { dst(i) = buf.getFloat(p); p += 4; i += 1 }
+          at = p
+        case Dict =>
+          val d = dict.asInstanceOf[Array[Float]]
+          while (i < end) {
+            val k = math.min(end - i, idBatch.length); ids.read(idBatch, k)
+            var j = 0
+            while (j < k) { dst(i + j) = d(idBatch(j)); j += 1 }
+            i += k
+          }
+        case _ => while (i < end) { dst(i) = other.readFloat(); i += 1 }
+      }
+    }
+
+    def doubles(dst: Array[Double], to: Int, n: Int): Unit = {
+      var i = to; val end = to + n
+      mode match {
+        case Plain =>
+          var p = at
+          while (i < end) { dst(i) = buf.getDouble(p); p += 8; i += 1 }
+          at = p
+        case Dict =>
+          val d = dict.asInstanceOf[Array[Double]]
+          while (i < end) {
+            val k = math.min(end - i, idBatch.length); ids.read(idBatch, k)
+            var j = 0
+            while (j < k) { dst(i + j) = d(idBatch(j)); j += 1 }
+            i += k
+          }
+        case _ => while (i < end) { dst(i) = other.readDouble(); i += 1 }
+      }
+    }
+
+    /** PLAIN booleans are bit-packed, least significant bit first. */
+    def bools(dst: Array[Boolean], to: Int, n: Int): Unit = {
+      var i = to; val end = to + n
+      mode match {
+        case Plain =>
+          while (i < end) {
+            dst(i) = ((buf.get(at + (bit >>> 3)) >> (bit & 7)) & 1) != 0
+            bit += 1; i += 1
+          }
+        case Dict =>
+          throw new IllegalStateException(s"$file: column '$col' has dictionary booleans")
+        case _ => while (i < end) { dst(i) = other.readBoolean(); i += 1 }
+      }
+    }
+
+    def strings(dst: Array[String], to: Int, n: Int): Unit = {
+      var i = to; val end = to + n
+      mode match {
+        case Plain =>
+          while (i < end) {
+            val len = buf.getInt(at); dst(i) = utf8(buf, at + 4, len)
+            at += 4 + len; i += 1
+          }
+        case Dict =>
+          val d = dict.asInstanceOf[Array[String]]
+          while (i < end) {
+            val k = math.min(end - i, idBatch.length); ids.read(idBatch, k)
+            var j = 0
+            while (j < k) { dst(i + j) = d(idBatch(j)); j += 1 }
+            i += k
+          }
+        case _ => while (i < end) { dst(i) = other.readBytes().toStringUsingUTF8; i += 1 }
+      }
     }
   }
 
@@ -312,15 +737,10 @@ object Serving {
     * probes (IVF/BM25) keep the documented explicit-clear contract:
     * their layouts are partition trees, not single republished dirs. */
   private def freshKey(conf: Configuration, dir: String): String = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) dir
-    else {
-      val parts = fs.listStatus(p).filter(st => !st.isDirectory &&
-        st.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-      s"$dir|" + parts.map(st =>
-        s"${st.getPath.getName}:${st.getModificationTime}:${st.getLen}").mkString(",")
-    }
+    val parts = partFiles(conf, dir)
+    if (parts.isEmpty) dir
+    else s"$dir|" + parts.map(st =>
+      s"${st.getPath.getName}:${st.getModificationTime}:${st.getLen}").mkString(",")
   }
 
   // ------------------------------------------------------------ IVF probe
@@ -816,7 +1236,10 @@ object Serving {
                                    val tf: Array[Long])
 
   /** Growable [[TermPostings]] columns, filled in file order; `result`
-    * sorts by id only when the file order was not already ascending. */
+    * sorts by id only when the file order was not already ascending —
+    * a range written in (term, id) order never needs it, but a layout
+    * written before that order, or a range an append staged as several
+    * part files, does. */
   private final class TermPostingsBuilder {
     private var ids = new Array[Long](64)
     private var dl = new Array[Long](64)
@@ -886,7 +1309,8 @@ object Serving {
     val dir = s"$base/postings/range_id=$rid"
     cache.getOrLoad(dir) {
       val byTerm = mutable.HashMap.empty[String, TermPostingsBuilder]
-      // rows arrive grouped by term (the range export sorts by term),
+      // rows arrive grouped by term (the range export sorts by term,
+      // then id, so a term's ids usually arrive ascending already),
       // so the map is consulted once per term run, not once per row
       var term: String = null
       var col: TermPostingsBuilder = null

@@ -228,6 +228,54 @@ class HybridSearchSpec extends SparkSpec {
     } finally { rm(appendDir); rm(rebuildDir) }
   }
 
+  test("range-sharded layouts write every range file in (term, id) order: " +
+    "BM25 and positional builds, a BM25 append and a delete") {
+    import graft.operators.Positional
+    val docs = Tables.documents(spark, sfDir).limit(200).select($"doc_id", $"text")
+    val conf = spark.sparkContext.hadoopConfiguration
+    /** Check every range part file of `dir` in file order; returns the
+      * rows checked. */
+    def assertTermIdOrder(dir: String): Long = {
+      import graft.serving.Serving
+      var rows = 0L
+      for (range <- new java.io.File(s"$dir/postings").listFiles()
+           if range.getName.startsWith("range_id=");
+           st <- Serving.partFiles(conf, range.getPath)) {
+        val (reader, schema) = Serving.openPart(conf, st, Seq("term", "id"))
+        try {
+          var last: (String, Long) = null
+          var pages = reader.readNextRowGroup()
+          while (pages != null) {
+            val rg = new Serving.RowGroup(st.getPath.toString, schema, pages,
+              reader.getFooter.getFileMetaData.getCreatedBy)
+            val terms = rg.strings("term"); val ids = rg.longs("id")
+            for (i <- 0 until rg.rows) {
+              val cur = (terms(i), ids(i))
+              assert(last == null || Ordering[(String, Long)].lteq(last, cur),
+                s"${st.getPath}: $last before $cur")
+              last = cur
+            }
+            rows += rg.rows
+            pages = reader.readNextRowGroup()
+          }
+        } finally reader.close()
+      }
+      rows
+    }
+    withTempDir("term-id-order") { tmp =>
+      val bm = s"${tmp.getPath}/bm25"; val pos = s"${tmp.getPath}/pos"
+      Bm25.buildPersistedIndex(docs.filter($"doc_id" % 10 =!= 0), "doc_id", "text", 4, bm)
+      Positional.buildPersistedIndex(docs, "doc_id", "text", 4, pos)
+      def postings(dir: String) = spark.read.parquet(s"$dir/postings").count()
+      assert(assertTermIdOrder(bm) === postings(bm))
+      assert(assertTermIdOrder(pos) === postings(pos))
+      Bm25.appendToPersistedIndex(docs.filter($"doc_id" % 10 === 0), "doc_id", "text", bm)
+      assert(assertTermIdOrder(bm) === postings(bm))
+      Bm25.deleteFromPersistedIndex(docs.filter($"doc_id" % 7 === 0), "doc_id", "text", bm)
+      assert(assertTermIdOrder(bm) === postings(bm))
+    }
+  }
+
   test("deleteFromPersistedIndex: delete == rebuild over survivors; " +
     "untouched ranges not rewritten; emptied range and full-delete safe") {
     import graft.operators.Bm25

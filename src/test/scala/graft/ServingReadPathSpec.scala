@@ -5,15 +5,16 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path}
 
 import graft.operators.Ann
 import graft.queries.{AnnQueries, HybridQueries, VectorQueries}
 import graft.serving.Serving
 
-/** A local file system that records every file it opens: the path,
+/** A local file system that records every file it opens (the path,
   * the conf the instance was created with, and whether the stream was
-  * closed. Instances are uncached (`fs.file.impl.disable.cache`), so
+  * closed), every dir it lists and every path it is asked whether it
+  * exists. Instances are uncached (`fs.file.impl.disable.cache`), so
   * the record is global. */
 class OpenCountingFileSystem extends LocalFileSystem {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
@@ -23,6 +24,16 @@ class OpenCountingFileSystem extends LocalFileSystem {
       override def close(): Unit = try super.close() finally rec.closed = true
     }
   }
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    OpenCountingFileSystem.listed.add(f.toUri.getPath)
+    super.listStatus(f)
+  }
+
+  override def exists(f: Path): Boolean = {
+    OpenCountingFileSystem.existsAsked.add(f.toUri.getPath)
+    super.exists(f)
+  }
 }
 
 object OpenCountingFileSystem {
@@ -30,6 +41,8 @@ object OpenCountingFileSystem {
     @volatile var closed = false
   }
   val opened = new ConcurrentLinkedQueue[Opened]()
+  val listed = new ConcurrentLinkedQueue[String]()
+  val existsAsked = new ConcurrentLinkedQueue[String]()
 
   /** A conf whose `file:` scheme is this file system, uncached. */
   def conf(): Configuration = {
@@ -39,16 +52,18 @@ object OpenCountingFileSystem {
     c
   }
 
-  /** The files `body` opens, in open order. */
+  /** The files `body` opens, in open order ([[listed]] and
+    * [[existsAsked]] then hold its listings and existence checks). */
   def opens(body: => Any): Seq[Opened] = {
-    opened.clear()
+    opened.clear(); listed.clear(); existsAsked.clear()
     body
     opened.asScala.toSeq
   }
 }
 
 /** The serving read path opens exactly the pruned part files, with the
-  * caller's Hadoop conf, and closes every stream it opens. */
+  * caller's Hadoop conf, lists each read dir once with no existence
+  * check, and closes every stream it opens. */
 class ServingReadPathSpec extends SparkSpec {
   import OpenCountingFileSystem.opens
   import spark.implicits._
@@ -79,6 +94,26 @@ class ServingReadPathSpec extends SparkSpec {
       assertOpened(got, conf, partFiles(s"$path/centroids") ++
         probed.flatMap(c => partFiles(s"$path/corpus/ivf_cluster=$c")))
     }
+  }
+
+  test("uncached searchIvf lists each read dir once and checks no existence; " +
+    "a missing dir decodes nothing") {
+    import OpenCountingFileSystem.{existsAsked, listed}
+    val path = AnnQueries.persistedIvfPath(spark, sfDir)
+    val conf = OpenCountingFileSystem.conf()
+    val q = VectorQueries.qvec(spark, sfDir, 0).toArray
+    val probed = Ann.rankProbes(Ann.loadIvf(spark, path).centroids, q, 4)
+    opens { Serving.searchIvf(path, q, 10, nprobe = 4, conf = conf) }
+    assert(listed.asScala.toSeq.sorted ===
+      (s"$path/centroids" +: probed.map(c => s"$path/corpus/ivf_cluster=$c")).sorted)
+    assert(existsAsked.isEmpty, existsAsked.asScala.mkString(", "))
+
+    val missing = s"$path/corpus/ivf_cluster=99999"
+    var groups = 0
+    val got = opens { Serving.foreachRowGroup(conf, missing, "vec_id")(_ => groups += 1) }
+    assert(groups === 0 && got.isEmpty)
+    assert(listed.asScala.toSeq === Seq(missing))
+    assert(existsAsked.isEmpty, existsAsked.asScala.mkString(", "))
   }
 
   test("uncached searchBm25 opens only stats, manifest and the pruned range dirs") {
