@@ -463,17 +463,20 @@ object Ann {
     * f32 Euclidean distance to each centroid (sqrt-rounded — see the
     * probe comment in [[searchIvf]]), ties to the lower cluster id. */
   private[graft] def rankProbes(centroids: Array[Array[Float]],
-                                q: Array[Float], nprobe: Int): IndexedSeq[Int] =
-    centroids.zipWithIndex
-      .map { case (c, i) =>
-        require(c.length == q.length,
-          s"rankProbes: query dim ${q.length} != centroid dim ${c.length}")
-        // THE f32 L2 kernel (one owner — PartitionedTopK.l2F32, the
-        // stated bit-parity kernel); an inline copy here could drift
-        (i, PartitionedTopK.l2F32(c, q))
-      }
-      .sortBy { case (i, dist) => (dist, i) }
-      .take(nprobe).map(_._1).toIndexedSeq
+                                q: Array[Float], nprobe: Int): IndexedSeq[Int] = {
+    val top = new TopK[AnyRef](nprobe)
+    var i = 0
+    while (i < centroids.length) {
+      val c = centroids(i)
+      require(c.length == q.length,
+        s"rankProbes: query dim ${q.length} != centroid dim ${c.length}")
+      // THE f32 L2 kernel (one owner — PartitionedTopK.l2F32, the
+      // stated bit-parity kernel); an inline copy here could drift
+      top.offer(TopK.asc(PartitionedTopK.l2F32(c, q).toDouble), i)
+      i += 1
+    }
+    (0 until top.size).map(r => top.id(r).toInt)
+  }
 
   def searchIvf(index: IvfIndex, queryVec: Seq[Float], k: Int, nprobe: Int,
                 metric: VectorSearch.Metric = VectorSearch.Euclidean,
@@ -805,7 +808,7 @@ object Ann {
     // rule — task memory = max cell population, which the
     // corpus-proportional cell count bounds). Distances are the
     // PartitionedTopK f32 kernel — bit-equal to `list_distance` — and
-    // heap order (f32 dist, nbr id) widens monotonically to the
+    // the cut order (f32 dist, nbr id) widens monotonically to the
     // (double, id) rank order the oracle replays.
     val partial = clean
       .repartition(col("__cell"))
@@ -828,14 +831,14 @@ object Ann {
               out =
                 if (n < 2) Iterator.empty
                 else (0 until n).iterator.flatMap { i =>
-                  // ONE heap kernel shared with knnGraphRefined's seed
+                  // ONE cut kernel shared with knnGraphRefined's seed
                   // (topKAgainst) — tie-break or kernel changes cannot
                   // fork the two graph operators
-                  topKAgainst(ids(i), vecs(i), ids, vecs, k)
-                    .iterator.zipWithIndex.map { case ((dist, nbr), rank) =>
-                      org.apache.spark.sql.Row(ids(i), nbr, dist.toDouble,
-                        (rank + 1).toLong)
-                    }
+                  val top = topKAgainst(ids(i), vecs(i), ids, vecs, k)
+                  (0 until top.size).iterator.map { r =>
+                    org.apache.spark.sql.Row(ids(i), top.id(r),
+                      TopK.ascValue(top.key(r)), (r + 1).toLong)
+                  }
                 }
             }
           }
@@ -895,34 +898,13 @@ object Ann {
       .limit(n)
   }
 
-  /** A vector's `p` nearest IVF cells by the f32 kernel, (dist,
-    * cell id) tie-broken — the probe ranking DuckDB replays as
-    * `row_number() OVER (ORDER BY CAST(list_distance(centroid, v) AS
-    * DOUBLE), cluster_id)`. Bounded p-heap over the k-bounded centroid
-    * table; rides the closure, no shuffle. */
-  private[operators] def topProbeCells(cents: Array[Array[Float]],
-                                       v: Seq[Float], p: Int): Array[Int] = {
-    val va = v.toArray
-    val ord: Ordering[(Float, Int)] =
-      Ordering.Tuple2(Ordering.Float.TotalOrdering, Ordering.Int)
-    val h = scala.collection.mutable.PriorityQueue.empty[(Float, Int)](ord)
-    var c = 0
-    while (c < cents.length) {
-      val e = (PartitionedTopK.l2F32(va, cents(c)), c)
-      if (h.size < p) h.enqueue(e)
-      else if (ord.lt(e, h.head)) { h.dequeue(); h.enqueue(e) }
-      c += 1
-    }
-    h.toArray.sorted(ord).map(_._2)
-  }
-
   /** Boundary-recall kNN-graph: multi-probe seed + NN-descent
     * refinement — the fix for [[knnGraph]]'s structural blind spot
     * (co-cell only: a vector's true nearest neighbor in an adjacent
     * IVF cell is invisible; measured recall@10 on the fixture is 0.30).
     *
     *  - SEED: each vector probes its `probes` nearest cells
-    *    ([[topProbeCells]], f32 + cell-id tie-break) and ranks the
+    *    ([[rankProbes]], f32 + cell-id tie-break) and ranks the
     *    probed cells' HOME members (the `ivf_cluster` assignment —
     *    what the oracle's asg handoff carries) to an internal width
     *    `workK ≥ k`. Edges still compute cell-locally: candidates are
@@ -951,15 +933,6 @@ object Ann {
     * (src, nbr) dedup — all linear in n with workK² constants, no
     * corpus broadcast, no driver materialization. Output contract =
     * [[knnGraph]]: (src_id, nbr_id, dist, rn ≤ k). */
-  /** Algorithm fingerprint of [[knnGraphRefined]], owned HERE so a
-    * construction change cannot be committed without the persisted-
-    * artifact cache keys seeing it: every BuildOnce key that caches a
-    * refined graph MUST interpolate this constant (AnnQueries
-    * .refinedGraphPath does). Bump on ANY change to the candidate
-    * generation, refine rounds semantics, tie-breaks, or output
-    * contract below. */
-  val KnnGraphRefinedAlgoVersion = 1
-
   def knnGraphRefined(index: IvfIndex, k: Int, probes: Int = 2,
                       refineRounds: Int = 2, workK: Int = 0): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -981,7 +954,8 @@ object Ann {
       s"knnGraphRefined id column must be long, got $idType")
 
     val cents = index.centroids
-    val probeUdf = udf { (v: Seq[Float]) => topProbeCells(cents, v, probes) }
+    val probeUdf = udf { (v: Seq[Float]) =>
+      rankProbes(cents, v.toArray, probes).toArray }
     // home members (candidates) sort BEFORE queries inside each cell:
     // buffer candidates once, stream every query row against them
     val homes = clean.select(col("__cell"), col("__id"), col("__emb"),
@@ -1020,11 +994,12 @@ object Ann {
               if (buf.hasNext && buf.head.getInt(0) == curCell) {
                 val r = buf.next() // exactly one query row per refill
                 val qid = r.getLong(1)
-                out = topKAgainst(qid, r.getSeq[Float](2).toArray,
+                val top = topKAgainst(qid, r.getSeq[Float](2).toArray,
                     ids, vecs, kk)
-                  .iterator.map { case (dist, nbr) =>
-                    org.apache.spark.sql.Row(qid, nbr, dist.toDouble)
-                  }
+                out = (0 until top.size).iterator.map { i =>
+                  org.apache.spark.sql.Row(qid, top.id(i),
+                    TopK.ascValue(top.key(i)))
+                }
               }
             }
           }
@@ -1033,8 +1008,8 @@ object Ann {
         }
       }
     // seed contract: per src, rank ≤ workK over the UNION of its
-    // probed cells' members — per-cell heaps emit ≤ probes·workK rows
-    // per src, one fused repartition+heap merges them ([[topKPerSrc]]:
+    // probed cells' members — per-cell cuts emit ≤ probes·workK rows
+    // per src, one fused repartition+cut merges them ([[topKPerSrc]]:
     // dedup + rank in ONE exchange, no agg + window pair). Checkpoint:
     // each round consumes `edges` twice.
     var edges = Dedup.localCheckpoint(topKPerSrc(
@@ -1111,19 +1086,18 @@ object Ann {
     * stream: ONE repartition-by-src exchange sorted on (src, nbr), so
     * duplicate (src, nbr) rows — which carry identical deterministic
     * dists — arrive ADJACENT and dedup with a last-nbr cursor, no
-    * per-src set. Replaces the groupBy(src, nbr) agg + window rank
+    * per-src set; the per-src cut is [[TopK]] on (dist, nbr).
+    * Replaces the groupBy(src, nbr) agg + window rank
     * pair, which paid two exchanges of the same candidate stream —
     * at the 100× fixture the candidate stream is the round's dominant
     * volume, so the saved exchange is the round's wall-clock lever.
-    * Per-src task memory = the kk-heap ALONE: a hub src whose
+    * Per-src task memory = the kk-cut ALONE: a hub src whose
     * reverse-kNN degree makes its candidate list O(n·workK) streams
     * through the sort-merge without ever materializing (the
     * seen-set form this replaced grew O(candidates) on exactly that
     * src). */
   private def topKPerSrc(df: DataFrame, kk: Int): DataFrame = {
     val spark = df.sparkSession
-    val ord: Ordering[(Double, Long)] =
-      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
     val rdd = df.repartition(col("src"))
       .sortWithinPartitions(col("src"), col("nbr"))
       .rdd.mapPartitions { rows =>
@@ -1135,20 +1109,17 @@ object Ann {
               val src = buf.head.getLong(0)
               var lastNbr = Long.MinValue
               var first = true
-              val h = scala.collection.mutable.PriorityQueue
-                .empty[(Double, Long)](ord)
+              val top = new TopK[AnyRef](kk)
               while (buf.hasNext && buf.head.getLong(0) == src) {
                 val r = buf.next()
                 val nbr = r.getLong(1)
                 if (first || nbr != lastNbr) {
                   first = false; lastNbr = nbr
-                  val e = (r.getDouble(2), nbr)
-                  if (h.size < kk) h.enqueue(e)
-                  else if (ord.lt(e, h.head)) { h.dequeue(); h.enqueue(e) }
+                  top.offer(TopK.asc(r.getDouble(2)), nbr)
                 }
               }
-              cur = h.toArray.sorted(ord).iterator.map { case (d, nbr) =>
-                org.apache.spark.sql.Row(src, nbr, d)
+              cur = (0 until top.size).iterator.map { i =>
+                org.apache.spark.sql.Row(src, top.id(i), TopK.ascValue(top.key(i)))
               }
             }
           def hasNext: Boolean = { refill(); cur.hasNext }
@@ -1166,67 +1137,44 @@ object Ann {
     org.apache.spark.sql.types.StructField("dist",
       org.apache.spark.sql.types.DoubleType, nullable = false)))
 
-  /** Heap top-`kk` of one query against a buffered candidate list —
-    * sorted (f32 dist, id) pairs, self-excluded by id. The ONE inner
-    * kernel shared by [[knnGraph]] and [[knnGraphRefined]]'s seed
-    * (returns raw pairs so each call site builds its output Row
+  /** Top-`kk` of one query against a buffered candidate list —
+    * (f32 dist, id) pairs in ascending order, self-excluded by id; a
+    * kept pair's dist is `TopK.ascValue(key)`. The ONE inner kernel
+    * shared by [[knnGraph]] and [[knnGraphRefined]]'s seed (returns
+    * the cut, not rows, so each call site builds its output Row
     * exactly once — this loop is the graph family's measured hot
-    * path). */
+    * path).
+    *
+    * Nothing is allocated per candidate: the boxed tuple heap this
+    * replaced measured ~4300 cycles per CANDIDATE at the 100× probe
+    * (2e8 candidates → the whole knn_graph wall), almost all of it
+    * allocation + megamorphic Ordering calls for entries that lose
+    * anyway. [[TopK]] keeps primitive keys, and once it is full the
+    * worst kept distance feeds the kernel's monotone early exit
+    * ([[PartitionedTopK.l2F32Bounded]]), so most losers abort their
+    * distance loop a fraction in. The key is the widened f32 dist in
+    * `Float.compare` order — the same total order as
+    * Ordering.Float.TotalOrdering — with the (dist, id) ascending
+    * tie-break, and every KEPT distance comes from the identical
+    * accumulation order as l2F32. */
   private def topKAgainst(qid: Long, qv: Array[Float],
                           ids: scala.collection.mutable.ArrayBuffer[Long],
                           vecs: scala.collection.mutable.ArrayBuffer[Array[Float]],
-                          kk: Int): Array[(Float, Long)] = {
-    // primitive bounded selection, not a boxed PriorityQueue: the
-    // tuple-allocating heap measured ~4300 cycles per CANDIDATE at the
-    // 100× probe (2e8 candidates → the whole knn_graph wall), almost
-    // all of it allocation + megamorphic Ordering calls for entries
-    // that lose anyway. Parallel primitive arrays + one tracked worst
-    // slot allocate NOTHING per candidate, and once the selection is
-    // full the worst kept distance feeds the kernel's monotone early
-    // exit ([[PartitionedTopK.l2F32Bounded]]), so most losers abort
-    // their distance loop a fraction in. Semantics are unchanged and
-    // bit-exact: comparisons are java.lang.Float.compare — the same
-    // total order as Ordering.Float.TotalOrdering — with the same
-    // (dist, id) ascending tie-break, and every KEPT distance comes
-    // from the identical accumulation order as l2F32.
-    val dists = new Array[Float](kk)
-    val nbrs = new Array[Long](kk)
-    var size = 0
-    var worst = 0 // index of the worst kept entry, valid once full
-    def recomputeWorst(): Unit = {
-      var w = 0
-      var i = 1
-      while (i < size) {
-        val c = java.lang.Float.compare(dists(i), dists(w))
-        if (c > 0 || (c == 0 && nbrs(i) > nbrs(w))) w = i
-        i += 1
-      }
-      worst = w
-    }
+                          kk: Int): TopK[AnyRef] = {
+    val top = new TopK[AnyRef](kk)
+    var bound = Float.PositiveInfinity
     var j = 0
     while (j < ids.length) {
-      if (ids(j) != qid) {
-        val bound = if (size == kk) dists(worst) else Float.PositiveInfinity
-        val dv = PartitionedTopK.l2F32Bounded(qv, vecs(j), bound)
-        if (size < kk) {
-          dists(size) = dv; nbrs(size) = ids(j); size += 1
-          if (size == kk) recomputeWorst()
-        } else {
-          val c = java.lang.Float.compare(dv, dists(worst))
-          if (c < 0 || (c == 0 && ids(j) < nbrs(worst))) {
-            dists(worst) = dv; nbrs(worst) = ids(j)
-            recomputeWorst()
-          }
+      val id = ids(j)
+      if (id != qid) {
+        val key = TopK.asc(PartitionedTopK.l2F32Bounded(qv, vecs(j), bound).toDouble)
+        if (top.admits(key, id)) {
+          top.add(key, id, null)
+          if (top.full) bound = TopK.ascValue(top.worstKey).toFloat
         }
       }
       j += 1
     }
-    val out = new Array[(Float, Long)](size)
-    var i = 0
-    while (i < size) { out(i) = (dists(i), nbrs(i)); i += 1 }
-    val ord: Ordering[(Float, Long)] =
-      Ordering.Tuple2(Ordering.Float.TotalOrdering, Ordering.Long)
-    scala.util.Sorting.quickSort(out)(ord)
-    out
+    top
   }
 }

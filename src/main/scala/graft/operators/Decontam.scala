@@ -23,13 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Decontam {
 
-  /** Version of the [[overlapReport]] semantics (tokenization, gram
-    * join, minShared rule). Interpolated into the shared build-once
-    * cache key (`CurationQueries.overlapReportPath`) — bump on ANY
-    * change to the report's output contract so warm machines rebuild
-    * instead of serving stale reports. */
-  val OverlapAlgoVersion = 1
-
   /** Overlapping word n-grams of `text` as space-joined strings;
     * empty array when the document has fewer than `n` tokens. */
   def wordGrams(text: Column, n: Int): Column = {

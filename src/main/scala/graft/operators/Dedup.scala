@@ -1025,13 +1025,6 @@ object Dedup {
     occ
   }
 
-  /** Algorithm fingerprint of [[duplicatedSpanFlags]] (tokenization,
-    * window/fingerprint scheme, keeper rule): every persisted-artifact
-    * cache key for a flags frame MUST interpolate this constant —
-    * bump on any change, or a warm machine serves a stale artifact to
-    * the two span gates (the [[Ann.KnnGraphRefinedAlgoVersion]] rule). */
-  val DuplicatedSpanAlgoVersion = 1
-
   /** Occurrences with their duplicate flag — the shared core of the
     * profile and trim entry points: (idCol, pos, __dup) where __dup
     * marks a NON-canonical occurrence of a repeated fingerprint.

@@ -132,15 +132,15 @@ object Hnsw {
       case None    => false
     }
 
-    /** The EuclideanDistF32 kernel: f32 accumulation, double-rounded
-      * sqrt — bit-equal to the codegen'd expression and DuckDB
-      * `list_distance`. */
-    private def dist(a: Array[Float], b: Array[Float]): Float = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0f; var i = 0
-      while (i < n) { val d = a(i) - b(i); acc += d * d; i += 1 }
-      math.sqrt(acc.toDouble).toFloat
-    }
+    /** Distances are THE f32 L2 kernel ([[PartitionedTopK.l2F32]]),
+      * bit-equal to the codegen'd expression and DuckDB
+      * `list_distance`; it reads `a.length` dims, so every vector it
+      * sees must have the graph's (the first node's) dimension.
+      * [[insert]] and [[search]] check it here, and
+      * [[HnswGraph.fromRows]] restores rows that an insert checked. */
+    private def checkDim(v: Array[Float], what: => String): Unit =
+      require(vecs.isEmpty || v.length == vecs(0).length,
+        s"hnsw $what dim ${v.length} != graph dim ${vecs(0).length}")
 
     /** (dist, id) ascending — the one comparison every ordering in
       * this graph uses (ties to the lower id, the repo-wide rule). */
@@ -173,7 +173,7 @@ object Hnsw {
       eps.foreach { ep =>
         if (!visited(ep)) {
           visited += ep
-          val d = dist(q, vecs(ep))
+          val d = PartitionedTopK.l2F32(q, vecs(ep))
           cands.enqueue((ep, d))
           if (accept(ep)) results.enqueue((ep, d))
         }
@@ -190,7 +190,7 @@ object Hnsw {
             val n = nbrs(i)
             if (!visited(n)) {
               visited += n
-              val d = dist(q, vecs(n))
+              val d = PartitionedTopK.l2F32(q, vecs(n))
               if (results.size < ef || closer(d, n, results.head._2, results.head._1)) {
                 cands.enqueue((n, d))
                 if (accept(n)) {
@@ -222,7 +222,7 @@ object Hnsw {
     private def greedyStep(q: Array[Float], ep: Int, layer: Int,
                            exclude: Int = -1): Int = {
       var cur = ep
-      var curD = dist(q, vecs(cur))
+      var curD = PartitionedTopK.l2F32(q, vecs(cur))
       var improved = true
       while (improved) {
         improved = false
@@ -231,7 +231,7 @@ object Hnsw {
         while (i < nbrs.length) {
           val n = nbrs(i)
           if (n != exclude) {
-            val d = dist(q, vecs(n))
+            val d = PartitionedTopK.l2F32(q, vecs(n))
             if (closer(d, n, curD, cur)) { cur = n; curD = d; improved = true }
           }
           i += 1
@@ -262,6 +262,7 @@ object Hnsw {
     def insert(id: Long, vec: Array[Float]): Unit = {
       require(!idToNode.contains(id) || isDeleted(id),
         s"duplicate hnsw insert of a live id: id=$id")
+      checkDim(vec, s"insert id=$id")
       var i = 0
       while (i < vec.length) {
         require(!vec(i).isNaN && !vec(i).isInfinite,
@@ -324,7 +325,7 @@ object Hnsw {
           back += node
           if (back.length > cap) {
             // shrink: keep the cap nearest to n by (dist, id)
-            val scored = back.map(b => (b, dist(vecs(n), vecs(b))))
+            val scored = back.map(b => (b, PartitionedTopK.l2F32(vecs(n), vecs(b))))
               .sortWith((a, b) => closer(a._2, a._1, b._2, b._1))
             back.clear()
             back ++= scored.take(cap).map(_._1)
@@ -357,6 +358,7 @@ object Hnsw {
         qi += 1
       }
       if (entry < 0) return Seq.empty
+      checkDim(q, "query")
       var ep = entry
       var layer = lvls(entry)
       while (layer > 0) { ep = greedyStep(q, ep, layer); layer -= 1 }

@@ -24,12 +24,14 @@ import org.apache.spark.sql.types._
 object PartitionedTopK {
 
   /** THE row-level f32 sequential Euclidean kernel — one owner for
-    * every mapPartitions operator (this one, [[Ann.knnGraph]]): f32
+    * every mapPartitions operator (this one, [[Ann.knnGraph]]), the
+    * probe ranking ([[Ann.rankProbes]]), the HNSW graph and the
+    * serving scans ([[graft.serving.Serving]] IVF, PQ rerank): f32
     * accumulation in index order, sqrt widened then narrowed, exactly
     * the arithmetic of the codegen `l2DistF32` column kernel and of
     * DuckDB `list_distance` — an edit here is an edit to the oracle
     * contract of every caller. Callers check dimensions. */
-  private[operators] def l2F32(a: Array[Float], b: Array[Float]): Float = {
+  private[graft] def l2F32(a: Array[Float], b: Array[Float]): Float = {
     var acc = 0.0f
     var d = 0
     while (d < a.length) { val x = a(d) - b(d); acc += x * x; d += 1 }
@@ -155,12 +157,13 @@ object PartitionedTopK {
 
   /** Spark SQL's `sim DESC` comparison, shared by every driver/heap
     * path that must reproduce a `simCol.desc` window order bit-for-bit
-    * ([[reduceTopBySim]]'s heap, [[graft.serving.Serving.mmrIvf]]'s
-    * candidate cut): NaN compares ABOVE every value (desc seats it
-    * first, as Spark does) and −0.0 == 0.0 (ties fall to the caller's
-    * id tie-break). Returns <0 iff `a` ranks BEFORE `b` descending.
-    * One owner, because a fork between two hand-rolled copies would
-    * silently split batch vs serve results at a rank boundary. */
+    * ([[reduceTopBySim]]'s heap): NaN compares ABOVE every value
+    * (desc seats it first, as Spark does) and −0.0 == 0.0 (ties fall
+    * to the caller's id tie-break). Returns <0 iff `a` ranks BEFORE
+    * `b` descending. Its [[TopK]] twin is the [[TopK.simDesc]] key,
+    * which the serving cuts (SQ8, BQ, MMR) rank with; the property
+    * spec pins the two to the same order, because a fork between them
+    * would silently split batch vs serve results at a rank boundary. */
   def compareSimDesc(a: Double, b: Double): Int = {
     val sa = if (a == 0.0d) 0.0d else a
     val sb = if (b == 0.0d) 0.0d else b

@@ -218,12 +218,18 @@ object Pq {
     * silently re-rank existing gates), ties to the lower cluster id.
     * Shared with the serving probe so probe sets cannot fork. */
   private[graft] def rankProbesSq(centroids: Array[Array[Float]],
-                                  q: Array[Float], nprobe: Int): Seq[Int] =
-    centroids.zipWithIndex.map { case (c, i) =>
+                                  q: Array[Float], nprobe: Int): Seq[Int] = {
+    val top = new TopK[AnyRef](nprobe)
+    var i = 0
+    while (i < centroids.length) {
+      val c = centroids(i)
       require(c.length == q.length,
         s"searchIvfPq: query dim ${q.length} != centroid dim ${c.length}")
-      (i, l2(c, q))
-    }.sortBy { case (i, dist) => (dist, i) }.take(nprobe).map(_._1).toSeq
+      top.offer(TopK.asc(l2(c, q).toDouble), i)
+      i += 1
+    }
+    (0 until top.size).map(r => top.id(r).toInt)
+  }
 
   /** Encode an IVF-assigned corpus: one `m`-byte code per row
     * (residual-quantized). Output keeps (id, cluster, embedding, code)

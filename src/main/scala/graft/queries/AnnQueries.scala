@@ -653,16 +653,12 @@ object AnnQueries {
     * second copy of the shared build — at 100× the two gates each
     * paid the identical ~60 s construction (SCALEBENCH r12). */
   def refinedGraphPath(s: SparkSession, dir: String): String = {
-    // the key interpolates the CONSTRUCTION PARAMS and the algorithm
-    // version constant owned next to knnGraphRefined itself — a
-    // construction change (or a param edit here) mints a fresh /tmp
+    // the key interpolates the CONSTRUCTION PARAMS; BuildOnce adds
+    // the code digest, so a construction change mints a fresh /tmp
     // artifact instead of serving a stale one to two correctness
-    // gates on warm machines (r12 used a hand-bumped suffix; the
-    // advisor rightly flagged the forget-to-bump failure mode)
+    // gates on warm machines
     val (k, probes, rounds, workK) = (20, 3, 1, 20)
-    BuildOnce.cached(
-        s"refined-graph-k$k-p$probes-r$rounds-w$workK" +
-          s"-algo${graft.operators.Ann.KnnGraphRefinedAlgoVersion}",
+    BuildOnce.cached(s"refined-graph-k$k-p$probes-r$rounds-w$workK",
         new java.io.File(s"$dir/embeddings.parquet"))(
         p => s"$p/graph.parquet/_SUCCESS") { p =>
       graft.operators.Ann.knnGraphRefined(
@@ -689,9 +685,7 @@ object AnnQueries {
     * identical graph whether freshly built or loaded; key/lock
     * discipline is [[BuildOnce.cached]]'s. */
   def persistedHnswPath(s: SparkSession, dir: String): String =
-    // v2: the graph schema gained the `deleted` tombstone column — a
-    // new cache key keeps a warm container from reading an old layout
-    BuildOnce.cached("hnsw-m8-k16-v2",
+    BuildOnce.cached("hnsw-m8-k16",
         new java.io.File(s"$dir/embeddings.parquet"))(
         p => s"$p/graph/_SUCCESS") { p =>
       val index = persistedIvf(s, dir)

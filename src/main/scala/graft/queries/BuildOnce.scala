@@ -4,29 +4,38 @@ package graft.queries
   * warmup-able index/model build (persisted IVF, the BM25 indexes, the
   * DSIR model+weights — previously three hand-rolled copies that had
   * already started to drift): fingerprint the SOURCE parquet file
-  * (path + mtime + length + build params) so a regenerated fixture at
-  * the same path rebuilds instead of silently serving stale data; root
-  * the artifact under the JVM tmpdir, like a real deployment's index
-  * directory next to its table; serialize check-then-build JVM-wide so
-  * concurrent specs or bench warmups cannot race the existence check.
-  * Cross-PROCESS builds of the same key are not serialized — the
-  * fixture contract is one verify-at-a-time per machine (the Handoff
-  * rule), and a real deployment builds indexes from one scheduled job.
+  * (path + mtime + length + build params) AND the code that builds
+  * (a digest of graft's own jar or class files), so a regenerated
+  * fixture at the same path or a rebuilt graft rebuilds instead of
+  * silently serving stale data — no hand-kept version tag to forget;
+  * root the artifact under the JVM tmpdir, like a real deployment's
+  * index directory next to its table; serialize check-then-build
+  * JVM-wide so concurrent specs or bench warmups cannot race the
+  * existence check. Cross-PROCESS builds of the same key are not
+  * serialized — the fixture contract is one verify-at-a-time per
+  * machine (the Handoff rule), and a real deployment builds indexes
+  * from one scheduled job.
   */
 object BuildOnce {
 
-  /** Return the cache path for (`name`, fingerprint of `src`),
-    * running `build(path)` first iff `done(path)` — the path of the
-    * LAST file the build writes (its `_SUCCESS`) — does not exist, so
-    * a crashed half-build is re-attempted, never served. `name` must
-    * carry every build parameter that changes the artifact (e.g.
-    * `ivf-k16`): it is part of both the directory name and the key. */
+  /** Return the cache path for (`name`, fingerprint of `src` and of
+    * the code), running `build(path)` first iff `done(path)` — the
+    * path of the LAST file the build writes (its `_SUCCESS`) — does
+    * not exist, so a crashed half-build is re-attempted, never served.
+    * `name` must carry every build parameter that changes the artifact
+    * (e.g. `ivf-k16`): it is part of both the directory name and the
+    * key. */
   def cached(name: String, src: java.io.File)
-            (done: String => String)(build: String => Unit): String = {
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${src.getPath}|${src.lastModified}|${src.length}|$name"
-        .getBytes("UTF-8"))
-      .take(8).map(b => f"${b & 0xff}%02x").mkString
+            (done: String => String)(build: String => Unit): String =
+    cachedFor(codeDigest, name, src)(done)(build)
+
+  /** [[cached]] under an explicit code digest. */
+  private[graft] def cachedFor(code: String, name: String, src: java.io.File)
+                              (done: String => String)
+                              (build: String => Unit): String = {
+    val fp = hex(java.security.MessageDigest.getInstance("MD5")
+      .digest(s"${src.getPath}|${src.lastModified}|${src.length}|$name|$code"
+        .getBytes("UTF-8"))).take(16)
     val path = s"${sys.props("java.io.tmpdir")}/graft-$name-$fp"
     lock.synchronized {
       if (!new java.io.File(done(path)).exists()) build(path)
@@ -34,4 +43,26 @@ object BuildOnce {
     path
   }
   private val lock = new Object
+
+  /** MD5 of graft's code source, computed once per JVM: the jar's
+    * bytes, or every file under the classes directory (relative path
+    * and bytes, in path order). */
+  private[graft] lazy val codeDigest: String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val root = java.nio.file.Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    if (java.nio.file.Files.isDirectory(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.filter(f => java.nio.file.Files.isRegularFile(f)).sorted()
+        .forEachOrdered { f =>
+          md.update(root.relativize(f).toString.getBytes("UTF-8"))
+          md.update(java.nio.file.Files.readAllBytes(f))
+        }
+      finally walk.close()
+    } else md.update(java.nio.file.Files.readAllBytes(root))
+    hex(md.digest())
+  }
+
+  private def hex(bytes: Array[Byte]): String =
+    bytes.map(b => f"${b & 0xff}%02x").mkString
 }

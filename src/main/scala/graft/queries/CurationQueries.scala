@@ -93,11 +93,10 @@ object CurationQueries {
     * the same ~28–33 s pass (VERDICT r13 Next #4; the span-flags
     * shared-build recipe, `DedupQueries.spanFlagsPath`). Bench warms
     * it like every persisted artifact. The key carries the n-gram
-    * width, the split rule, and the algorithm version owned next to
-    * the operator. */
+    * width and the split rule; [[BuildOnce.cached]]'s code digest
+    * covers the operator. */
   private[graft] def overlapReportPath(s: SparkSession, dir: String): String =
-    BuildOnce.cached(
-        s"decontam-overlap-n4-split29-algo${Decontam.OverlapAlgoVersion}",
+    BuildOnce.cached("decontam-overlap-n4-split29",
         new java.io.File(s"$dir/documents.parquet"))(
         p => s"$p/overlap.parquet/_SUCCESS") { p =>
       val docs = Tables.documents(s, dir)

@@ -436,18 +436,12 @@ object DedupQueries {
     * `dedup_spans_trim` expands only its `__dup` rows (the refined-
     * graph shared-build recipe; at 100× each gate re-paid the same
     * ~55 s fingerprint pass — SCALEBENCH r12). Bench warms it like
-    * every persisted index. The key interpolates the window, the
-    * algorithm version constant owned next to the builder, AND a hash
-    * of the fixture DEFINITION — [[spanFixtureSql]], which embeds both
-    * SpanTail and the %10 rule and is already kept in sync with
-    * [[spanFixture]] by the oracle contract — so editing the fixture
-    * invalidates the cache without a manual bump (hashing a
-    * hand-maintained literal instead would go stale the first time
-    * the rule changed but the literal didn't). */
+    * every persisted index. The key carries the window; the fixture
+    * definition ([[spanFixture]], [[spanFixtureSql]]) and the builder
+    * are code, so [[BuildOnce.cached]]'s code digest rebuilds the
+    * flags when either changes. */
   private[graft] def spanFlagsPath(s: SparkSession, dir: String): String =
-    BuildOnce.cached(
-        s"span-flags-w8-algo${Dedup.DuplicatedSpanAlgoVersion}" +
-          s"-fx${Integer.toHexString(spanFixtureSql.hashCode)}",
+    BuildOnce.cached("span-flags-w8",
         new java.io.File(s"$dir/documents.parquet"))(
         p => s"$p/flags.parquet/_SUCCESS") { p =>
       Dedup.duplicatedSpanFlags(spanFixture(s, dir), "doc_id", "text",

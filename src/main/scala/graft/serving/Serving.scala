@@ -19,6 +19,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
+import graft.operators.{PartitionedTopK, TopK}
+
 /** Driver-side LOW-LATENCY probe path over the persisted indexes — the
   * batch/serving split the reference embodies with its HNSW segments
   * (`vector_store.py:139-171`): Spark builds and maintains the index
@@ -745,18 +747,22 @@ object Serving {
 
   // ------------------------------------------------------------ IVF probe
 
-  /** Decoded centroid table of a saveIvf layout — ONE loader shared by
-    * every IVF-layout probe (searchIvf, mmrIvf), cache-keyed by dir. */
+  /** Decoded centroid table of a saveIvf layout in cluster-id order
+    * (parallel arrays, so a positional tie IS an id tie) — ONE loader
+    * shared by every IVF-layout probe, cache-keyed by dir. */
+  private final class Centroids(val ids: Array[Int], val vecs: Array[Array[Float]])
+
   private def loadCentroids(conf: Configuration, cache: IndexCache,
-                            base: String): Seq[(Int, Array[Float])] = {
+                            base: String): Centroids = {
     val cents = cache.getOrLoad(s"$base/centroids") {
       val b = mutable.ArrayBuffer.empty[(Int, Array[Float])]
       foreachRowGroup(conf, s"$base/centroids", "cluster_id", "centroid") { rg =>
         b ++= rg.ints("cluster_id").iterator.zip(rg.floatLists("centroid"))
       }
-      b.toSeq
+      val sorted = b.sortBy(_._1)
+      new Centroids(sorted.map(_._1).toArray, sorted.map(_._2).toArray)
     }
-    require(cents.nonEmpty, s"no centroids under $base/centroids")
+    require(cents.ids.nonEmpty, s"no centroids under $base/centroids")
     cents
   }
 
@@ -784,17 +790,13 @@ object Serving {
     * can merge two distinct squared values, and ranking the same
     * quantity on every path keeps the probe set identical at those
     * collisions; ties to the lower id — ranking the raw squared acc
-    * instead would diverge by one probe exactly at a collision). */
-  private def rankProbesLocal(cents: Seq[(Int, Array[Float])],
-                              query: Array[Float], nprobe: Int): Seq[Int] = {
-    // delegate to THE probe-ranking kernel (one owner — a tweak to
-    // Ann.rankProbes must move serving and batch probe sets together).
-    // Sorting by cluster id first makes positional ties == id ties.
-    val sorted = cents.sortBy(_._1).toIndexedSeq
-    graft.operators.Ann
-      .rankProbes(sorted.map(_._2).toArray, query, nprobe)
-      .map(i => sorted(i)._1)
-  }
+    * instead would diverge by one probe exactly at a collision).
+    * Delegates to THE probe-ranking kernel (one owner — a tweak to
+    * Ann.rankProbes must move serving and batch probe sets together);
+    * the table's cluster-id order makes positional ties == id ties. */
+  private def rankProbesLocal(cents: Centroids, query: Array[Float],
+                              nprobe: Int): Seq[Int] =
+    graft.operators.Ann.rankProbes(cents.vecs, query, nprobe).map(cents.ids(_))
 
   final case class IvfHit(vecId: Long, label: Int, cluster: Int, dist: Double)
 
@@ -817,73 +819,12 @@ object Serving {
     val top = new TopK[IvfHit](k)
     probes.foreach { c =>
       loadClusterVecs(conf, cache, base, c).foreach { case (id, label, v) =>
-        var acc = 0.0f; var d = 0
-        while (d < v.length) { val x = v(d) - query(d); acc += x * x; d += 1 }
-        // the L2DistF32 kernel: f32 accumulation, double-rounded sqrt
-        val dist = math.sqrt(acc.toDouble).toFloat.toDouble
+        val dist = PartitionedTopK.l2F32(v, query).toDouble
         val key = TopK.asc(dist)
         if (top.admits(key, id)) top.add(key, id, IvfHit(id, label, c, dist))
       }
     }
     top.result
-  }
-
-  /** THE bounded top-k of the ranked probes ([[searchIvf]],
-    * [[searchBm25]], [[searchHnsw]], [[hybridRrf]]) — one owner of the
-    * tie rules. Keeps the `k` least (key, id) pairs in ascending order:
-    * the key decides, the lower id breaks a tie, and equal pairs keep
-    * their offer order, so the result is exactly a stable
-    * `sortBy((key, id)).take(k)` over every offer without boxing or
-    * sorting them. `k <= 0` keeps nothing; the buffer grows with its
-    * contents, so a huge `k` costs only the pairs offered. Callers
-    * test [[admits]] first and build the hit only for a pair that
-    * enters. */
-  private final class TopK[A <: AnyRef](k: Int) {
-    private val cap = math.max(k, 0)
-    private var keys = new Array[Long](math.min(cap, 64))
-    private var ids = new Array[Long](keys.length)
-    private var items = new Array[AnyRef](keys.length)
-    private var n = 0
-
-    private def before(key: Long, id: Long, i: Int): Boolean =
-      key < keys(i) || (key == keys(i) && id < ids(i))
-
-    def admits(key: Long, id: Long): Boolean =
-      n < cap || (cap > 0 && before(key, id, cap - 1))
-
-    /** Insert an admitted pair after every pair it does not precede,
-      * dropping the last one when full. */
-    def add(key: Long, id: Long, item: A): Unit = {
-      if (n == keys.length && n < cap) {
-        val len = math.min(cap.toLong, 2L * n).toInt
-        keys = java.util.Arrays.copyOf(keys, len)
-        ids = java.util.Arrays.copyOf(ids, len)
-        items = java.util.Arrays.copyOf(items, len)
-      }
-      var i = if (n < cap) n else cap - 1
-      while (i > 0 && before(key, id, i - 1)) {
-        keys(i) = keys(i - 1); ids(i) = ids(i - 1); items(i) = items(i - 1)
-        i -= 1
-      }
-      keys(i) = key; ids(i) = id; items(i) = item
-      if (n < cap) n += 1
-    }
-
-    def result: Seq[A] = (0 until n).map(i => items(i).asInstanceOf[A])
-  }
-
-  private object TopK {
-    /** Ascending key of a distance, in `java.lang.Double.compare` order
-      * (the tuple `sortBy` order: −0.0 before 0.0, every NaN equal and
-      * last): the IEEE bits with the magnitude flipped for negatives. */
-    def asc(d: Double): Long = {
-      val bits = java.lang.Double.doubleToLongBits(d)
-      bits ^ ((bits >> 63) & Long.MaxValue)
-    }
-
-    /** Ascending key of a fixed-point score ranked descending
-      * (bitwise NOT reverses the order without overflow). */
-    def desc(score: Long): Long = ~score
   }
 
   /** One hit of [[searchIvfSq8]]. */
@@ -898,7 +839,8 @@ object Serving {
     * keep the `rerank` best by exact int64 dot (desc, id — the
     * [[graft.operators.Sq.sq8Candidates]] cut, exact long compares),
     * then exact-f32-cosine rerank to k in SQL comparison order
-    * ([[graft.operators.PartitionedTopK.compareSimDesc]]) —
+    * ([[graft.operators.TopK.simDesc]], the twin of
+    * [[graft.operators.PartitionedTopK.compareSimDesc]]) —
     * hit-for-hit parity with the batch operator spec-pinned. A
     * resident server quantizes per probe here; a production layout
     * stores `sq_code` next to `ivf_cluster` at ingest (the batch
@@ -913,24 +855,22 @@ object Serving {
     val cents = loadCentroids(conf, cache, base)
     val probes = rankProbesLocal(cents, query, nprobe)
     val qc = graft.operators.Sq.sq8Codes(query)
-    val cands = mutable.ArrayBuffer.empty[(Long, Int, Int, Long, Array[Float])]
+    val cut = new TopK[(Long, Int, Int, Long, Array[Float])](rerank)
     probes.foreach { c =>
       loadClusterVecs(conf, cache, base, c).foreach { case (id, label, v) =>
-        cands += ((id, label, c,
-          graft.operators.Sq.dot8(graft.operators.Sq.sq8Codes(v), qc), v))
+        val dot = graft.operators.Sq.dot8(graft.operators.Sq.sq8Codes(v), qc)
+        val key = TopK.desc(dot)
+        if (cut.admits(key, id)) cut.add(key, id, (id, label, c, dot, v))
       }
     }
-    cands.sortBy { case (id, _, _, dot, _) => (-dot, id) }
-      .take(rerank)
-      .map { case (id, label, c, dot, v) =>
-        Sq8Hit(id, label, c, dot,
-          graft.operators.Rerank.cosSimLocal(v, query).toDouble)
-      }
-      .sortWith { (a, b) =>
-        val cc = graft.operators.PartitionedTopK.compareSimDesc(a.cosSim, b.cosSim)
-        cc < 0 || (cc == 0 && a.vecId < b.vecId)
-      }
-      .take(k).toSeq
+    val top = new TopK[Sq8Hit](k)
+    cut.result.foreach { case (id, label, c, dot, v) =>
+      val hit = Sq8Hit(id, label, c, dot,
+        graft.operators.Rerank.cosSimLocal(v, query).toDouble)
+      val key = TopK.simDesc(hit.cosSim)
+      if (top.admits(key, id)) top.add(key, id, hit)
+    }
+    top.result
   }
 
   /** One hit of [[searchIvfPq]]. */
@@ -959,34 +899,32 @@ object Serving {
     require(k >= 1, s"k must be >= 1, got $k")
     require(refine >= 1, s"refine must be >= 1, got $refine")
     val base = indexDir.stripSuffix("/")
-    val cents = loadCentroids(conf, cache, base).sortBy(_._1)
-    val centArr = cents.map(_._2).toArray
-    val probes = graft.operators.Pq.rankProbesSq(centArr, query, nprobe)
-    val cands = mutable.ArrayBuffer.empty[(Long, Int, Int, Float, Array[Float])]
+    val cents = loadCentroids(conf, cache, base)
+    val probes = graft.operators.Pq.rankProbesSq(cents.vecs, query, nprobe)
+    val cut = new TopK[(Long, Int, Int, Float, Array[Float])](refine * k)
     probes.foreach { p =>
-      // rankProbesSq returns POSITIONS into centArr; resolve to the
+      // rankProbesSq returns POSITIONS into the table; resolve to the
       // row's actual cluster_id before touching the layout (the ids
       // are contiguous today, but a pruned/renumbered centroid table
       // must break loudly in one place, not scan wrong directories)
-      val (cid, cvec) = cents(p)
+      val (cid, cvec) = (cents.ids(p), cents.vecs(p))
       val lut = graft.operators.Pq.lutFor(model, cvec, query)
       loadClusterVecs(conf, cache, base, cid).foreach { case (id, label, v) =>
         val code = graft.operators.Pq.encodeRow(model, cvec, v)
-        cands += ((id, label, cid,
-          graft.operators.Pq.adcRow(model, lut, code), v))
+        val adc = graft.operators.Pq.adcRow(model, lut, code)
+        val key = TopK.asc(adc.toDouble)
+        if (cut.admits(key, id)) cut.add(key, id, (id, label, cid, adc, v))
       }
     }
-    cands.sortBy { case (id, _, _, adc, _) => (adc, id) }
-      .take(refine * k)
-      .map { case (id, label, c, adc, v) =>
-        // the Pq.rerank kernel: f32 accumulation, double-rounded sqrt
-        var acc = 0.0f; var d = 0
-        while (d < v.length) { val x = v(d) - query(d); acc += x * x; d += 1 }
-        PqHit(id, label, c, adc.toDouble,
-          math.sqrt(acc.toDouble).toFloat.toDouble)
-      }
-      .sortBy(h => (h.dist, h.vecId))
-      .take(k).toSeq
+    val top = new TopK[PqHit](k)
+    cut.result.foreach { case (id, label, c, adc, v) =>
+      // the Pq.rerank kernel: f32 accumulation, double-rounded sqrt
+      val hit = PqHit(id, label, c, adc.toDouble,
+        PartitionedTopK.l2F32(v, query).toDouble)
+      val key = TopK.asc(hit.dist)
+      if (top.admits(key, id)) top.add(key, id, hit)
+    }
+    top.result
   }
 
   /** One hit of [[searchBq]] / [[searchIvfBq]]. */
@@ -1002,14 +940,15 @@ object Serving {
     * `adotFp` — the sign quantization is stateless, per the batch
     * scaladoc a production table stores `bq_code` at ingest), the
     * `rerank` cut is (adot_fp desc, id) and the final exact-f32-cosine
-    * rerank uses [[graft.operators.PartitionedTopK.compareSimDesc]] —
+    * rerank ranks by [[graft.operators.TopK.simDesc]] (the twin of
+    * [[graft.operators.PartitionedTopK.compareSimDesc]]) —
     * hit-for-hit parity with [[graft.operators.Bq.searchBq]]
     * spec-pinned. */
   def searchBq(indexDir: String, query: Array[Float], k: Int, rerank: Int,
                conf: Configuration = defaultConf,
                cache: IndexCache = noCache): Seq[BqHit] = {
     val base = indexDir.stripSuffix("/")
-    val all = loadCentroids(conf, cache, base).map(_._1).sorted
+    val all = loadCentroids(conf, cache, base).ids.toSeq
     bqOverClusters(base, all, query, k, rerank, conf, cache)
   }
 
@@ -1037,29 +976,25 @@ object Serving {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
     val qfp = graft.operators.Bq.qFixedPoint(query)
-    val cands = mutable.ArrayBuffer.empty[(Long, Int, Int, Long, Array[Float])]
+    // phase-1 cut: (adot_fp desc, id asc) — bqCandidates' TakeOrdered
+    val cut = new TopK[(Long, Int, Int, Long, Array[Float])](rerank)
     clusters.foreach { c =>
       loadClusterVecs(conf, cache, base, c).foreach { case (id, label, v) =>
-        cands += ((id, label, c,
-          graft.operators.Bq.adotFp(graft.operators.Bq.bqCodes(v), qfp), v))
+        val dot = graft.operators.Bq.adotFp(graft.operators.Bq.bqCodes(v), qfp)
+        val key = TopK.desc(dot)
+        if (cut.admits(key, id)) cut.add(key, id, (id, label, c, dot, v))
       }
     }
-    // phase-1 cut: (adot_fp desc, id asc) — bqCandidates' TakeOrdered
-    cands.sortWith { case ((ia, _, _, da, _), (ib, _, _, db, _)) =>
-      da > db || (da == db && ia < ib)
+    // phase-2 rerank: Spark's (cos_sim desc, id) — the simDesc key
+    // (NaN first like desc, ±0.0 equal so the id decides)
+    val top = new TopK[BqHit](k)
+    cut.result.foreach { case (id, label, c, dot, v) =>
+      val hit = BqHit(id, label, c, dot,
+        graft.operators.Rerank.cosSimLocal(v, query).toDouble)
+      val key = TopK.simDesc(hit.cosSim)
+      if (top.admits(key, id)) top.add(key, id, hit)
     }
-      .take(rerank)
-      .map { case (id, label, c, dot, v) =>
-        BqHit(id, label, c, dot,
-          graft.operators.Rerank.cosSimLocal(v, query).toDouble)
-      }
-      // phase-2 rerank: Spark's (cos_sim desc, id) via the ONE shared
-      // comparator (NaN first like desc, ±0.0 equal so the id decides)
-      .sortWith { (a, b) =>
-        val cc = graft.operators.PartitionedTopK.compareSimDesc(a.cosSim, b.cosSim)
-        cc < 0 || (cc == 0 && a.vecId < b.vecId)
-      }
-      .take(k).toSeq
+    top.result
   }
 
   /** One diversified pick of [[mmrIvf]]. */
@@ -1085,22 +1020,21 @@ object Serving {
     val base = indexDir.stripSuffix("/")
     val cents = loadCentroids(conf, cache, base)
     val probes = rankProbesLocal(cents, query, nprobe)
-    val cands = mutable.ArrayBuffer.empty[(Long, Double, Array[Float])]
+    // candidate cut with SQL comparison semantics, matching batchMmr's
+    // `__sim desc, id` window exactly — the simDesc key (NaN first
+    // like Spark's desc, ±0.0 equal so the id decides); the kernel
+    // still receives the raw sim (value parity).
+    val cut = new TopK[(Long, Double, Array[Float])](fetchK)
     probes.foreach { c =>
       loadClusterVecs(conf, cache, base, c).foreach { case (id, _, v) =>
-        if (id != excludeId)
-          cands += ((id, graft.operators.Rerank.cosSimLocal(v, query).toDouble, v))
+        if (id != excludeId) {
+          val sim = graft.operators.Rerank.cosSimLocal(v, query).toDouble
+          val key = TopK.simDesc(sim)
+          if (cut.admits(key, id)) cut.add(key, id, (id, sim, v))
+        }
       }
     }
-    // candidate cut with SQL comparison semantics, matching batchMmr's
-    // `__sim desc, id` window exactly — the ONE shared comparator
-    // (PartitionedTopK.compareSimDesc: NaN first like Spark's desc,
-    // ±0.0 equal so the id decides); the kernel still receives the
-    // raw sim (value parity).
-    val top = cands.sortWith { case ((idA, sA, _), (idB, sB, _)) =>
-      val c = graft.operators.PartitionedTopK.compareSimDesc(sA, sB)
-      c < 0 || (c == 0 && idA < idB)
-    }.take(fetchK).toArray
+    val top = cut.result.toArray
     graft.operators.Rerank
       .mmrKernel(top.map(_._1), top.map(_._2), top.map(_._3), k, lambda)
       .map(p => MmrHit(p.id, p.rank, p.score)).toSeq
@@ -1379,8 +1313,12 @@ object Serving {
         i += 1
       }
     }
-    byDoc.toSeq.map { case (id, (s, qs)) => FuzzyHit(id, s, qs.size.toLong) }
-      .sortBy(h => (-h.score, h.id)).take(k)
+    val top = new TopK[FuzzyHit](k)
+    byDoc.foreachEntry { case (id, (s, qs)) =>
+      val key = TopK.desc(s)
+      if (top.admits(key, id)) top.add(key, id, FuzzyHit(id, s, qs.size.toLong))
+    }
+    top.result
   }
 
   /** Classic unweighted Wagner–Fischer — the same metric as Spark's
@@ -1938,25 +1876,20 @@ object Serving {
     * contract). Not thread-safe (one writer), like the underlying
     * graphs. */
   final class OnlineHnsw private[Serving] (
-      cents: Seq[(Int, Array[Float])],
+      cents: Centroids,
       shards: mutable.Map[Int, graft.operators.Hnsw.HnswGraph],
       params: graft.operators.Hnsw.HnswParams) {
 
-    // the ASSIGNMENT routing table (cluster-id order) for
-    // Ann.nearestCentroid — insert routing must be the f64-argmin
-    // kernel batch appendToShards routes with (Ann.assignToIvf), NOT
-    // the f32+sqrt probe-RANKING kernel, or a near-tie vector could
-    // land in different shards live vs in the nightly batch append
-    private val centSorted: Array[(Int, Array[Float])] =
-      cents.sortBy(_._1).toArray
-    private val centArray: Array[Array[Float]] = centSorted.map(_._2)
-
     /** Insert one vector into its nearest-centroid shard (the
       * [[graft.operators.Ann.assignToIvf]] kernel — spec-pinned
-      * against it); returns the shard it landed in. */
+      * against it); returns the shard it landed in. Insert routing
+      * must be that f64-argmin kernel over the cluster-id-ordered
+      * table, NOT the f32+sqrt probe-RANKING kernel, or a near-tie
+      * vector could land in different shards live vs in the nightly
+      * batch append. */
     def insert(id: Long, vec: Array[Float]): Int = {
-      val s = centSorted(
-        graft.operators.Ann.nearestCentroid(centArray, vec.toSeq))._1
+      val s = cents.ids(
+        graft.operators.Ann.nearestCentroid(cents.vecs, vec.toSeq))
       // single-live-copy invariant ACROSS shards: an id inserted under
       // an older routing table may live in a different shard than the
       // current nearest-centroid one; fresh-inserting there would
@@ -2014,7 +1947,8 @@ object Serving {
 
     /** The routing/centroid table (cluster-id order) and params this
       * index serves with — what a flush passes to `saveHnsw`. */
-    def centroidTable: Seq[(Int, Array[Float])] = centSorted.toSeq
+    def centroidTable: Seq[(Int, Array[Float])] =
+      cents.ids.toSeq.zip(cents.vecs)
     def hnswParams: graft.operators.Hnsw.HnswParams = params
 
     /** Query the live graphs — same probe ranking, ef-beam, and
@@ -2038,16 +1972,18 @@ object Serving {
     val params = loadHnswParams(conf, noCache, base)
     val cents = loadCentroids(conf, noCache, base)
     val graphRoot = new Path(s"$base/graph")
-    val fs = graphRoot.getFileSystem(conf)
+    // one listing, no existence check: a missing graph/ dir opens an
+    // index with no shards (the partFiles rule)
+    val listed =
+      try graphRoot.getFileSystem(conf).listStatus(graphRoot)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
     val shards = mutable.Map.empty[Int, graft.operators.Hnsw.HnswGraph]
-    if (fs.exists(graphRoot)) {
-      fs.listStatus(graphRoot).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("shard="))
-        .map(_.stripPrefix("shard=").toInt).sorted
-        .foreach { s =>
-          shards(s) = loadHnswShard(conf, noCache, base, s, params)
-        }
-    }
+    listed.filter(_.isDirectory)
+      .map(_.getPath.getName).filter(_.startsWith("shard="))
+      .map(_.stripPrefix("shard=").toInt).sorted
+      .foreach { s =>
+        shards(s) = loadHnswShard(conf, noCache, base, s, params)
+      }
     new OnlineHnsw(cents, shards, params)
   }
 }

@@ -3,8 +3,8 @@ package graft
 import graft.queries.BuildOnce
 
 /** The shared build-once artifact cache: builds exactly once per
-  * (name, source fingerprint), reattempts a crashed half-build, and
-  * rebuilds when the source file changes. */
+  * (name, source fingerprint, code digest), reattempts a crashed
+  * half-build, and rebuilds when the source file or the code changes. */
 class BuildOnceSpec extends SparkSpec {
 
   test("cached: one build per key, half-builds retried, fingerprint rotates with the source") {
@@ -35,8 +35,19 @@ class BuildOnceSpec extends SparkSpec {
       val p3 = BuildOnce.cached("spec-a", src)(p => s"$p/artifact/_SUCCESS")(build)
       assert(p3 !== p1, "a regenerated source must not serve the stale artifact")
       assert(builds === 4)
+      // the key folds in a digest of the code that builds: cached is
+      // cachedFor the JVM's digest, and other code over the same
+      // source and name gets a new path
+      assert(BuildOnce.codeDigest.matches("[0-9a-f]{32}"))
+      assert(BuildOnce.cachedFor(BuildOnce.codeDigest, "spec-a", src)(
+        p => s"$p/artifact/_SUCCESS")(build) === p3)
+      assert(builds === 4)
+      val pc = BuildOnce.cachedFor("0" * 32, "spec-a", src)(
+        p => s"$p/artifact/_SUCCESS")(build)
+      assert(pc !== p3, "code built differently must not serve the stale artifact")
+      assert(builds === 5)
       // clean the tmpdir artifacts this spec created
-      Seq(p1, pb, p3).foreach(p => rmTree(new java.io.File(p)))
+      Seq(p1, pb, p3, pc).foreach(p => rmTree(new java.io.File(p)))
     }
   }
 }

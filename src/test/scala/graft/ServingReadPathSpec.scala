@@ -116,6 +116,38 @@ class ServingReadPathSpec extends SparkSpec {
     assert(existsAsked.isEmpty, existsAsked.asScala.mkString(", "))
   }
 
+  test("openHnsw lists graph/ once and checks no existence; a layout " +
+    "without graph/ opens with no shards") {
+    import OpenCountingFileSystem.{existsAsked, listed}
+    val path = AnnQueries.persistedHnswPath(spark, sfDir)
+    val conf = OpenCountingFileSystem.conf()
+    val shardDirs = new java.io.File(s"$path/graph").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("shard="))
+      .map(f => s"$path/graph/${f.getName}").toSeq
+    assert(shardDirs.nonEmpty)
+    var online: Serving.OnlineHnsw = null
+    opens { online = Serving.openHnsw(path, conf) }
+    assert(listed.asScala.toSeq.sorted ===
+      (Seq(s"$path/params", s"$path/centroids", s"$path/graph") ++ shardDirs).sorted)
+    assert(existsAsked.isEmpty, existsAsked.asScala.mkString(", "))
+    assert(online.shardGraphs.map(_._1).sorted ===
+      shardDirs.map(_.stripPrefix(s"$path/graph/shard=").toInt).sorted)
+
+    withTempDir("hnsw-nograph") { dir =>
+      for (sub <- Seq("params", "centroids")) {
+        val to = new java.io.File(dir, sub); to.mkdirs()
+        new java.io.File(s"$path/$sub").listFiles().filter(_.isFile).foreach { f =>
+          java.nio.file.Files.copy(f.toPath, new java.io.File(to, f.getName).toPath)
+        }
+      }
+      val base = dir.getAbsolutePath
+      opens { online = Serving.openHnsw(base, conf) }
+      assert(online.shardGraphs.isEmpty)
+      assert(listed.asScala.count(_ == s"$base/graph") === 1)
+      assert(existsAsked.isEmpty, existsAsked.asScala.mkString(", "))
+    }
+  }
+
   test("uncached searchBm25 opens only stats, manifest and the pruned range dirs") {
     val path = HybridQueries.persistedBm25(spark, sfDir)
     val conf = OpenCountingFileSystem.conf()
