@@ -465,15 +465,10 @@ object Ann {
   private[graft] def rankProbes(centroids: Array[Array[Float]],
                                 q: Array[Float], nprobe: Int): IndexedSeq[Int] = {
     val top = new TopK[AnyRef](nprobe)
-    var i = 0
-    while (i < centroids.length) {
-      val c = centroids(i)
-      require(c.length == q.length,
-        s"rankProbes: query dim ${q.length} != centroid dim ${c.length}")
-      // THE f32 L2 kernel (one owner — PartitionedTopK.l2F32, the
-      // stated bit-parity kernel); an inline copy here could drift
-      top.offer(TopK.asc(PartitionedTopK.l2F32(c, q).toDouble), i)
-      i += 1
+    centroids.indices.foreach { i =>
+      require(centroids(i).length == q.length,
+        s"rankProbes: query dim ${q.length} != centroid dim ${centroids(i).length}")
+      top.offer(TopK.asc(PartitionedTopK.l2F32(centroids(i), q).toDouble), i)
     }
     (0 until top.size).map(r => top.id(r).toInt)
   }
@@ -1138,25 +1133,17 @@ object Ann {
       org.apache.spark.sql.types.DoubleType, nullable = false)))
 
   /** Top-`kk` of one query against a buffered candidate list —
-    * (f32 dist, id) pairs in ascending order, self-excluded by id; a
-    * kept pair's dist is `TopK.ascValue(key)`. The ONE inner kernel
-    * shared by [[knnGraph]] and [[knnGraphRefined]]'s seed (returns
-    * the cut, not rows, so each call site builds its output Row
-    * exactly once — this loop is the graph family's measured hot
-    * path).
-    *
-    * Nothing is allocated per candidate: the boxed tuple heap this
-    * replaced measured ~4300 cycles per CANDIDATE at the 100× probe
-    * (2e8 candidates → the whole knn_graph wall), almost all of it
-    * allocation + megamorphic Ordering calls for entries that lose
-    * anyway. [[TopK]] keeps primitive keys, and once it is full the
-    * worst kept distance feeds the kernel's monotone early exit
+    * (f32 dist, id) ascending, self-excluded by id, a kept pair's dist
+    * is `TopK.ascValue(key)`. The ONE inner kernel shared by
+    * [[knnGraph]] and [[knnGraphRefined]]'s seed, and the graph
+    * family's measured hot path: it allocates nothing per candidate
+    * (the boxed tuple heap it replaced measured ~4300 cycles per
+    * CANDIDATE at the 100× probe, 2e8 candidates → the whole
+    * knn_graph wall), and once the cut is full the worst kept
+    * distance feeds the kernel's monotone early exit
     * ([[PartitionedTopK.l2F32Bounded]]), so most losers abort their
-    * distance loop a fraction in. The key is the widened f32 dist in
-    * `Float.compare` order — the same total order as
-    * Ordering.Float.TotalOrdering — with the (dist, id) ascending
-    * tie-break, and every KEPT distance comes from the identical
-    * accumulation order as l2F32. */
+    * distance loop a fraction in. Every KEPT distance comes from the
+    * identical accumulation order as l2F32. */
   private def topKAgainst(qid: Long, qv: Array[Float],
                           ids: scala.collection.mutable.ArrayBuffer[Long],
                           vecs: scala.collection.mutable.ArrayBuffer[Array[Float]],

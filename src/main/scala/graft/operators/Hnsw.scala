@@ -132,15 +132,13 @@ object Hnsw {
       case None    => false
     }
 
-    /** Distances are THE f32 L2 kernel ([[PartitionedTopK.l2F32]]),
-      * bit-equal to the codegen'd expression and DuckDB
-      * `list_distance`; it reads `a.length` dims, so every vector it
-      * sees must have the graph's (the first node's) dimension.
-      * [[insert]] and [[search]] check it here, and
-      * [[HnswGraph.fromRows]] restores rows that an insert checked. */
-    private def checkDim(v: Array[Float], what: => String): Unit =
-      require(vecs.isEmpty || v.length == vecs(0).length,
-        s"hnsw $what dim ${v.length} != graph dim ${vecs(0).length}")
+    /** THE f32 L2 kernel ([[PartitionedTopK.l2F32]]) over the dims
+      * both vectors have — bit-equal to the codegen'd expression and
+      * DuckDB `list_distance` when they match. The graph takes rows
+      * from any frame ([[buildShards]], [[appendToShards]]), so a
+      * ragged pair keeps the shorter vector's prefix rule. */
+    private def dist(a: Array[Float], b: Array[Float]): Float =
+      PartitionedTopK.l2F32(a, b, math.min(a.length, b.length))
 
     /** (dist, id) ascending — the one comparison every ordering in
       * this graph uses (ties to the lower id, the repo-wide rule). */
@@ -173,7 +171,7 @@ object Hnsw {
       eps.foreach { ep =>
         if (!visited(ep)) {
           visited += ep
-          val d = PartitionedTopK.l2F32(q, vecs(ep))
+          val d = dist(q, vecs(ep))
           cands.enqueue((ep, d))
           if (accept(ep)) results.enqueue((ep, d))
         }
@@ -190,7 +188,7 @@ object Hnsw {
             val n = nbrs(i)
             if (!visited(n)) {
               visited += n
-              val d = PartitionedTopK.l2F32(q, vecs(n))
+              val d = dist(q, vecs(n))
               if (results.size < ef || closer(d, n, results.head._2, results.head._1)) {
                 cands.enqueue((n, d))
                 if (accept(n)) {
@@ -222,7 +220,7 @@ object Hnsw {
     private def greedyStep(q: Array[Float], ep: Int, layer: Int,
                            exclude: Int = -1): Int = {
       var cur = ep
-      var curD = PartitionedTopK.l2F32(q, vecs(cur))
+      var curD = dist(q, vecs(cur))
       var improved = true
       while (improved) {
         improved = false
@@ -231,7 +229,7 @@ object Hnsw {
         while (i < nbrs.length) {
           val n = nbrs(i)
           if (n != exclude) {
-            val d = PartitionedTopK.l2F32(q, vecs(n))
+            val d = dist(q, vecs(n))
             if (closer(d, n, curD, cur)) { cur = n; curD = d; improved = true }
           }
           i += 1
@@ -262,7 +260,6 @@ object Hnsw {
     def insert(id: Long, vec: Array[Float]): Unit = {
       require(!idToNode.contains(id) || isDeleted(id),
         s"duplicate hnsw insert of a live id: id=$id")
-      checkDim(vec, s"insert id=$id")
       var i = 0
       while (i < vec.length) {
         require(!vec(i).isNaN && !vec(i).isInfinite,
@@ -325,7 +322,7 @@ object Hnsw {
           back += node
           if (back.length > cap) {
             // shrink: keep the cap nearest to n by (dist, id)
-            val scored = back.map(b => (b, PartitionedTopK.l2F32(vecs(n), vecs(b))))
+            val scored = back.map(b => (b, dist(vecs(n), vecs(b))))
               .sortWith((a, b) => closer(a._2, a._1, b._2, b._1))
             back.clear()
             back ++= scored.take(cap).map(_._1)
@@ -358,7 +355,6 @@ object Hnsw {
         qi += 1
       }
       if (entry < 0) return Seq.empty
-      checkDim(q, "query")
       var ep = entry
       var layer = lvls(entry)
       while (layer > 0) { ep = greedyStep(q, ep, layer); layer -= 1 }
@@ -480,7 +476,8 @@ object Hnsw {
     * graph memory is O(rows·(d + m·avgLevels)) — the IVF partitioner
     * bounds it and [[DefaultMaxShardRows]] enforces the bound
     * (fail-fast on the first row past it, before the oversized graph
-    * is materialized). */
+    * is materialized). Embeddings of differing lengths are not
+    * rejected: two vectors are compared over the dims both have. */
   def buildShards(assigned: DataFrame, params: HnswParams,
                   shardCol: String = "ivf_cluster",
                   embCol: String = "embedding",

@@ -31,10 +31,15 @@ object PartitionedTopK {
     * the arithmetic of the codegen `l2DistF32` column kernel and of
     * DuckDB `list_distance` — an edit here is an edit to the oracle
     * contract of every caller. Callers check dimensions. */
-  private[graft] def l2F32(a: Array[Float], b: Array[Float]): Float = {
+  private[graft] def l2F32(a: Array[Float], b: Array[Float]): Float =
+    l2F32(a, b, a.length)
+
+  /** [[l2F32]] over the first `n` dims (the HNSW graph's rule for
+    * vectors of differing lengths). */
+  private[graft] def l2F32(a: Array[Float], b: Array[Float], n: Int): Float = {
     var acc = 0.0f
     var d = 0
-    while (d < a.length) { val x = a(d) - b(d); acc += x * x; d += 1 }
+    while (d < n) { val x = a(d) - b(d); acc += x * x; d += 1 }
     math.sqrt(acc.toDouble).toFloat
   }
 
@@ -160,15 +165,11 @@ object PartitionedTopK {
     * ([[reduceTopBySim]]'s heap): NaN compares ABOVE every value
     * (desc seats it first, as Spark does) and −0.0 == 0.0 (ties fall
     * to the caller's id tie-break). Returns <0 iff `a` ranks BEFORE
-    * `b` descending. Its [[TopK]] twin is the [[TopK.simDesc]] key,
-    * which the serving cuts (SQ8, BQ, MMR) rank with; the property
-    * spec pins the two to the same order, because a fork between them
-    * would silently split batch vs serve results at a rank boundary. */
-  def compareSimDesc(a: Double, b: Double): Int = {
-    val sa = if (a == 0.0d) 0.0d else a
-    val sb = if (b == 0.0d) 0.0d else b
-    java.lang.Double.compare(sb, sa)
-  }
+    * `b` descending. It compares the [[TopK.simDesc]] keys the
+    * serving cuts (SQ8, BQ, MMR) rank with, so batch and serve share
+    * one owner of the order and cannot split at a rank boundary. */
+  def compareSimDesc(a: Double, b: Double): Int =
+    java.lang.Long.compare(TopK.simDesc(a), TopK.simDesc(b))
 
   /** Per-partition per-query TOP-M reduction of a pre-scored frame by
     * (`simCol` DESC, `idCol` ASC) — the heap pre-aggregation behind

@@ -220,13 +220,10 @@ object Pq {
   private[graft] def rankProbesSq(centroids: Array[Array[Float]],
                                   q: Array[Float], nprobe: Int): Seq[Int] = {
     val top = new TopK[AnyRef](nprobe)
-    var i = 0
-    while (i < centroids.length) {
-      val c = centroids(i)
-      require(c.length == q.length,
-        s"searchIvfPq: query dim ${q.length} != centroid dim ${c.length}")
-      top.offer(TopK.asc(l2(c, q).toDouble), i)
-      i += 1
+    centroids.indices.foreach { i =>
+      require(centroids(i).length == q.length,
+        s"searchIvfPq: query dim ${q.length} != centroid dim ${centroids(i).length}")
+      top.offer(TopK.asc(l2(centroids(i), q).toDouble), i)
     }
     (0 until top.size).map(r => top.id(r).toInt)
   }

@@ -89,7 +89,7 @@ private[graft] object TopK {
   def desc(score: Long): Long = ~score
 
   /** Ascending key of a similarity ranked in Spark SQL's `sim DESC`
-    * order — the twin of [[PartitionedTopK.compareSimDesc]]: NaN
-    * first, −0.0 == 0.0 (the id decides), then descending. */
+    * order: NaN first, −0.0 == 0.0 (the id decides), then descending.
+    * [[PartitionedTopK.compareSimDesc]] compares these keys. */
   def simDesc(sim: Double): Long = ~asc(if (sim == 0.0d) 0.0d else sim)
 }

@@ -9,12 +9,14 @@ package graft.queries
   * fixture at the same path or a rebuilt graft rebuilds instead of
   * silently serving stale data — no hand-kept version tag to forget;
   * root the artifact under the JVM tmpdir, like a real deployment's
-  * index directory next to its table; serialize check-then-build
-  * JVM-wide so concurrent specs or bench warmups cannot race the
-  * existence check. Cross-PROCESS builds of the same key are not
-  * serialized — the fixture contract is one verify-at-a-time per
-  * machine (the Handoff rule), and a real deployment builds indexes
-  * from one scheduled job.
+  * index directory next to its table; keep ONE artifact per (name,
+  * source path): a build deletes the ones it supersedes (an older
+  * fixture or older code), so rebuilds do not pile up in the tmpdir;
+  * serialize check-then-build JVM-wide so concurrent specs or bench
+  * warmups cannot race the existence check. Cross-PROCESS builds of
+  * the same key are not serialized — the fixture contract is one
+  * verify-at-a-time per machine (the Handoff rule), and a real
+  * deployment builds indexes from one scheduled job.
   */
 object BuildOnce {
 
@@ -24,7 +26,10 @@ object BuildOnce {
     * not exist, so a crashed half-build is re-attempted, never served.
     * `name` must carry every build parameter that changes the artifact
     * (e.g. `ivf-k16`): it is part of both the directory name and the
-    * key. */
+    * key. The directory is `graft-<name>-<slot>-<version>`: the slot
+    * hashes (source path, name), the version (source mtime and
+    * length, code digest); once a build finishes, every other version
+    * in its slot is deleted. */
   def cached(name: String, src: java.io.File)
             (done: String => String)(build: String => Unit): String =
     cachedFor(codeDigest, name, src)(done)(build)
@@ -33,16 +38,26 @@ object BuildOnce {
   private[graft] def cachedFor(code: String, name: String, src: java.io.File)
                               (done: String => String)
                               (build: String => Unit): String = {
-    val fp = hex(java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${src.getPath}|${src.lastModified}|${src.length}|$name|$code"
-        .getBytes("UTF-8"))).take(16)
-    val path = s"${sys.props("java.io.tmpdir")}/graft-$name-$fp"
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    val slot = s"graft-$name-${md5(s"${src.getPath}|$name").take(8)}-"
+    val dir = slot + md5(s"${src.lastModified}|${src.length}|$code").take(16)
     lock.synchronized {
-      if (!new java.io.File(done(path)).exists()) build(path)
+      if (!new java.io.File(done(s"$tmp/$dir")).exists()) {
+        build(s"$tmp/$dir")
+        Option(tmp.listFiles()).toSeq.flatten.filter { f =>
+          f.getName != dir && f.getName.startsWith(slot) &&
+            f.getName.substring(slot.length).matches("[0-9a-f]{16}")
+        }.foreach(rmTree)
+      }
     }
-    path
+    s"$tmp/$dir"
   }
   private val lock = new Object
+
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+  }
 
   /** MD5 of graft's code source, computed once per JVM: the jar's
     * bytes, or every file under the classes directory (relative path
@@ -62,6 +77,9 @@ object BuildOnce {
     } else md.update(java.nio.file.Files.readAllBytes(root))
     hex(md.digest())
   }
+
+  private def md5(s: String): String =
+    hex(java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")))
 
   private def hex(bytes: Array[Byte]): String =
     bytes.map(b => f"${b & 0xff}%02x").mkString

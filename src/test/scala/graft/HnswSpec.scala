@@ -292,6 +292,19 @@ class HnswSpec extends SparkSpec {
     assert(Hnsw.probedSlim(graph, Seq.empty).count() === 0)
   }
 
+  test("buildShards takes ragged embeddings: a pair compares over the dims both have") {
+    val ragged = Seq((0, 1L, Seq(0f, 0f, 0f)), (0, 2L, Seq(1f, 1f)),
+      (0, 3L, Seq(3f, 0f, 5f)), (0, 4L, Seq(0.5f)))
+      .toDF("shard0", "vec_id", "embedding")
+    val graph = Hnsw.buildShards(ragged, P, shardCol = "shard0")
+    assert(graph.select($"vec_id").distinct().count() === 4L)
+    val hits = Hnsw.searchShards(graph, Seq(HnswQuery(0L, Array(1f, 0f), Seq(0))),
+        ef = 16, P)
+      .select($"vec_id", $"dist").as[(Long, Double)].collect().sortBy(h => (h._2, h._1))
+    // prefixes of the query (1, 0): id 4 over 1 dim, ids 1-3 over 2
+    assert(hits.toSeq === Seq((4L, 0.5), (1L, 1.0), (2L, 1.0), (3L, 2.0)))
+  }
+
   test("search rejects non-finite queries (same contract as insert)") {
     val g = new HnswGraph(P)
     g.insert(1L, Array(1f, 0f))

@@ -72,11 +72,19 @@ class TopKSpec extends AnyFunSuite {
       Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long)))
   }
 
+  /** Spark SQL's `sim DESC` order, written out: NaN before every
+    * value, −0.0 == 0.0, then descending. */
+  private def simDescRef(a: Double, b: Double): Int =
+    java.lang.Double.compare(if (b == 0.0d) 0.0d else b, if (a == 0.0d) 0.0d else a)
+
   test("simDesc == stable sortWith(compareSimDesc, id).take(k)") {
     check("simDesc", doubles, 4)(TopK.simDesc)(_.sortWith { case (((a, ia), _), ((b, ib), _)) =>
-      val c = PartitionedTopK.compareSimDesc(a, b)
+      val c = simDescRef(a, b)
       c < 0 || (c == 0 && ia < ib)
     })
+    for (a <- doubles; b <- doubles)
+      assert(math.signum(PartitionedTopK.compareSimDesc(a, b)) ===
+        math.signum(simDescRef(a, b)), s"compareSimDesc($a, $b)")
   }
 
   test("ascValue inverts asc bit for bit; every NaN keys alike") {
