@@ -839,8 +839,8 @@ object Serving {
     * keep the `rerank` best by exact int64 dot (desc, id — the
     * [[graft.operators.Sq.sq8Candidates]] cut, exact long compares),
     * then exact-f32-cosine rerank to k in SQL comparison order
-    * ([[graft.operators.TopK.simDesc]], the twin of
-    * [[graft.operators.PartitionedTopK.compareSimDesc]]) —
+    * ([[graft.operators.TopK.simDesc]], the key batch's
+    * [[graft.operators.PartitionedTopK.compareSimDesc]] compares) —
     * hit-for-hit parity with the batch operator spec-pinned. A
     * resident server quantizes per probe here; a production layout
     * stores `sq_code` next to `ivf_cluster` at ingest (the batch
@@ -940,8 +940,8 @@ object Serving {
     * `adotFp` — the sign quantization is stateless, per the batch
     * scaladoc a production table stores `bq_code` at ingest), the
     * `rerank` cut is (adot_fp desc, id) and the final exact-f32-cosine
-    * rerank ranks by [[graft.operators.TopK.simDesc]] (the twin of
-    * [[graft.operators.PartitionedTopK.compareSimDesc]]) —
+    * rerank ranks by [[graft.operators.TopK.simDesc]] (the key
+    * [[graft.operators.PartitionedTopK.compareSimDesc]] compares) —
     * hit-for-hit parity with [[graft.operators.Bq.searchBq]]
     * spec-pinned. */
   def searchBq(indexDir: String, query: Array[Float], k: Int, rerank: Int,
