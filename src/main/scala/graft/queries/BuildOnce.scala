@@ -14,9 +14,12 @@ package graft.queries
   * fixture or older code), so rebuilds do not pile up in the tmpdir;
   * serialize check-then-build JVM-wide so concurrent specs or bench
   * warmups cannot race the existence check. Cross-PROCESS builds of
-  * the same key are not serialized — the fixture contract is one
-  * verify-at-a-time per machine (the Handoff rule), and a real
-  * deployment builds indexes from one scheduled job.
+  * the same key are not serialized, and a process running other code
+  * over the same fixture and tmpdir deletes this one's artifact — the
+  * fixture contract is one verify-at-a-time per machine (the Handoff
+  * rule; give side-by-side runs their own `java.io.tmpdir`, as
+  * perfbench does), and a real deployment builds indexes from one
+  * scheduled job.
   */
 object BuildOnce {
 
