@@ -34,9 +34,10 @@ import scala.collection.mutable.ArrayBuffer
   * the serving read path ([[graft.serving.Serving]]) over the part files
   * of one persisted dir, such as an IVF `corpus/ivf_cluster=<c>` or a
   * BM25 `postings/range_id=<r>` dir. Per part file it prints the median
-  * µs of list+open+footer, of the chunk read and of each column's
-  * decode, over `reps` timed passes (default 200) after as many
-  * warm-up passes, beside the same figures for passes that only read
+  * µs of list+open+read+footer (the whole file is read in one pass),
+  * of the chunk read (parsed from that in-memory copy) and of each
+  * column's decode, over `reps` timed passes (default 200) after as
+  * many warm-up passes, beside the same figures for passes that only read
   * and decompress each column's pages (the floor under its decode).
   *
   * Usage: runMain graft.Probe <explain|count|gaps> <sfDir> <q1,q2,...> [outDir]
@@ -164,7 +165,7 @@ object Probe {
       }
     }
 
-    /** One pass over the dir: ns of list+open+footer (with close), of
+    /** One pass over the dir: ns of list+open+read+footer (with close), of
       * the chunk reads, and of each column's decode (with `floor`, of
       * reading and decompressing its pages only). */
     def pass(floor: Boolean): Array[Long] = {
@@ -199,7 +200,7 @@ object Probe {
     (1 to reps).foreach { _ => pass(floor = false); pass(floor = true) }
     val timed = Array.fill(reps)((pass(floor = false), pass(floor = true)))
     def medianUs(xs: Array[Long]): Double = xs.sorted.apply(xs.length / 2) / 1e3 / files.length
-    val labels = Seq("list+open+footer", "chunk read") ++ columns.map(_._1)
+    val labels = Seq("list+open+read+footer", "chunk read") ++ columns.map(_._1)
     println(f"[decode] $dir: ${files.length} part files, $rows rows, $reps reps; " +
       "median us per part file: decode | read+decompress pages only")
     labels.indices.foreach { i =>

@@ -4,6 +4,7 @@ import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import java.io.{ByteArrayInputStream, EOFException, IOException}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
@@ -15,7 +16,7 @@ import org.apache.parquet.column.{ColumnDescriptor, Encoding, ValuesType}
 import org.apache.parquet.column.page.{DataPageV1, DataPageV2, PageReadStore, PageReader}
 import org.apache.parquet.column.values.{RequiresPreviousReader, ValuesReader}
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, SeekableInputStream}
 import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
@@ -27,18 +28,19 @@ import graft.operators.{PartitionedTopK, TopK}
   * layouts ([[graft.operators.Ann.saveIvf]],
   * [[graft.operators.Bm25.buildPersistedIndex]]); a single query does
   * NOT need a Spark job to read them. These functions answer one query
-  * by reading the pruned partitions directly: parquet-mr opens the
-  * files and reads their column chunks, and [[RowGroup]] decodes the
-  * pages in bulk — no session, no scheduler, no shuffle — with result
+  * by reading the pruned partitions directly: each part file is read
+  * whole in one sequential pass, parquet-mr parses its footer and
+  * column chunks from memory, and [[RowGroup]] decodes the pages in
+  * bulk — no session, no scheduler, no shuffle — with result
   * parity against the Spark operators spec-pinned (same kernels, same
   * tie-breaks).
   *
   * Latency: a warm `local[32]` Spark job floors at ~100-300 ms for the
-  * same probe; these direct reads answer uncached with a p50 of 6-7 ms
-  * (IVF), 10-13 ms (HNSW), 7-8 ms (BM25) and 13-16 ms (hybrid RRF) on
-  * the sf0.1 fixture (perfbench serve_cold traced runs, 4-vCPU VM, 2
-  * clients), most of it opening the probed part files and reading
-  * their footers and column chunks. A resident server passes
+  * same probe; these direct reads answer uncached with a p50 of 4-4.5 ms
+  * (IVF), 7.5-8 ms (HNSW), 5-5.5 ms (BM25) and 9.5-10 ms (hybrid RRF)
+  * on the sf0.1 fixture (perfbench serve_cold traced runs, 4-vCPU VM, 2
+  * clients), most of it opening and reading the probed part files and
+  * decompressing and decoding their pages. A resident server passes
   * an [[IndexCache]] so repeat probes skip the reads entirely and run
   * only in-memory kernels: warm p50 of 0.06 ms (IVF), 0.26 ms (BM25)
   * and 0.44 ms (hybrid RRF) on the same fixture (perfbench serve_warm).
@@ -61,8 +63,8 @@ object Serving {
   private lazy val defaultConf: Configuration = new Configuration()
 
   /** Opt-in decoded-partition cache for a RESIDENT server: an uncached
-    * probe lists, opens and decodes every touched dir again (p50 6-7 ms
-    * for IVF to 13-16 ms for hybrid RRF on the sf0.1 fixture, perfbench
+    * probe lists, reads and decodes every touched dir again (p50 4-4.5 ms
+    * for IVF to 9.5-10 ms for hybrid RRF on the sf0.1 fixture, perfbench
     * serve_cold), so a server answering repeat probes against the
     * same index caches the DECODED partition content (centroids,
     * stats, manifest, per-cluster vectors, and per BM25 range a
@@ -133,13 +135,50 @@ object Serving {
       .sortBy(_.getPath.getName)
   }
 
-  /** Open one listed part file with the caller's `conf` and the
-    * listing's status (no `Configuration` is built and no second status
-    * call is made), reading only the top-level fields in `cols`; returns
-    * the reader and the requested schema. */
+  /** One listed part file, whole, by one sequential `readFully` with the
+    * caller's `conf` and the listing's status: no seek, positional or
+    * vectored read (on the checksummed local file system a positional
+    * read opens the file a second time). That file system verifies every
+    * chunk against its `.crc`, so a flipped byte throws a
+    * `ChecksumException` naming the file. A file over `Int.MaxValue`
+    * bytes throws, naming it, before it is opened. */
+  private[graft] def readPart(conf: Configuration, st: FileStatus): Array[Byte] = {
+    val path = st.getPath
+    if (st.getLen > Int.MaxValue)
+      throw new IOException(
+        s"$path: ${st.getLen} bytes is over the ${Int.MaxValue}-byte whole-file read")
+    val bytes = new Array[Byte](st.getLen.toInt)
+    val in = path.getFileSystem(conf).open(path)
+    try in.readFully(bytes) finally in.close()
+    bytes
+  }
+
+  /** A part file already in memory, as parquet-mr's [[InputFile]]: its
+    * streams seek within the array, and it prints as the file's path,
+    * so parquet-mr's own errors still name the file. */
+  private final class PartBytes(path: Path, bytes: Array[Byte]) extends InputFile {
+    def getLength: Long = bytes.length
+    def newStream(): SeekableInputStream =
+      new DelegatingSeekableInputStream(new ByteArrayInputStream(bytes)) {
+        // a ByteArrayInputStream's mark is 0: reset() rewinds to the start
+        def getPos: Long = bytes.length - getStream.available()
+        def seek(to: Long): Unit = {
+          if (to < 0 || to > bytes.length)
+            throw new EOFException(s"$path: seek to $to of ${bytes.length} bytes")
+          getStream.reset(); getStream.skip(to)
+        }
+      }
+    override def toString: String = path.toString
+  }
+
+  /** Open one listed part file ([[readPart]]), reading only the
+    * top-level fields in `cols`; returns the reader and the requested
+    * schema. Footer, column chunks and pages are parsed from memory.
+    * Reading the whole file costs no extra bytes: every layout serving
+    * reads requests all or nearly all of its columns. */
   private[graft] def openPart(conf: Configuration, st: FileStatus,
                               cols: Seq[String]): (ParquetFileReader, MessageType) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+    val reader = ParquetFileReader.open(new PartBytes(st.getPath, readPart(conf, st)),
       HadoopReadOptions.builder(conf, st.getPath).build())
     try {
       val fileSchema = reader.getFooter.getFileMetaData.getSchema

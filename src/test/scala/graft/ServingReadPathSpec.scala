@@ -1,26 +1,29 @@
 package graft
 
+import java.nio.ByteBuffer
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.function.IntFunction
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, FSDataInputStream, FSInputStream, FileRange,
+  FileStatus, LocalFileSystem, Path}
 
 import graft.operators.Ann
 import graft.queries.{AnnQueries, HybridQueries, VectorQueries}
 import graft.serving.Serving
 
 /** A local file system that records every file it opens (the path,
-  * the conf the instance was created with, and whether the stream was
-  * closed), every dir it lists and every path it is asked whether it
-  * exists. Instances are uncached (`fs.file.impl.disable.cache`), so
-  * the record is global. */
+  * the conf the instance was created with, how the stream was read and
+  * whether it was closed), every dir it lists and every path it is
+  * asked whether it exists. Instances are uncached
+  * (`fs.file.impl.disable.cache`), so the record is global. */
 class OpenCountingFileSystem extends LocalFileSystem {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val rec = new OpenCountingFileSystem.Opened(f.toUri.getPath, getConf)
     OpenCountingFileSystem.opened.add(rec)
-    new FSDataInputStream(super.open(f, bufferSize)) {
+    new FSDataInputStream(new OpenCountingFileSystem.Counting(super.open(f, bufferSize), rec)) {
       override def close(): Unit = try super.close() finally rec.closed = true
     }
   }
@@ -39,7 +42,38 @@ class OpenCountingFileSystem extends LocalFileSystem {
 object OpenCountingFileSystem {
   final class Opened(val path: String, val conf: Configuration) {
     @volatile var closed = false
+    /** Sequential bytes read, `seek` calls, positional reads
+      * (`read(pos, …)`/`readFully(pos, …)`) and `readVectored` calls. */
+    @volatile var bytes = 0L
+    @volatile var seeks = 0
+    @volatile var positioned = 0
+    @volatile var vectored = 0
   }
+
+  /** The stream under an opened [[FSDataInputStream]], counting into
+    * `rec` every way the caller reads it. Like the checksummed stream it
+    * wraps, it has no `ByteBuffer` read. */
+  final class Counting(in: FSDataInputStream, rec: Opened) extends FSInputStream {
+    override def read(): Int = { val b = in.read(); if (b >= 0) rec.bytes += 1; b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val n = in.read(b, off, len); if (n > 0) rec.bytes += n; n
+    }
+    override def seek(pos: Long): Unit = { rec.seeks += 1; in.seek(pos) }
+    override def getPos: Long = in.getPos
+    override def seekToNewSource(target: Long): Boolean = in.seekToNewSource(target)
+    override def read(pos: Long, b: Array[Byte], off: Int, len: Int): Int = {
+      rec.positioned += 1; in.read(pos, b, off, len)
+    }
+    override def readFully(pos: Long, b: Array[Byte], off: Int, len: Int): Unit = {
+      rec.positioned += 1; in.readFully(pos, b, off, len)
+    }
+    override def readVectored(ranges: java.util.List[_ <: FileRange],
+                              allocate: IntFunction[ByteBuffer]): Unit = {
+      rec.vectored += 1; in.readVectored(ranges, allocate)
+    }
+    override def close(): Unit = in.close()
+  }
+
   val opened = new ConcurrentLinkedQueue[Opened]()
   val listed = new ConcurrentLinkedQueue[String]()
   val existsAsked = new ConcurrentLinkedQueue[String]()
@@ -163,6 +197,75 @@ class ServingReadPathSpec extends SparkSpec {
       assert(hits === Serving.searchBm25(path, terms, 10))
       assertOpened(got, conf, partFiles(s"$path/stats") ++ partFiles(s"$path/manifest") ++
         pruned.flatMap(r => partFiles(s"$path/postings/range_id=$r")))
+    }
+  }
+
+  test("uncached searchIvf and searchBm25 read each opened part file once, front to back, " +
+    "with no seek and no positional or vectored read") {
+    def assertReadOnce(got: Seq[OpenCountingFileSystem.Opened]): Unit = {
+      assert(got.nonEmpty)
+      got.foreach { o =>
+        assert((o.bytes, o.seeks, o.positioned, o.vectored) ===
+          ((new java.io.File(o.path).length, 0, 0, 0)), o.path)
+      }
+    }
+    val ivf = AnnQueries.persistedIvfPath(spark, sfDir)
+    val conf = OpenCountingFileSystem.conf()
+    val q = VectorQueries.qvec(spark, sfDir, 0).toArray
+    assertReadOnce(opens { Serving.searchIvf(ivf, q, 10, nprobe = 4, conf = conf) })
+    val bm25 = HybridQueries.persistedBm25(spark, sfDir)
+    assertReadOnce(opens { Serving.searchBm25(bm25, Seq("hash", "join"), 10, conf = conf) })
+  }
+
+  test("a flipped byte in a probed IVF cell or BM25 range file fails loudly, naming the file") {
+    def copyTree(from: java.io.File, to: java.io.File): Unit =
+      if (from.isDirectory) {
+        to.mkdirs()
+        from.listFiles().foreach(f => copyTree(f, new java.io.File(to, f.getName)))
+      } else java.nio.file.Files.copy(from.toPath, to.toPath)
+    // flip the middle byte of the first part file under `dir`, leaving its .crc as it is
+    def flipOne(dir: String): String = {
+      val file = partFiles(dir).min
+      val p = java.nio.file.Paths.get(file)
+      val b = java.nio.file.Files.readAllBytes(p)
+      b(b.length / 2) = (~b(b.length / 2)).toByte
+      java.nio.file.Files.write(p, b)
+      file
+    }
+    withTempDir("serving-flipped") { tmp =>
+      val ivf = s"${tmp.getPath}/ivf"
+      copyTree(new java.io.File(AnnQueries.persistedIvfPath(spark, sfDir)), new java.io.File(ivf))
+      val q = VectorQueries.qvec(spark, sfDir, 0).toArray
+      val probed = Ann.rankProbes(Ann.loadIvf(spark, ivf).centroids, q, 4)
+      val cell = flipOne(s"$ivf/corpus/ivf_cluster=${probed.head}")
+      val e1 = intercept[ChecksumException](Serving.searchIvf(ivf, q, 10, nprobe = 4))
+      assert(e1.getMessage.contains(cell), e1.getMessage)
+
+      val bm25 = s"${tmp.getPath}/bm25"
+      copyTree(new java.io.File(HybridQueries.persistedBm25(spark, sfDir)), new java.io.File(bm25))
+      val rid = spark.read.parquet(s"$bm25/manifest").select($"range_id", $"min_key", $"max_key")
+        .as[(Int, String, String)].collect()
+        .collectFirst { case (r, lo, hi) if lo != null && "vector" >= lo && "vector" <= hi => r }.get
+      val range = flipOne(s"$bm25/postings/range_id=$rid")
+      val e2 = intercept[ChecksumException](Serving.searchBm25(bm25, Seq("vector"), 10))
+      assert(e2.getMessage.contains(range), e2.getMessage)
+    }
+  }
+
+  test("the whole-file read refuses a file over Int.MaxValue bytes before opening it, " +
+    "naming the path") {
+    withTempDir("serving-oversize") { tmp =>
+      val f = new java.io.File(tmp, "small.parquet")
+      java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3))
+      val conf = OpenCountingFileSystem.conf()
+      val real = Serving.partFiles(conf, tmp.getPath).head
+      val huge = new FileStatus(Int.MaxValue.toLong + 1, false, 1, real.getBlockSize,
+        real.getModificationTime, real.getPath)
+      var err: java.io.IOException = null
+      val got = opens { err = intercept[java.io.IOException](Serving.readPart(conf, huge)) }
+      assert(err.getMessage.contains(real.getPath.toString), err.getMessage)
+      assert(got.isEmpty, "the guard must throw before the file is opened")
+      assert(Serving.readPart(conf, real).toSeq === Seq[Byte](1, 2, 3))
     }
   }
 

@@ -17,10 +17,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try super.withFixture(test) finally graft.operators.Dedup.releasePending()
 
   /** Recursive delete (shared by every temp-dir-using spec). */
-  protected def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete()
-  }
+  protected def rmTree(f: java.io.File): Unit = SparkSpec.rmTree(f)
 
   /** Run `body` against a fresh temp dir, always cleaning it up. */
   protected def withTempDir[A](prefix: String)(body: java.io.File => A): A = {
@@ -30,11 +27,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+  }
+
   lazy val session: SparkSession = {
+    // the warehouse dir goes when the test JVM exits, so runs leave none behind
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(rmTree(warehouse))
     val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
