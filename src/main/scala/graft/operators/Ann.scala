@@ -1,9 +1,7 @@
 package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomProjectionLSHModel}
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -204,33 +202,6 @@ object Ann {
       .map(_.getSeq[Float](1).toArray)
     IvfIndex(centroids, spark.read.parquet(s"$dir/corpus"), embCol, idCol)
   }
-
-  // ------------------------------------------------- MLlib BRP-LSH (§4.3.5)
-
-  /** MLlib batch-ANN path (BASELINE.json `spark_approach`): Euclidean
-    * bucketed-random-projection LSH. Seeded → deterministic. The model
-    * hashes rows into `numHashTables` bucket columns; `approxNearestNeighbors`
-    * probes matching buckets and exact-ranks the candidates. */
-  final case class BrpIndex(model: BucketedRandomProjectionLSHModel,
-                            transformed: DataFrame, embCol: String)
-
-  def buildBrpLsh(emb: DataFrame, bucketLength: Double = 1.0,
-                  numHashTables: Int = 4, embCol: String = "embedding",
-                  seed: Long = 42L): BrpIndex = {
-    val feats = emb.withColumn("__features",
-      array_to_vector(col(embCol).cast("array<double>")))
-    val model = new BucketedRandomProjectionLSH()
-      .setBucketLength(bucketLength).setNumHashTables(numHashTables)
-      .setInputCol("__features").setOutputCol("__hashes").setSeed(seed)
-      .fit(feats)
-    BrpIndex(model, model.transform(feats), embCol)
-  }
-
-  def searchBrpLsh(index: BrpIndex, queryVec: Seq[Float], k: Int): DataFrame =
-    index.model
-      .approxNearestNeighbors(index.transformed,
-        Vectors.dense(queryVec.map(_.toDouble).toArray), k)
-      .drop("__features", "__hashes")
 
   /** Incremental index maintenance: assign NEW vectors to an existing
     * index's centroids without a refit — the nightly-append path. A

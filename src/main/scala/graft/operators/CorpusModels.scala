@@ -317,7 +317,7 @@ object CorpusModels {
     val k = classesAsc.length
     // fail LOUD with the actual problem: an empty class table (a model
     // trained on docs that all tokenized empty) would otherwise AIOOBE
-    // inside the serving/streaming UDF, where the batch path degrades
+    // inside the serving probe, where the batch path degrades
     // to an empty result frame
     require(k > 0, "mcNbKernel: empty class table — the model has no " +
       "trained classes (training corpus tokenized empty?)")
@@ -352,7 +352,7 @@ object CorpusModels {
     * lead byte F0, UTF-16 surrogate D800–DBFF) meets a U+E000–U+FFFF
     * one (UTF-8 lead EE–EF, UTF-16 code unit above the surrogates).
     * Every driver-side class ordering that must reproduce a Spark
-    * tie-break sorts with THIS, or batch and serve/stream could pick
+    * tie-break sorts with THIS, or batch and serve could pick
     * different classes on tied scores. */
   private[graft] val utf8Ordering: Ordering[String] = new Ordering[String] {
     def compare(a: String, b: String): Int = {
@@ -370,7 +370,7 @@ object CorpusModels {
   }
 
   /** Collect a multiclass NB model into the closure-sized maps
-    * [[mcNbScoreColumn]] and the serving probe want: (token →
+    * [[mcNbKernel]] scores with: (token →
     * (class → lp), classes sorted asc as (grp, oov_fp, prior_fp)).
     * Bounded by K·cap rows by construction. Classes sort in UTF-8
     * BYTE order ([[utf8Ordering]]) — the batch argmax window's
@@ -387,25 +387,6 @@ object CorpusModels {
       .sortBy(_._1)(utf8Ordering)
     (v, cls)
   }
-
-  /** Per-ROW multiclass NB prediction for the streaming/serving path —
-    * same contract as the rest of the closure-scoring family: capped
-    * maps ride the closure, rows score independently (stateless, any
-    * streaming output mode), integers and argmax exactly
-    * [[multiclassNbPredict]]'s (batch==stream parity spec-gated).
-    * Returns a struct (pred_class, score_fp); null text predicts the
-    * prior argmax like the batch path's left joins. */
-  def mcNbScoreColumn(vocab: Map[String, Map[String, Long]],
-                      classesAsc: Array[(String, Long, Long)])(text: Column): Column = {
-    val scoreUdf = udf { (toks: Seq[String]) =>
-      val (cls, s) = mcNbKernel(toks, vocab, classesAsc)
-      McNbRow(cls, s)
-    }
-    scoreUdf(TextAnalysis.tokens(text))
-  }
-
-  /** Row shape of [[mcNbScoreColumn]], named as the batch output. */
-  case class McNbRow(pred_class: String, score_fp: Long)
 
   /** DoReMi-flavored domain mixture weights (Xie et al. 2023,
     * "DoReMi: Optimizing Data Mixtures Speeds Up Language Model
@@ -646,7 +627,7 @@ object CorpusModels {
     *    UNCAPPED totals, so capping never changes an in-model LLR.
     *
     * The cap bounds the scoring broadcast ([[nbScore]]) and the
-    * closure map ([[nbModelMap]]) at any corpus size — web-scale
+    * serving probe's model map at any corpus size — web-scale
     * distinct tokens run to 1e9, far beyond broadcast range. Capped-out
     * tokens score the same neutral 0 as tokens never seen in training
     * (rare-token LLRs carry ~zero evidence, so the cap is also
@@ -710,22 +691,11 @@ object CorpusModels {
       .withColumn("keep_pred", col("score_fp") > 0)
   }
 
-  /** Per-ROW NB scoring for the streaming/serving path: the model
-    * rides the closure as a plain Map (kilobytes at capped vocabs)
-    * and every row scores independently — stateless, no aggregation,
-    * so it runs under any streaming output mode with zero state
-    * store. Produces exactly [[nbScore]]'s integers (same long sums,
-    * same neutral-0 unknowns); batch==stream parity is spec-gated. */
-  def nbScoreColumn(model: Map[String, Long], priorFp: Long)(text: Column): Column = {
-    val scoreUdf = udf { (toks: Seq[String]) => nbKernel(toks, model, priorFp) }
-    scoreUdf(TextAnalysis.tokens(text))
-  }
-
   // ------------------------- closure-scoring kernels (ONE loop per model)
-  // Shared by the streaming UDFs above/below and the driver-side
-  // probes (graft.serving.Serving.scoreNb/scorePpl/scoreBigramPpl):
-  // parity-critical logic lives exactly once, so the batch==stream and
-  // batch==serve contracts cannot fork between hand-synced copies.
+  // The driver-side probes (graft.serving.Serving.scoreNb/scoreMcNb/
+  // scorePpl/scoreBigramPpl/scoreBackoffPpl) score one text with these
+  // over the collected model maps; each must reproduce its batch
+  // operator's integers exactly (ServingSpec pins batch == serve).
   // null toks = null text: the batch paths' left joins produce the
   // same neutral row (prior-only / zeros).
 
@@ -781,19 +751,6 @@ object CorpusModels {
     (n, nll)
   }
 
-  /** Per-ROW stupid-backoff cross-entropy for the streaming path —
-    * contract as [[bigramPplScoreColumn]]; parity with
-    * [[backoffPerplexity]] spec-gated. */
-  def backoffPplScoreColumn(bigrams: Map[(String, String), Long],
-                            vocab: Map[String, Long], oovFp: Long,
-                            alphaFp: Long = StupidBackoffAlphaFp)(text: Column): Column = {
-    val scoreUdf = udf { (toks: Seq[String]) =>
-      val (n, nll) = backoffPplKernel(toks, bigrams, vocab, oovFp, alphaFp)
-      BigramPplRow(n, nll, if (n == 0L) 0.0 else nll.toDouble / LpScale / n.toDouble)
-    }
-    scoreUdf(TextAnalysis.tokens(text))
-  }
-
   /** (n_transitions, nll_fp) under capped bigram/context maps —
     * capped-out target scores its context's OOV; unknown/capped-out
     * context DROPS the transition (the [[bigramPerplexity]] inner
@@ -817,13 +774,6 @@ object CorpusModels {
     }
     (n, nll)
   }
-
-  /** Collect a [[nbTrain]] model into the closure-sized form
-    * [[nbScoreColumn]] wants. Bounded by the vocab (cap it at scale —
-    * the same contract as the scoring broadcast). */
-  def nbModelMap(model: DataFrame): Map[String, Long] =
-    model.select(col("token"), col("llr_fp")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Persist a trained NB model next to its corpus (`dir/model`,
     * `dir/prior`) — the batch-train / online-serve split: a nightly
@@ -865,70 +815,6 @@ object CorpusModels {
     stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
     priors.coalesce(1).write.mode("overwrite").parquet(s"$dir/priors")
   }
-
-  /** Collect a [[unigramLm]] vocab into the closure-sized map
-    * [[pplScoreColumn]] wants — cap-bounded by construction. */
-  def lmModelMap(vocab: DataFrame): Map[String, Long] =
-    vocab.select(col("token"), col("logp_fp")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** The OOV log-prob scalar from a [[unigramLm]] stats frame. */
-  def lmOovFp(stats: DataFrame): Long =
-    stats.select(col("oov_logp_fp")).collect()(0).getLong(0)
-
-  /** Per-ROW LM cross-entropy for the streaming/serving path — the
-    * perplexity twin of [[nbScoreColumn]]: the capped vocab rides the
-    * closure as a plain Map, every row scores independently
-    * (stateless, no aggregation, any streaming output mode), and the
-    * integers are exactly [[perplexity]]'s (same long sums, same OOV
-    * routing, same two-IEEE-division cross-entropy; batch==stream
-    * parity is spec-gated). Returns a struct column
-    * (n_tokens, nll_fp, cross_entropy); null text scores (0, 0, 0.0)
-    * like the batch path's left join. */
-  def pplScoreColumn(vocab: Map[String, Long], oovFp: Long)(text: Column): Column = {
-    val scoreUdf = udf { (toks: Seq[String]) =>
-      val (n, nll) = pplKernel(toks, vocab, oovFp)
-      PplRow(n, nll, if (n == 0L) 0.0 else nll.toDouble / LpScale / n.toDouble)
-    }
-    scoreUdf(TextAnalysis.tokens(text))
-  }
-
-  /** Row shape of [[pplScoreColumn]] — field names match the batch
-    * [[perplexity]] output so `select("ppl.*")` is the batch schema. */
-  case class PplRow(n_tokens: Long, nll_fp: Long, cross_entropy: Double)
-
-  /** Collect a [[bigramLm]] model into the closure-sized maps
-    * [[bigramPplScoreColumn]] wants — both cap-bounded by
-    * construction (bigramCap/contextCap are required). */
-  def bigramModelMaps(bigrams: DataFrame, contexts: DataFrame)
-      : (Map[(String, String), Long], Map[String, Long]) = {
-    val bi = bigrams.select(col("ctx"), col("tok"), col("logp_fp")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val ctx = contexts.select(col("ctx"), col("oov_logp_fp")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    (bi, ctx)
-  }
-
-  /** Per-ROW bigram-LM cross-entropy for the streaming path — the
-    * context-aware sibling of [[pplScoreColumn]], same contract:
-    * capped maps ride the closure, rows score independently, and the
-    * integers are exactly [[bigramPerplexity]]'s (same transition
-    * enumeration, capped-out-target OOV, unknown/capped-out-context
-    * DROP, long sums, division chain; batch==stream parity
-    * spec-gated). Field names follow the batch output
-    * (n_transitions). */
-  def bigramPplScoreColumn(bigrams: Map[(String, String), Long],
-                           contexts: Map[String, Long])(text: Column): Column = {
-    val scoreUdf = udf { (toks: Seq[String]) =>
-      val (n, nll) = bigramPplKernel(toks, bigrams, contexts)
-      BigramPplRow(n, nll, if (n == 0L) 0.0 else nll.toDouble / LpScale / n.toDouble)
-    }
-    scoreUdf(TextAnalysis.tokens(text))
-  }
-
-  /** Row shape of [[bigramPplScoreColumn]], named as the batch
-    * [[bigramPerplexity]] output. */
-  case class BigramPplRow(n_transitions: Long, nll_fp: Long, cross_entropy: Double)
 
   // ---------------------------------------------------- character entropy
 
@@ -1051,8 +937,7 @@ object CorpusModels {
     * root between the caller's snapshot resolve and this publish, so a
     * build derived from that snapshot would silently DISCARD the
     * interleaved publish's rows/tombstones if it shipped. Callers
-    * re-resolve, rebuild from the fresh version, and retry (the
-    * [[graft.streaming.StreamingIngest]] epoch loop). */
+    * re-resolve, rebuild from the fresh version, and retry. */
   final class ConcurrentPublishException(msg: String)
     extends RuntimeException(msg)
 
@@ -1063,12 +948,11 @@ object CorpusModels {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Run `body` holding this JVM's publish lock for `root`. Two
-    * publishers that share one root AND one driver (the actual
-    * topology for an insert stream + delete stream over one HNSW
-    * root) are fully serialized: each epoch's resolve → build →
-    * publish becomes atomic with respect to the sibling's, so no
-    * publish can build from a snapshot the other has already
-    * superseded. Cross-JVM publishers are NOT covered by the lock —
+    * publishers that share one root AND one driver (say an HNSW
+    * append and an HNSW delete over one root) are fully serialized:
+    * each publisher's resolve → build → publish becomes atomic with
+    * respect to the other's, so no publish can build from a snapshot
+    * the other has already superseded. Cross-JVM publishers are NOT covered by the lock —
     * they rely on [[publishModelVersion]]'s `expectCurrent` abort
     * (optimistic concurrency; the doomed publish detects the moved
     * pointer and retries from the fresh version). The lock is
@@ -1103,7 +987,7 @@ object CorpusModels {
     * artifact was BUILT from, and the publish aborts with
     * [[ConcurrentPublishException]] — before claiming anything — if
     * another publisher flipped the pointer since (the
-    * lost-tombstone/lost-append guard for multi-stream roots). */
+    * lost-tombstone/lost-append guard for multi-writer roots). */
   def publishModelVersion(spark: org.apache.spark.sql.SparkSession, root: String,
                           retainPrevious: Int = 1,
                           expectCurrent: Option[String] = None)
@@ -1131,7 +1015,7 @@ object CorpusModels {
     // or half-written dir behind. (A cross-JVM flip between this check
     // and flipCurrent below remains possible on a plain Hadoop FS —
     // pointer flips are not CAS — but same-JVM publishers, the
-    // deployed topology for multi-stream roots, are fully serialized
+    // deployed topology for multi-writer roots, are fully serialized
     // by the lock.)
     expectCurrent.foreach { exp =>
       if (exp.stripSuffix("/") != cur.stripSuffix("/"))

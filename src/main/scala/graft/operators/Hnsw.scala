@@ -713,8 +713,7 @@ object Hnsw {
       .map(_.getSeq[Float](1).toArray)
     val p = spark.read.parquet(s"$dir/params").head()
     // layouts persisted before the tombstone column exist in the wild
-    // (any saveHnsw dir from an earlier version, incl. the streaming
-    // maintenance chain's previous published version) — default them
+    // (any saveHnsw dir from an earlier version) — default them
     // to all-live instead of failing the column resolution
     val raw = spark.read.parquet(s"$dir/graph")
     val withDeleted =

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table-maintenance utilities — the file-management side of the 100 TB
-  * story. Streaming ingest (foreachBatch appends) and per-collection
-  * dual-writes accumulate small files; scan throughput collapses when
-  * file count dominates (every file = one task + one footer read).
+  * story. Incremental appends and per-collection dual-writes
+  * accumulate small files; scan throughput collapses when file count
+  * dominates (every file = one task + one footer read).
   */
 object Maintenance {
 

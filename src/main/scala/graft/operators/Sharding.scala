@@ -61,12 +61,10 @@ object Sharding {
     * shard — without it, every task holding any shard's rows opens a
     * file in every directory (N_tasks × N_shards small files). */
   def exportShards(docs: DataFrame, keyCol: String, nShards: Int,
-                   path: String,
-                   mode: org.apache.spark.sql.SaveMode =
-                     org.apache.spark.sql.SaveMode.Overwrite): Unit =
+                   path: String): Unit =
     assignShards(docs, keyCol, nShards)
       .repartition(nShards, col("shard"))
-      .write.mode(mode).partitionBy("shard").parquet(path)
+      .write.mode("overwrite").partitionBy("shard").parquet(path)
 
   /** Incremental re-export: rewrite ONLY the shard directories whose
     * membership changed between two corpus snapshots — at 100 TB the

@@ -200,6 +200,21 @@ object Urls {
     s"$scheme://$auth${if (path.isEmpty) "/" else normPath(path)}$query"
   }
 
+  /** The fused per-page head signal: NULL when the page declares
+    * `noindex` (drop it), else its resolved canonical group key — ONE
+    * [[graft.sources.HtmlText.headSignals]] scanner walk per page
+    * where the two-UDF form walked the HTML twice. NULL is unambiguous
+    * as the drop marker: with a non-null page URL, [[resolveUrl]]
+    * never returns null. */
+  private def canonKeyUdf = udf((u: String, h: String) => {
+    val (noindex, canon) = graft.sources.HtmlText.headSignals(h)
+    if (noindex) null
+    else canon match {
+      case Some(c) => resolveUrl(u, c)
+      case None => u
+    }
+  })
+
   /** Canonical-URL collapse with robots `noindex` honoring — the two
     * head-metadata signals a crawl pipeline consumes BEFORE spending
     * dedup/quality compute (the same page crawled at many URLs
@@ -221,36 +236,6 @@ object Urls {
     * (never the full extractor — only the head scanners), and the
     * collapse is ONE map-side-combined hash aggregation on the
     * canonical key; the page HTML itself never shuffles. */
-  /** [[normalizeUrl]] as a column — the frontier-dedup key computed
-    * in-plan (scan-task narrow map, no shuffle). */
-  def normalizeUrlCol(url: Column): Column = {
-    val u = udf((x: String) => normalizeUrl(x))
-    u(url)
-  }
-
-  /** The fused per-page canonical key as a column: NULL when the page
-    * declares `noindex` (drop it), else its resolved canonical group
-    * key — the PER-ROW half of [[canonicalCollapse]], exposed so a
-    * streaming front door can run every stateless crawl stage in-plan
-    * while the corpus-global collapse stays a batch/at-rest job. */
-  def canonicalKeyCol(url: Column, html: Column): Column =
-    canonKeyUdf(url, html)
-
-  /** The fused per-page head signal: NULL when the page declares
-    * `noindex` (drop it), else its resolved canonical group key — ONE
-    * [[graft.sources.HtmlText.headSignals]] scanner walk per page
-    * where the two-UDF form walked the HTML twice. NULL is unambiguous
-    * as the drop marker: with a non-null page URL, [[resolveUrl]]
-    * never returns null. */
-  private def canonKeyUdf = udf((u: String, h: String) => {
-    val (noindex, canon) = graft.sources.HtmlText.headSignals(h)
-    if (noindex) null
-    else canon match {
-      case Some(c) => resolveUrl(u, c)
-      case None => u
-    }
-  })
-
   def canonicalCollapse(pages: DataFrame, urlCol: String = "url",
                         htmlCol: String = "html"): DataFrame = {
     pages

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Event-stream analytics in batch form over the `events` fixture —
-  * the batch twins of the StreamingIngest shapes (same logical plans a
-  * Structured Streaming run would produce), all oracle-checked.
+/** Event-stream analytics in batch form over the `events` fixture,
+  * all oracle-checked.
   *
   * Numeric-sum parity note: `value` sums run as exact integer cents
   * (round(value*100) per row, BIGINT sum) — double summation order
@@ -22,7 +21,7 @@ import graft.Tables
 object EventQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // tumbling-window aggregation (batch twin of windowedEventCounts);
+    // tumbling-window aggregation;
     // window key emitted as epoch SECONDS (BIGINT) for engine-agnostic
     // hashing (ts arrives as epoch-nanos BIGINT, see Tables.events)
     "ev_window_agg" -> { (s, dir) =>
@@ -36,7 +35,6 @@ object EventQueries {
         .orderBy(col("window_start_s"), col("event_type"))
     },
     // gap-based sessionization in batch: lag + cumulative-sum session ids
-    // (the window-function twin of the mapGroupsWithState op)
     "ev_sessionize" -> { (s, dir) =>
       // integer epoch-microseconds on both engines: the fixture's ts is
       // ns-precision parquet (Spark truncates to us, DuckDB keeps ns) —

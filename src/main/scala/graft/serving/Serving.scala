@@ -19,6 +19,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, SeekableInputStream}
 import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{PartitionedTopK, TopK}
 
@@ -1337,9 +1338,17 @@ object Serving {
       .map(rid => loadTermPostings(base, rid, conf, cache))
     // vocabulary expansion: qterms within maxDist of each distinct
     // term — the vocabulary is the cached entries' key sets, so a
-    // resident endpoint derives nothing per query beyond the edits
+    // resident endpoint derives nothing per query beyond the edits.
+    // The thresholded kernel behind Spark's `levenshtein` (the batch
+    // operator's and the oracle's metric) returns −1 past maxDist.
+    val qUtf8 = qts.map(q => q -> UTF8String.fromString(q))
     val expansion: Map[String, Seq[String]] = entries.flatMap(_.keys).distinct
-      .map(t => t -> qts.filter(q => levenshtein(t, q) <= maxDist))
+      .map { t =>
+        val tUtf8 = UTF8String.fromString(t)
+        t -> qUtf8.collect {
+          case (q, qu) if tUtf8.levenshteinDistance(qu, maxDist) >= 0 => q
+        }
+      }
       .filter(_._2.nonEmpty).toMap
     val byDoc = mutable.LinkedHashMap.empty[Long, (Long, mutable.Set[String])]
     for (entry <- entries; (t, p) <- entry; qs <- expansion.get(t)) {
@@ -1358,27 +1367,6 @@ object Serving {
       if (top.admits(key, id)) top.add(key, id, FuzzyHit(id, s, qs.size.toLong))
     }
     top.result
-  }
-
-  /** Classic unweighted Wagner–Fischer — the same metric as Spark's
-    * `levenshtein` function, which the batch operator and the oracle
-    * both ship. */
-  private def levenshtein(a: String, b: String): Int = {
-    var prev = Array.tabulate(b.length + 1)(identity)
-    var cur = new Array[Int](b.length + 1)
-    var i = 1
-    while (i <= a.length) {
-      cur(0) = i
-      var j = 1
-      while (j <= b.length) {
-        cur(j) = math.min(math.min(prev(j) + 1, cur(j - 1) + 1),
-          prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-        j += 1
-      }
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    prev(b.length)
   }
 
   // ------------------------------------------------ positional index probes
@@ -1535,8 +1523,7 @@ object Serving {
       require(saw, s"no prior row under $base/prior")
       java.lang.Long.valueOf(p)
     }.longValue()
-    // the ONE scoring loop, shared with the batch-parity UDF
-    // (CorpusModels.nbScoreColumn) — the contract cannot fork
+    // the ONE NB scoring loop (ServingSpec pins it == batch nbScore)
     val s = graft.operators.CorpusModels.nbKernel(
       graft.operators.CorpusModels.splitTokens(text), llr, priorFp)
     NbScore(s, s > 0)
@@ -1644,7 +1631,7 @@ object Serving {
     * [[graft.operators.CorpusModels.saveBigramLm]] layout plus a
     * [[graft.operators.CorpusModels.saveLmModel]] layout, no Spark —
     * the serving form of `lm_backoff_ppl` (same
-    * `CorpusModels.backoffPplKernel` as the batch-parity UDF:
+    * `CorpusModels.backoffPplKernel` scoring loop:
     * capped-table bigram lp, else ln(0.4)-penalty backoff to the
     * unigram; nothing drops). Doc-for-doc parity + zero Spark jobs
     * spec-pinned; freshness-keyed caching, as [[scoreNb]]. */

@@ -36,9 +36,9 @@ object CsvDocs {
   private val CorruptCol = "__graft_corrupt"
 
   /** The ONE lines→status transform (shape shared with
-    * [[JsonlDocs.statusFromLines]] so a streaming twin composes the
-    * same way). PERMISSIVE `from_csv` sets the corrupt-record column
-    * on type mismatch and on field-count mismatch in EITHER direction
+    * [[JsonlDocs.statusFromLines]]). PERMISSIVE `from_csv` sets the
+    * corrupt-record column on type mismatch and on field-count
+    * mismatch in EITHER direction
     * — CSV fields are positional, so unlike JSONL's named fields a
     * short row is structural corruption (no way to know which fields
     * are absent) and quarantines rather than null-filling. */

@@ -29,11 +29,9 @@ object JsonlDocs {
     * non-JSON line yields a null struct; both forms are quarantined. */
   private val CorruptCol = "__graft_corrupt"
 
-  /** The ONE lines→status transform shared by the batch reader and the
-    * streaming twin ([[graft.streaming.StreamingIngest.jsonlIngestStream]])
-    * — stream==batch parse parity is enforced by construction, not by
-    * copy-paste. Input: a DataFrame/stream with a single `value` line
-    * column. Output: `raw_line`, `is_good`, then the schema columns. */
+  /** The ONE lines→status transform behind [[readWithStatus]]. Input:
+    * a DataFrame with a single `value` line column. Output:
+    * `raw_line`, `is_good`, then the schema columns. */
   private[graft] def statusFromLines(lines: DataFrame,
                                      schema: StructType): DataFrame = {
     val reserved = Seq(CorruptCol, "raw_line", "is_good")

@@ -449,7 +449,9 @@ class HnswSpec extends SparkSpec {
     val index = graft.queries.AnnQueries.persistedIvf(spark, sfDir)
     val graph = Hnsw.buildShards(index.assigned, P)
     val delIds = emb.where($"vec_id" % 5 === 0).select($"vec_id")
-    val tomb = Hnsw.deleteFromShards(graph, delIds)
+    // an id the graph has never held is ignored, not an error
+    val tomb = Hnsw.deleteFromShards(graph,
+      delIds.union(Seq(424242424L).toDF("vec_id")))
     // structure untouched: same rows modulo the deleted column
     def structure(df: org.apache.spark.sql.DataFrame) = df
       .orderBy($"vec_id", $"layer")

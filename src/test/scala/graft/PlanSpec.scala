@@ -437,4 +437,40 @@ class PlanSpec extends SparkSpec {
     assert(hits.count() <= 3)
     assert(hits.select($"lang").distinct().as[String].collect().toSeq === Seq("en"))
   }
+
+  test("GraftExtensions injection point applies cleanly") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.GraftExtensions().apply(ext) // must not throw
+    // the suite session is built by GraftSession, whose
+    // spark.sql.extensions conf injects all six functions: a fresh
+    // session on the same context (no temp functions from any earlier
+    // Graft.init call) resolves each name through spark.sql
+    val fresh = spark.newSession()
+    val zip = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val zos = new java.util.zip.ZipOutputStream(bos)
+      zos.putNextEntry(new java.util.zip.ZipEntry("a.txt"))
+      zos.write("hi".getBytes("UTF-8")); zos.closeEntry(); zos.close()
+      bos.toByteArray.map(b => f"$b%02X").mkString
+    }
+    val a = "array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))"
+    val b = "array(CAST(1.0 AS FLOAT), CAST(4.0 AS FLOAT))"
+    val q = s"""SELECT dot_f32($a, $b) AS dot, l2_dist_f32($a, $b) AS l2,
+               |  l2sq_f32($a, $b) AS l2sq, cos_sim_f32($a, $b) AS cos,
+               |  sorted_intersect_size(array('a','b'), array('b','c')) AS i,
+               |  z.member_name AS m
+               |FROM (SELECT 1) LATERAL VIEW explode_zip(X'$zip') z
+               |  AS member_name, member_bytes""".stripMargin
+    def run(s: org.apache.spark.sql.SparkSession) = s.sql(q).collect().toSeq
+    val viaConf = run(fresh)
+    assert(viaConf.length === 1)
+    val r = viaConf.head
+    assert(r.getFloat(0) === 9.0f && r.getFloat(1) === 2.0f &&
+      r.getFloat(2) === 4.0f && r.getInt(4) === 1 && r.getString(5) === "a.txt")
+    assert(math.abs(r.getFloat(3) - 9.0f / math.sqrt(5.0 * 17.0).toFloat) < 1e-6)
+    // programmatic init registers from the same table: idempotent
+    graft.Graft.init(fresh)
+    graft.Graft.init(fresh)
+    assert(run(fresh) === viaConf)
+  }
 }

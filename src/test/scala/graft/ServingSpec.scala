@@ -35,6 +35,18 @@ class ServingSpec extends SparkSpec {
       .select($"vec_id", $"label", $"ivf_cluster".cast("int"), $"dist")
       .as[(Long, Int, Int, Double)].collect().toSeq
 
+  /** The fixture docs plus four texts no model was trained on:
+    * unknown tokens only, a fixture text with an unknown token
+    * appended, a single token, and empty text. */
+  private def withUnseenTexts(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val head = docs.select("text").head().getString(0)
+    val oneToken = head.split(" ").filter(_.nonEmpty).head
+    docs.select("doc_id", "text").union(Seq(
+      (-1L, "zzunseen qqunseen"), (-2L, s"$head zzunseen"),
+      (-3L, oneToken), (-4L, "")).toDF("doc_id", "text"))
+  }
+
   test("IVF serving probe == Spark searchIvf, hit for hit") {
     val path = ivfPath
     val cells = Ann.loadIvf(spark, path).centroids.length
@@ -299,10 +311,11 @@ class ServingSpec extends SparkSpec {
     val (model, prior) = CorpusModels.nbTrain(labeled, "text", "keep", 1 << 20)
     val dir = java.nio.file.Files.createTempDirectory("nb-serve").toString
     CorpusModels.saveNbModel(model, prior, dir)
-    val batch = CorpusModels.nbScore(docs, "doc_id", "text", model, prior)
+    val scored = withUnseenTexts(docs)
+    val batch = CorpusModels.nbScore(scored, "doc_id", "text", model, prior)
       .collect().map(r => r.getLong(0) ->
         ((r.getAs[Long]("score_fp"), r.getAs[Boolean]("keep_pred")))).toMap
-    val texts = docs.select("doc_id", "text").collect()
+    val texts = scored.collect()
       .map(r => r.getLong(0) -> r.getString(1))
     // warm the model map into THE cache the loop uses, then assert the
     // probes launch no jobs
@@ -326,10 +339,11 @@ class ServingSpec extends SparkSpec {
     val (vocab, stats) = CorpusModels.unigramLm(docs, "text", 24)
     val dir = java.nio.file.Files.createTempDirectory("lm-serve").toString
     CorpusModels.saveLmModel(vocab, stats, dir)
-    val batch = CorpusModels.perplexity(docs, "doc_id", "text", vocab, stats)
+    val scored = withUnseenTexts(docs)
+    val batch = CorpusModels.perplexity(scored, "doc_id", "text", vocab, stats)
       .collect().map(r => r.getLong(0) -> ((r.getAs[Long]("n_tokens"),
         r.getAs[Long]("nll_fp"), r.getAs[Double]("cross_entropy")))).toMap
-    val texts = docs.select("doc_id", "text").collect()
+    val texts = scored.collect()
       .map(r => r.getLong(0) -> r.getString(1))
     val cache = Serving.newCache()
     Serving.scorePpl(dir, texts.head._2, cache = cache)
@@ -352,10 +366,11 @@ class ServingSpec extends SparkSpec {
     val (bi, ctx) = CorpusModels.bigramLm(docs, "text", 512, 24)
     val dir = java.nio.file.Files.createTempDirectory("bigram-serve").toString
     CorpusModels.saveBigramLm(bi, ctx, dir)
-    val batch = CorpusModels.bigramPerplexity(docs, "doc_id", "text", bi, ctx)
+    val scored = withUnseenTexts(docs)
+    val batch = CorpusModels.bigramPerplexity(scored, "doc_id", "text", bi, ctx)
       .collect().map(r => r.getLong(0) -> ((r.getAs[Long]("n_transitions"),
         r.getAs[Long]("nll_fp"), r.getAs[Double]("cross_entropy")))).toMap
-    val texts = docs.select("doc_id", "text").collect()
+    val texts = scored.collect()
       .map(r => r.getLong(0) -> r.getString(1))
     val cache = Serving.newCache()
     Serving.scoreBigramPpl(dir, texts.head._2, cache = cache)
@@ -384,10 +399,11 @@ class ServingSpec extends SparkSpec {
     val lmDir = java.nio.file.Files.createTempDirectory("bko-lm").toString
     CorpusModels.saveBigramLm(bi, ctx, biDir)
     CorpusModels.saveLmModel(vocab, stats, lmDir)
-    val batch = CorpusModels.backoffPerplexity(docs, "doc_id", "text", bi, vocab, stats)
+    val scored = withUnseenTexts(docs)
+    val batch = CorpusModels.backoffPerplexity(scored, "doc_id", "text", bi, vocab, stats)
       .collect().map(r => r.getLong(0) -> ((r.getAs[Long]("n_transitions"),
         r.getAs[Long]("nll_fp"), r.getAs[Double]("cross_entropy")))).toMap
-    val texts = docs.select("doc_id", "text").collect()
+    val texts = scored.collect()
       .map(r => r.getLong(0) -> r.getString(1))
     val cache = Serving.newCache()
     Serving.scoreBackoffPpl(biDir, lmDir, texts.head._2, cache = cache)
@@ -411,11 +427,12 @@ class ServingSpec extends SparkSpec {
     val priors = CorpusModels.multiclassNbPriors(docs, "lang")
     val dir = java.nio.file.Files.createTempDirectory("mcnb-serve").toString
     CorpusModels.saveMcNbModel(vocab, stats, priors, dir)
-    val batch = CorpusModels.multiclassNbPredict(docs, "doc_id", "text",
+    val scored = withUnseenTexts(docs)
+    val batch = CorpusModels.multiclassNbPredict(scored, "doc_id", "text",
         vocab, stats, priors)
       .collect().map(r => r.getLong(0) ->
         ((r.getString(2), r.getAs[Long]("score_fp")))).toMap
-    val texts = docs.select("doc_id", "text").collect()
+    val texts = scored.collect()
       .map(r => r.getLong(0) -> r.getString(1))
     val cache = Serving.newCache()
     Serving.scoreMcNb(dir, texts.head._2, cache = cache)
