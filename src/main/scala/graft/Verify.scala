@@ -30,12 +30,9 @@ object Verify {
         // would let the oracle compare silently pass on old output.
         // Recursive — a failed write can leave _temporary/ subtrees that
         // a flat listFiles delete would silently skip.
-        def rmTree(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-          if (!f.delete() && f.exists())
-            System.err.println(s"[verify] WARNING: could not delete stale $f")
-        }
-        rmTree(new java.io.File(s"$outDir/$name"))
+        val stale = new java.io.File(s"$outDir/$name")
+        if (!graft.queries.HybridQueries.rmTree(stale))
+          System.err.println(s"[verify] WARNING: could not delete stale $stale")
       }
       finally graft.operators.Dedup.releasePending()
     }

@@ -841,24 +841,14 @@ object Ann {
     * off the assignment counts). Inherits the graph's exact-arithmetic
     * oracle story wholesale.
     *
-    * `refined = true` scores off [[knnGraphRefined]] instead: the
-    * co-cell graph OVERSTATES outlierness at cell boundaries — a
+    * The co-cell graph OVERSTATES outlierness at cell boundaries: a
     * boundary vector whose true nearest neighbors sit in the adjacent
-    * cell gets an inflated rank-k distance and a false outlier flag
-    * that can outrank genuine loners. The refined graph (multi-probe
-    * seed + NN-descent) sees across the boundary, and also scores
-    * vectors whose home cell holds < k members (seed candidates come
-    * from `probes` cells). Costlier — opt in when the corpus is
-    * unclustered or boundary-heavy (the fixture case: co-cell recall
-    * 0.30). `probes`/`refineRounds`/`workK` pass through. */
-  def knnOutliers(index: IvfIndex, k: Int, n: Int,
-                  refined: Boolean = false, probes: Int = 2,
-                  refineRounds: Int = 2, workK: Int = 0): DataFrame = {
+    * cell gets an inflated rank-k distance. The same score read off
+    * the rank-k row of [[knnGraphRefined]] sees across the boundary
+    * (the `outlier_knn_refined` query). */
+  def knnOutliers(index: IvfIndex, k: Int, n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val g =
-      if (refined) knnGraphRefined(index, k, probes, refineRounds, workK)
-      else knnGraph(index, k)
-    g.filter(col("rn") === k)
+    knnGraph(index, k).filter(col("rn") === k)
       .select(col("src_id"), col("dist").as("knn_dist"))
       .orderBy(col("knn_dist").desc, col("src_id"))
       .limit(n)

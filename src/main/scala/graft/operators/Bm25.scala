@@ -738,24 +738,13 @@ object Bm25 {
     fs.delete(old, true)
   }
 
-  /** BM25 top-k over a [[buildPersistedIndex]] layout: identical
-    * results to [[topK]] on the indexed snapshot (spec-pinned), but
-    * the corpus is never touched — the query's terms are grouped into
-    * the range directories that can contain them (ONE driver-side pass
-    * over the nRanges-row manifest, which IS the zone-map read) and
-    * each overlapping directory is scanned once with an `isin` term
-    * filter that parquet row-group stats prune further. Cost scales
-    * with the query's postings, not the corpus, and never reads a
-    * directory twice however many terms share it. An empty index (or
-    * a query whose terms are all out of range) returns an empty
-    * result, never a schema-inference crash. */
   /** THE zone-map pruning rule for term-range-sharded layouts — one
-    * owner, shared with [[Positional.readPostings]]: a range survives
+    * owner, behind [[readRangePostings]]: a range survives
     * iff some key can fall inside its [min, max]. Keys are [a-z0-9]+
     * by construction ([[terms]]), so Java's String ordering ==
     * Spark's UTF8String binary ordering and the driver-side test
     * matches the manifest's min/max. */
-  private[operators] def overlappingRangeIds(
+  private def overlappingRangeIds(
       spark: org.apache.spark.sql.SparkSession,
       base: String, keys: Seq[String]): Seq[Long] =
     spark.read.parquet(s"$base/manifest")
@@ -765,6 +754,34 @@ object Bm25 {
         r.getString(1) <= t && t <= r.getString(2)))
       .map(_.getLong(0)).sorted.toSeq
 
+  /** The pruned postings read of a term-range-sharded layout, shared
+    * with [[Positional.readPostings]]: the rows for `terms` from each
+    * overlapping range directory, or the schema-pinning empty
+    * `schema/` file when no range overlaps. */
+  private[operators] def readRangePostings(
+      spark: org.apache.spark.sql.SparkSession,
+      base: String, terms: Seq[String]): DataFrame = {
+    val overlapping = overlappingRangeIds(spark, base, terms)
+    if (overlapping.isEmpty) spark.read.parquet(s"$base/schema")
+    else spark.read.option("basePath", s"$base/postings")
+      .parquet(overlapping.map(id => s"$base/postings/range_id=$id"): _*)
+      .filter(col("term").isin(terms: _*))
+      .drop("range_id")
+  }
+
+  /** BM25 top-k over a [[buildPersistedIndex]] layout: identical
+    * results to [[topK]] on the indexed snapshot (spec-pinned), but
+    * the corpus is never touched — the query's terms are grouped into
+    * the range directories that can contain them (ONE driver-side pass
+    * over the nRanges-row manifest, which IS the zone-map read) and
+    * each overlapping directory is scanned once with an `isin` term
+    * filter that parquet row-group stats prune further. Cost scales
+    * with the query's postings, not the corpus, and never reads a
+    * directory twice however many terms share it. An empty index (or
+    * a query whose terms are all out of range) reads the
+    * schema-pinning empty `schema/` file, so it returns an empty
+    * result with the populated read's schema (id type included), never
+    * a schema-inference crash. */
   def searchPersistedIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String, queryTerms: Seq[String], k: Int,
                            k1: Double = 1.2, b: Double = 0.75,
@@ -772,29 +789,7 @@ object Bm25 {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(k > 0, s"k must be positive, got $k")
     val base = path.stripSuffix("/")
-    val terms = queryTerms.distinct
-    val overlapping = overlappingRangeIds(spark, base, terms)
-    // the schema-pinning empty file keeps the no-range path's result
-    // schema identical to a populated read (id type included). Indexes
-    // persisted by builds predating schema/ fall back to the postings
-    // files' own schema; a pre-schema/ EMPTY index (no files at all)
-    // falls back to the long-id shape — documented, and unreachable
-    // from any index this builder writes today.
-    def pinnedEmpty: DataFrame =
-      scala.util.Try(spark.read.parquet(s"$base/schema"))
-        .orElse(scala.util.Try(
-          spark.read.parquet(s"$base/postings").filter(lit(false))
-            .drop("range_id")))
-        .getOrElse {
-          import spark.implicits._
-          Seq.empty[(Long, Long, String, Long)].toDF("id", "dl", "term", "tf")
-        }
-    val postings =
-      if (overlapping.isEmpty) pinnedEmpty
-      else spark.read.option("basePath", s"$base/postings")
-        .parquet(overlapping.map(id => s"$base/postings/range_id=$id"): _*)
-        .filter(col("term").isin(terms: _*))
-        .drop("range_id")
+    val postings = readRangePostings(spark, base, queryTerms.distinct)
     val dfByTerm = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = spark.read.parquet(s"$base/stats")
     scoreAndTake(postings, dfByTerm, stats, k, k1, b, rationalIdf)

@@ -85,30 +85,14 @@ object Clustering {
     * Plan shape: pair generation repartitions by cluster (candidate-
     * bounded, never corpus×corpus); components run on the pair set
     * (large-star/small-star, O(log n) rounds); the keep rule is two
-    * map-side-combinable aggs ([[Dedup.keepCanonicalBy]]). Skewed
-    * mega-clusters are the known failure mode — cap or split them at
-    * fit time (more k), not at pair time.
+    * map-side-combinable aggs
+    * ([[Dedup.keepCanonicalByFromComponents]]). Skewed mega-clusters
+    * are the known failure mode — cap or split them at fit time (more
+    * k), not at pair time.
     *
-    * `refinedPairs = true` swaps the within-cluster pair generator for
-    * [[Ann.knnGraphRefined]] edges (cosine-verified against the same
-    * threshold): the cluster-scoped form is BLIND to near-dups whose
-    * twins land in adjacent cells (the boundary blind spot knnGraph
-    * shares — fixture recall 0.30), and a mega-cluster costs |cell|²
-    * pairs where the graph is n·workK-bounded. Trade-off: candidates
-    * come from an L2-ranked graph while the dedup predicate is COSINE,
-    * so the recall story assumes a (near-)normalized corpus — on the
-    * unit sphere L2 order IS cosine order, and there a near-dup is
-    * missed only when > pairK mutual twins crowd each other's lists
-    * (any such clique still collapses transitively through the
-    * components step as long as each member sees ONE other member).
-    * On a corpus with wild norm spread, a cosine-identical pair at
-    * very different magnitudes (v vs 3·v) can rank beyond both
-    * vectors' top-pairK L2 lists and be missed — normalize first, or
-    * keep the cluster-scoped path. `probes`/`refineRounds` pass
-    * through to the graph. */
-  def semDedup(index: Ann.IvfIndex, threshold: Double,
-               refinedPairs: Boolean = false, pairK: Int = 10,
-               probes: Int = 2, refineRounds: Int = 2): DataFrame = {
+    * Near-dups whose twins land in adjacent cells are not paired: the
+    * same boundary blind spot [[Ann.knnGraph]] has. */
+  def semDedup(index: Ann.IvfIndex, threshold: Double): DataFrame = {
     val spark = index.assigned.sparkSession
     val centDf = Ann.centroidsDf(spark, index.centroids, "ivf_cluster")
       .withColumnRenamed("centroid", "__centroid")
@@ -119,103 +103,50 @@ object Clustering {
         Ann.fp(graft.functions.VectorFunctions.l2DistF32(
           col(index.embCol), col("__centroid")).cast("double")).as("dist_fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // shared tail: flag every base row with its survival verdict
-    def flagKept(keptIds: DataFrame): DataFrame = {
-      val kept = keptIds.select(col(index.idCol)).withColumn("__kept", lit(true))
-      val out = base.select(col(index.idCol), col("ivf_cluster"), col("dist_fp"))
-        .join(kept, Seq(index.idCol), "left")
-        .select(col(index.idCol), col("ivf_cluster"), col("dist_fp"),
-          coalesce(col("__kept"), lit(false)).as("kept"))
-      Dedup.releaseAfterUse(base)
-      out
-    }
-    if (refinedPairs) {
-      // runtime signal for the scaladoc's normalization assumption
-      // (candidates are L2-ranked, the verify is cosine): if the
-      // corpus's norm spread is wide, cosine twins at different
-      // magnitudes can fall outside every top-pairK L2 list and the
-      // miss is SILENT — which is why this check is eager. Honest
-      // cost note: this agg is the action that computes and caches
-      // `base`, so refinedPairs=true does corpus work at PLAN time; a
-      // caller that executes the result amortizes it (the cache
-      // serves every downstream phase), but a plan-only caller pays
-      // the scan.
-      val norm = sqrt(graft.functions.VectorFunctions
-        .dotF32(col(index.embCol), col(index.embCol)).cast("double"))
-      val ns = base.agg(min(norm), max(norm)).head()
-      // empty index: min/max aggregate to null — skip the warning (the
-      // operator stays lazily-empty downstream) instead of NPEing here
-      if (!ns.isNullAt(0) && !ns.isNullAt(1)) {
-        val (nMin, nMax) = (ns.getDouble(0), ns.getDouble(1))
-        if (nMin <= 0.0 || nMax / nMin > 1.25)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            f"semDedup(refinedPairs=true): corpus norm spread " +
-              f"[$nMin%.4g, $nMax%.4g] exceeds the near-normalized " +
-              "assumption — L2-ranked candidates may miss cosine " +
-              "near-dups at different magnitudes; normalize embeddings " +
-              "first or use the cluster-scoped path")
-      }
-      // graph edges as candidates (n·workK-bounded, boundary-aware);
-      // re-attach both embeddings for the cosine verify — the edge's
-      // dist is L2, the dedup predicate is cosine
-      val pairs = Ann.knnGraphRefined(index, pairK, probes, refineRounds)
-        // kNN edges are DIRECTED (a's top-k may hold b without b's
-        // holding a): canonicalize min-first before the dedup — a
-        // src<nbr filter would drop pairs whose only direction runs
-        // high-id -> low-id
-        .select(least(col("src_id"), col("nbr_id")).as("id_a"),
-          greatest(col("src_id"), col("nbr_id")).as("id_b"))
-        .filter(col("id_a") =!= col("id_b"))
-        .distinct()
-        .join(base.select(col(index.idCol).as("id_a"),
-          col(index.embCol).as("__ea")), Seq("id_a"))
-        .join(base.select(col(index.idCol).as("id_b"),
-          col(index.embCol).as("__eb")), Seq("id_b"))
-        .filter(graft.functions.VectorFunctions
-          .cosSimF32(col("__ea"), col("__eb")).cast("double") >= threshold)
-        .select(col("id_a"), col("id_b"))
-      flagKept(Dedup.keepCanonicalBy(
-        base.select(col(index.idCol), col("dist_fp")), pairs,
-        index.idCol, "dist_fp"))
-    } else {
-      // CLASS-COLLAPSED within-cluster pair generation (r13):
-      // identical embeddings (boilerplate corpora, scaled fixtures)
-      // inflate each cell's candidate volume k² under k-fold
-      // duplication, and the cell-quadratic join paid it at id grain
-      // (43.5 s of the 100× suite as twin-replicated cells). They
-      // always share a cluster (same deterministic assignment), so
-      // classes are cluster-local: the candidate join runs once per
-      // DISTINCT-embedding pair per cell; same-class members merge
-      // through cosineExpandComponents' defined-1.0 rule — the
-      // clamped kernel's cosine of identical non-zero vectors IS
-      // 1.0, zero vectors never pair (the kernel's zero-norm rule,
-      // preserved; thresholds ≤ 0 would diverge on all-zero twins,
-      // but a cosine DEDUP threshold is positive by meaning). The
-      // id-level pair set never materializes; the kept set is
-      // identical (ClusteringSpec's planted winners + idempotency
-      // pins, DedupSpec's class == id-level family).
-      val (classes, members) = Dedup.cosineClasses(
-        base.select(col(index.idCol), col(index.embCol)),
-        index.idCol, index.embCol)
-      val repsC = classes.join(
-        base.select(col(index.idCol).as("__rep"), col("ivf_cluster")),
-        Seq("__rep"))
-      val a = repsC.select(col("ivf_cluster"), col("__rep").as("__ra"),
-        col("__emb").as("__ea"))
-      val b = repsC.select(col("ivf_cluster"), col("__rep").as("__rb"),
-        col("__emb").as("__eb"))
-      val repPairs = a.join(b, Seq("ivf_cluster"))
-        .filter(col("__ra") < col("__rb"))
-        .filter(graft.functions.VectorFunctions
-          .cosSimF32(col("__ea"), col("__eb")).cast("double") >= threshold)
-        .select(col("__ra"), col("__rb"))
-      val comps = Dedup.cosineExpandComponents(classes, members, repPairs,
-        threshold)
-      Dedup.releaseAfterUse(classes)
-      flagKept(Dedup.keepCanonicalByFromComponents(
-        base.select(col(index.idCol), col("dist_fp")), comps,
-        index.idCol, "dist_fp"))
-    }
+    // CLASS-COLLAPSED within-cluster pair generation (r13):
+    // identical embeddings (boilerplate corpora, scaled fixtures)
+    // inflate each cell's candidate volume k² under k-fold
+    // duplication, and the cell-quadratic join paid it at id grain
+    // (43.5 s of the 100× suite as twin-replicated cells). They
+    // always share a cluster (same deterministic assignment), so
+    // classes are cluster-local: the candidate join runs once per
+    // DISTINCT-embedding pair per cell; same-class members merge
+    // through cosineExpandComponents' defined-1.0 rule — the
+    // clamped kernel's cosine of identical non-zero vectors IS
+    // 1.0, zero vectors never pair (the kernel's zero-norm rule,
+    // preserved; thresholds ≤ 0 would diverge on all-zero twins,
+    // but a cosine DEDUP threshold is positive by meaning). The
+    // id-level pair set never materializes; the kept set is
+    // identical (ClusteringSpec's planted winners + idempotency
+    // pins, DedupSpec's class == id-level family).
+    val (classes, members) = Dedup.cosineClasses(
+      base.select(col(index.idCol), col(index.embCol)),
+      index.idCol, index.embCol)
+    val repsC = classes.join(
+      base.select(col(index.idCol).as("__rep"), col("ivf_cluster")),
+      Seq("__rep"))
+    val a = repsC.select(col("ivf_cluster"), col("__rep").as("__ra"),
+      col("__emb").as("__ea"))
+    val b = repsC.select(col("ivf_cluster"), col("__rep").as("__rb"),
+      col("__emb").as("__eb"))
+    val repPairs = a.join(b, Seq("ivf_cluster"))
+      .filter(col("__ra") < col("__rb"))
+      .filter(graft.functions.VectorFunctions
+        .cosSimF32(col("__ea"), col("__eb")).cast("double") >= threshold)
+      .select(col("__ra"), col("__rb"))
+    val comps = Dedup.cosineExpandComponents(classes, members, repPairs,
+      threshold)
+    Dedup.releaseAfterUse(classes)
+    // flag every base row with its survival verdict
+    val kept = Dedup.keepCanonicalByFromComponents(
+        base.select(col(index.idCol), col("dist_fp")), comps, index.idCol, "dist_fp")
+      .select(col(index.idCol)).withColumn("__kept", lit(true))
+    val out = base.select(col(index.idCol), col("ivf_cluster"), col("dist_fp"))
+      .join(kept, Seq(index.idCol), "left")
+      .select(col(index.idCol), col("ivf_cluster"), col("dist_fp"),
+        coalesce(col("__kept"), lit(false)).as("kept"))
+    Dedup.releaseAfterUse(base)
+    out
   }
 
   /** Greedy k-center coreset (Gonzalez '85 farthest-point traversal):

@@ -968,10 +968,10 @@ object CorpusModels {
     * overwrite-in-place is racy against a RESIDENT scorer reading the
     * same path mid-overwrite, so a production nightly retrain
     * publishes each model as an immutable `v<N>` under `root` and
-    * atomically flips the `_current` pointer. Exactly
-    * [[Maintenance.compactParquetVersioned]]'s protocol (claim →
-    * write aside → rename → flip → vacuum), sharing its primitives so
-    * there is ONE pointer implementation in the repo. Readers resolve
+    * atomically flips the `_current` pointer through
+    * [[Maintenance.publishVersion]] (claim → write aside → rename →
+    * flip → vacuum), the sequence compaction also runs, so there is
+    * ONE pointer implementation in the repo. Readers resolve
     * the pointer driver-side
     * ([[graft.serving.Serving.currentModelDir]], no Spark session)
     * and then read an IMMUTABLE dir — no torn reads, and a resolved
@@ -993,66 +993,31 @@ object CorpusModels {
                           expectCurrent: Option[String] = None)
                          (save: String => Unit): String =
     withPublishLock(root) {
-      publishModelVersionLocked(spark, root, retainPrevious, expectCurrent)(save)
+      require(retainPrevious >= 1,
+        s"retainPrevious must be >= 1, got $retainPrevious")
+      val base = root.stripSuffix("/")
+      val basePath = new org.apache.hadoop.fs.Path(base)
+      val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(basePath)
+      val cur = Maintenance.resolveCurrent(spark, base)
+      // optimistic-concurrency guard: the caller built its artifact from
+      // `expectCurrent`; if the pointer has moved since, shipping the
+      // build would drop the interleaved publisher's changes — abort so
+      // the caller rebuilds from the fresh version. Checked INSIDE the
+      // lock, before any version is claimed, so an abort leaves no claim
+      // or half-written dir behind. (A cross-JVM flip between this check
+      // and the pointer flip remains possible on a plain Hadoop FS —
+      // pointer flips are not CAS — but same-JVM publishers, the
+      // deployed topology for multi-writer roots, are fully serialized
+      // by the lock.)
+      expectCurrent.foreach { exp =>
+        if (exp.stripSuffix("/") != cur.stripSuffix("/"))
+          throw new ConcurrentPublishException(
+            s"publish to $base: _current moved from $exp to $cur since the " +
+              "caller's snapshot — rebuild from the fresh version and retry")
+      }
+      s"v${Maintenance.publishVersion(spark, base, cur, retainPrevious)(save)}"
     }
-
-  private def publishModelVersionLocked(
-      spark: org.apache.spark.sql.SparkSession, root: String,
-      retainPrevious: Int, expectCurrent: Option[String])
-      (save: String => Unit): String = {
-    require(retainPrevious >= 1,
-      s"retainPrevious must be >= 1, got $retainPrevious")
-    val base = root.stripSuffix("/")
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(basePath)
-    val cur = Maintenance.resolveCurrent(spark, base)
-    // optimistic-concurrency guard: the caller built its artifact from
-    // `expectCurrent`; if the pointer has moved since, shipping the
-    // build would drop the interleaved publisher's changes — abort so
-    // the caller rebuilds from the fresh version. Checked INSIDE the
-    // lock, before any version is claimed, so an abort leaves no claim
-    // or half-written dir behind. (A cross-JVM flip between this check
-    // and flipCurrent below remains possible on a plain Hadoop FS —
-    // pointer flips are not CAS — but same-JVM publishers, the
-    // deployed topology for multi-writer roots, are fully serialized
-    // by the lock.)
-    expectCurrent.foreach { exp =>
-      if (exp.stripSuffix("/") != cur.stripSuffix("/"))
-        throw new ConcurrentPublishException(
-          s"publish to $base: _current moved from $exp to $cur since the " +
-            "caller's snapshot — rebuild from the fresh version and retry")
-    }
-    val curVer = if (cur == base) 0 else cur.substring(cur.lastIndexOf("/v") + 2).toInt
-    val maxVer = (curVer +: fs.listStatus(basePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v[0-9]+"))
-      .map(_.getPath.getName.substring(1).toInt)).max
-    val v = Maintenance.claimVersion(fs, base, maxVer + 1)
-    val writing = s"$base/v${v}__writing"
-    // failure-path cleanup: a throwing save must not strand the claim
-    // marker (which would burn version v forever — claimVersion skips
-    // live claims) or the half-written dir. Hard crashes that skip
-    // this are covered by [[Maintenance.reapAbandoned]] on the root —
-    // run it on model roots on the same ops schedule as table roots.
-    try {
-      save(writing)
-      val nextPath = new org.apache.hadoop.fs.Path(s"$base/v$v")
-      require(!fs.exists(nextPath),
-        s"publish: claimed version dir $base/v$v already exists — claim protocol violated")
-      require(fs.rename(new org.apache.hadoop.fs.Path(writing), nextPath),
-        s"publish: could not publish $writing -> $base/v$v")
-    } catch {
-      case e: Throwable =>
-        fs.delete(new org.apache.hadoop.fs.Path(writing), true)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$base/.claim_v$v"), false)
-        throw e
-    }
-    Maintenance.flipCurrent(fs, spark.sparkContext.hadoopConfiguration, base, v)
-    Maintenance.vacuumVersions(spark, base, keep = retainPrevious + 1,
-      alwaysKeep = if (curVer > 0) Set(s"v$curVer") else Set.empty)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/.claim_v$v"), false)
-    s"v$v"
-  }
 
   // ------------------------------------------------ DSIR importance weights
 
@@ -1114,42 +1079,22 @@ object CorpusModels {
     * log target/raw likelihood ratio; importance resampling samples
     * proportionally to exp(weight). Docs with < 2 tokens have no
     * bigrams and weigh 0 (neutral). weight = weight_fp/1e9, one IEEE
-    * division. */
+    * division.
+    *
+    * This is the hashing trick's direct form, the reference the fused
+    * [[dsirTrainScore]] is checked against: every occurrence is hashed
+    * and joined to the broadcast ≤numBuckets-row bucket model. The
+    * fused form hashes each distinct gram once instead; both produce
+    * identical integers (same md5, same mod — spec-pinned). */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
-                  model: DataFrame, numBuckets: Int,
-                  dictEncode: Boolean = true): DataFrame = {
-    // dictEncode=true: dictionary-encode the hash — the md5→bucket
-    // chain runs once per GLOBALLY distinct gram (Heaps-bounded — the
-    // distinct agg map-side combines, shuffling only
-    // distinct-per-partition grams), producing a (gram, llr)
-    // dictionary that broadcast-joins back by plain string equality.
-    // The corpus-sized occurrence stream is never hashed, never
-    // pre-grouped (bigrams barely repeat within a doc, so a
-    // (doc, gram) pre-agg is a fat composite-key shuffle for nothing —
-    // unlike [[nbScore]]'s tokens); the only corpus-sized shuffle is
-    // the per-doc sum, map-side combined to one row per doc per
-    // partition.
-    // dictEncode=false: the hashing trick's DIRECT form for corpora
-    // whose distinct-gram dictionary outgrows a broadcast (the 100 TB
-    // path) — hash every occurrence and broadcast only the
-    // ≤numBuckets-row bucket model; more md5 work, zero
-    // corpus-dependent broadcast. Both forms produce identical
-    // integers (same md5, same mod — spec-pinned).
+                  model: DataFrame, numBuckets: Int): DataFrame = {
     val occ = docs.select(col(idCol),
       explode(TextAnalysis.wordBigrams(col(textCol))).as("gram"))
     val modelB = broadcast(model.select(col("bucket"), col("llr_fp")))
-    val votes =
-      if (dictEncode) {
-        val gramLlr = occ.select(col("gram")).distinct()
-          .withColumn("bucket", gramBucket(col("gram"), numBuckets))
-          .join(modelB, Seq("bucket"), "left")
-          .select(col("gram"), coalesce(col("llr_fp"), lit(0L)).as("__llr"))
-        occ.join(broadcast(gramLlr), Seq("gram"))
-      } else {
-        occ.select(col(idCol), gramBucket(col("gram"), numBuckets).as("bucket"))
-          .join(modelB, Seq("bucket"), "left")
-          .withColumn("__llr", coalesce(col("llr_fp"), lit(0L)))
-      }
+    val votes = occ
+      .select(col(idCol), gramBucket(col("gram"), numBuckets).as("bucket"))
+      .join(modelB, Seq("bucket"), "left")
+      .withColumn("__llr", coalesce(col("llr_fp"), lit(0L)))
     val scored = votes
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n"), sum(col("__llr")).as("s"))
@@ -1222,37 +1167,32 @@ object CorpusModels {
   }
 
   /** Fused train+score DSIR over one corpus (the self-weighting shape
-    * the curation pipeline runs): the bigram occurrence stream
-    * materializes ONCE (persisted to the query boundary) and feeds both the
-    * model aggregation and the per-doc weight sums, and (with
-    * `dictEncode`, the default) the train agg's distinct-gram table
-    * doubles as the scoring dictionary — no second explode, no
-    * separate distinct. `dictEncode = false` is the 100 TB form
-    * ([[dsirWeights]]): score by re-hashing each occurrence against
-    * the broadcast ≤numBuckets-row model, so nothing corpus-dependent
-    * ever broadcasts. `publish` is the oracle-handoff hook for the
-    * model table (identity by default). Output and integers are
-    * exactly [[dsirModel]]+[[dsirWeights]] under either knob
-    * (spec-pinned). */
-  def dsirPipeline(docs: DataFrame, idCol: String, textCol: String,
-                   targetCol: String, numBuckets: Int,
-                   publish: DataFrame => DataFrame = identity,
-                   dictEncode: Boolean = true): DataFrame =
-    dsirTrainScore(docs, idCol, textCol, targetCol, numBuckets,
-      publish, dictEncode)._2
-
-  /** [[dsirPipeline]] returning BOTH halves — (published model,
-    * per-doc weights) — so a build-once cache can persist the trained
-    * model next to its corpus scores and the selection/resampling
-    * queries can share one training pass instead of each retraining
-    * (the trio's in-suite 3× retrain was round 9's top perf finding).
-    * The `publish` hook still wraps the model BEFORE scoring consumes
+    * the curation pipeline runs), returning BOTH halves — (published
+    * model, per-doc weights) — so a build-once cache can persist the
+    * trained model next to its corpus scores and the
+    * selection/resampling queries share one training pass.
+    *
+    * The bigram occurrence stream materializes ONCE (persisted to the
+    * query boundary) and feeds both the model aggregation and the
+    * per-doc weight sums, and the train agg's distinct-gram table
+    * doubles as the scoring dictionary: the md5→bucket chain runs once
+    * per globally distinct gram (Heaps-bounded), producing a
+    * (gram, llr) dictionary that broadcast-joins back by plain string
+    * equality. The corpus-sized occurrence stream is never hashed,
+    * never pre-grouped (bigrams barely repeat within a doc, so a
+    * (doc, gram) pre-agg is a fat composite-key shuffle for nothing —
+    * unlike [[nbScore]]'s tokens); the only corpus-sized shuffle is
+    * the per-doc sum, map-side combined to one row per doc per
+    * partition.
+    *
+    * `publish` is the oracle-handoff hook for the model table
+    * (identity by default); it wraps the model BEFORE scoring consumes
     * it, so a caller that routes it to a parquet write gets weights
-    * derived from the exact persisted artifact. */
+    * derived from the exact persisted artifact. Output and integers
+    * are exactly [[dsirModel]]+[[dsirWeights]] (spec-pinned). */
   def dsirTrainScore(docs: DataFrame, idCol: String, textCol: String,
                      targetCol: String, numBuckets: Int,
-                     publish: DataFrame => DataFrame = identity,
-                     dictEncode: Boolean = true): (DataFrame, DataFrame) = {
+                     publish: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     val occ = docs.select(col(idCol), col(targetCol).as("__tgt"),
         explode(TextAnalysis.wordBigrams(col(textCol))).as("gram"))
@@ -1260,17 +1200,12 @@ object CorpusModels {
     val grams = occ.groupBy(col("gram")).agg(
       sum(when(col("__tgt"), 1L).otherwise(0L)).as("gt"),
       count(lit(1)).as("gr"))
-    // the distinct-gram table is persisted ONLY under dictEncode —
-    // it doubles as the scoring dictionary there; the per-occurrence
-    // form reads it exactly once (for the model agg), so caching it
-    // would only cost memory
-    val bucketed0 = grams
+    // the distinct-gram table is persisted: it feeds the model agg
+    // and doubles as the scoring dictionary
+    val bucketed = grams
       .select(gramBucket(col("gram"), numBuckets).as("bucket"),
         col("gram"), col("gt"), col("gr"))
-    val bucketed =
-      if (dictEncode)
-        bucketed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else bucketed0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = bucketed
       .groupBy(col("bucket")).agg(
         sum(col("gt")).as("c_target"),
@@ -1284,18 +1219,10 @@ object CorpusModels {
         col("c_raw"), col("n_raw_grams") + lit(numBuckets)))
       .select(col("bucket"), col("c_target"), col("c_raw"), col("llr_fp")))
     val modelB = broadcast(model.select(col("bucket"), col("llr_fp")))
-    val votes =
-      if (dictEncode) {
-        val gramLlr = bucketed.select(col("gram"), col("bucket"))
-          .join(modelB, Seq("bucket"), "left")
-          .select(col("gram"), coalesce(col("llr_fp"), lit(0L)).as("__llr"))
-        occ.join(broadcast(gramLlr), Seq("gram"))
-      } else {
-        occ.select(col(idCol), gramBucket(col("gram"), numBuckets).as("bucket"))
-          .join(modelB, Seq("bucket"), "left")
-          .withColumn("__llr", coalesce(col("llr_fp"), lit(0L)))
-      }
-    val scored = votes
+    val gramLlr = bucketed.select(col("gram"), col("bucket"))
+      .join(modelB, Seq("bucket"), "left")
+      .select(col("gram"), coalesce(col("llr_fp"), lit(0L)).as("__llr"))
+    val scored = occ.join(broadcast(gramLlr), Seq("gram"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n"), sum(col("__llr")).as("s"))
     val out = docs.select(col(idCol))
@@ -1305,7 +1232,7 @@ object CorpusModels {
         coalesce(col("s"), lit(0L)).as("weight_fp"),
         (coalesce(col("s"), lit(0L)).cast("double") / lit(LpScale)).as("weight"))
     Dedup.releaseAfterUse(occ)
-    if (dictEncode) Dedup.releaseAfterUse(bucketed)
+    Dedup.releaseAfterUse(bucketed)
     (model, out)
   }
 }

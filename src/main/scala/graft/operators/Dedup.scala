@@ -201,18 +201,13 @@ object Dedup {
     * join, exact-Jaccard verify — pure relational algebra + the
     * int/double Jaccard arithmetic, all replayable in ANSI SQL.
     *
-    * `textsAreDistinct = true` declares that `docs` holds one row per
-    * DISTINCT text (e.g. class reps from an upstream collapse): the
-    * internal text-classing below is then an identity transform — one
-    * rep per candidate id, zero same-class pairs — and is skipped
-    * entirely (~4 exchanges: the class groupBy, the id→rep join pair,
-    * and the rep-pair distinct). The caller owns the claim; a
-    * duplicate text under the flag scores its pairs correctly but
-    * redundantly (once per member, not once per class). */
+    * Each candidate pair is verified directly. That is exact for any
+    * input: identical texts score `jaccard(x, x)` = 1.0, null texts
+    * included (a whole-text shingle exists even for empty/null texts,
+    * so the union is never 0). */
   def minHashVerifyPairs(bandRows: DataFrame, docs: DataFrame, idCol: String,
                          textCol: String, shingle: Int, threshold: Double,
-                         maxBucket: Int = 1000,
-                         textsAreDistinct: Boolean = false): DataFrame = {
+                         maxBucket: Int = 1000): DataFrame = {
     // cap hot buckets before the pair join — one window pass instead of
     // an aggregate + semi-join (same shuffle key, half the exchanges)
     val wb = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
@@ -229,62 +224,14 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
 
-    if (textsAreDistinct) {
-      // distinct-texts fast path: every id IS its own class — verify
-      // each candidate pair directly, no classing bookkeeping
-      val jacUdfD = udf((x: String, y: String) => jaccard(x, y, shingle))
-      val t = docs.select(col(idCol), col(textCol))
-      return candidates
-        .join(t.select(col(idCol).as("id_a"), col(textCol).as("text_a")), Seq("id_a"))
-        .join(t.select(col(idCol).as("id_b"), col(textCol).as("text_b")), Seq("id_b"))
-        .withColumn("jaccard", jacUdfD(col("text_a"), col("text_b")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    }
-
-    // CLASS-DEDUPED verify (the [[classPairJaccard]] trick at the
-    // verify step only): identical texts have identical shingle sets,
-    // so the O(text)·per-pair shingling UDF runs once per distinct
-    // TEXT-CLASS pair instead of once per candidate pair — under
-    // k-fold twin replication that is ~k² fewer UDF calls (measured:
-    // the 100× twin spot-bench dropped 378 s → see SCALEBENCH.md).
-    // The id-level bucket/cap gating above is untouched — the LSH
-    // candidate set (and therefore the output pair set the oracle
-    // replays) is id-level by design, only the jaccard COMPUTATION is
-    // shared; cross-class values come from the rep's text, which is
-    // string-identical to every member's, and same-class pairs score
-    // exactly 1.0 — jaccard(x, x) by the UDF's own arithmetic (a
-    // whole-text shingle exists even for empty/null texts, so the
-    // union is never 0). Null-safe class key (`<=>`): null-text docs
-    // class together instead of silently dropping their candidates.
-    val texts = docs.select(col(idCol), col(textCol))
-    val reps = texts.groupBy(col(textCol)).agg(min(col(idCol)).as("__rep"))
-      .withColumnRenamed(textCol, "__ctext")
-    val idToRep = texts.join(reps, col(textCol) <=> col("__ctext"))
-      .select(col(idCol).as("__tid"), col("__rep"))
-    val withReps = candidates
-      .join(idToRep.select(col("__tid").as("id_a"), col("__rep").as("__ra")), Seq("id_a"))
-      .join(idToRep.select(col("__tid").as("id_b"), col("__rep").as("__rb")), Seq("id_b"))
-    val repPairs = withReps.filter(col("__ra") =!= col("__rb"))
-      .select(least(col("__ra"), col("__rb")).as("__pra"),
-        greatest(col("__ra"), col("__rb")).as("__prb"))
-      .distinct()
     val jacUdf = udf((x: String, y: String) => jaccard(x, y, shingle))
-    val repJac = repPairs
-      .join(texts.select(col(idCol).as("__pra"), col(textCol).as("text_a")), Seq("__pra"))
-      .join(texts.select(col(idCol).as("__prb"), col(textCol).as("text_b")), Seq("__prb"))
+    val t = docs.select(col(idCol), col(textCol))
+    candidates
+      .join(t.select(col(idCol).as("id_a"), col(textCol).as("text_a")), Seq("id_a"))
+      .join(t.select(col(idCol).as("id_b"), col(textCol).as("text_b")), Seq("id_b"))
       .withColumn("jaccard", jacUdf(col("text_a"), col("text_b")))
       .filter(col("jaccard") >= threshold)
-      .select(col("__pra"), col("__prb"), col("jaccard"))
-    val crossClass = withReps.filter(col("__ra") =!= col("__rb"))
-      .join(repJac,
-        least(col("__ra"), col("__rb")) === col("__pra") &&
-          greatest(col("__ra"), col("__rb")) === col("__prb"))
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    val sameClass = withReps.filter(col("__ra") === col("__rb"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-      .filter(lit(1.0) >= threshold)
-    crossClass.unionByName(sameClass)
   }
 
   // ---------------------------------------------------------------- SimHash
@@ -412,7 +359,7 @@ object Dedup {
   def jaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
                          blockCol: String, threshold: Double): DataFrame =
     classPairJaccard(docs.withColumn("is_new", lit(true)),
-      idCol, textCol, blockCol, threshold, saltBuckets = 1)
+      idCol, textCol, blockCol, threshold)
 
   /** Slim tokenized projection — feeds THREE consumers (prefix explode
     * + both verify joins), so it is persisted (tokenize/hash once, not
@@ -469,12 +416,7 @@ object Dedup {
     *     is class-pair-sized (partial aggregation consumes the join
     *     output map-side).
     *  2. The array-carrying verify runs once per distinct candidate
-    *     CLASS pair. The opt-in salt (saltBuckets > 1) spreads
-    *     NEAR-twin skew — distinct sets sharing hot prefix tokens —
-    *     across reducers in both the candidate join (probe side
-    *     replicated per salt) and the verify re-attach (rep-array side
-    *     replicated); exact, every pair meets in exactly one bucket;
-    *     default OFF because classing already collapses exact twins.
+    *     CLASS pair.
     *  3. The id-level result is produced by EXPANDING class members
     *     against the verified class pairs as the FINAL stage: the
     *     (inherently output-sized, under twin replication quadratic)
@@ -498,10 +440,8 @@ object Dedup {
     * token sets are excluded, matching the direct form where they
     * produce no prefix rows (and a 0/0 = NaN jaccard, never >= t). */
   private def classPairJaccard(all: DataFrame, idCol: String, textCol: String,
-                               blockCol: String, threshold: Double,
-                               saltBuckets: Int): DataFrame = {
-    val (repJac, m) = classPairCore(all, idCol, textCol, blockCol,
-      threshold, saltBuckets)
+                               blockCol: String, threshold: Double): DataFrame = {
+    val (repJac, m) = classPairCore(all, idCol, textCol, blockCol, threshold)
     expandClassPairs(repJac, m, threshold)
   }
 
@@ -512,8 +452,7 @@ object Dedup {
     * digest rows — the 100 TB gate shape, where the quadratic id
     * expansion never materializes). */
   private def classPairCore(all: DataFrame, idCol: String, textCol: String,
-                            blockCol: String, threshold: Double,
-                            saltBuckets: Int): (DataFrame, DataFrame) = {
+                            blockCol: String, threshold: Double): (DataFrame, DataFrame) = {
     val t = hashedTokenProjection(all, idCol, textCol, blockCol)
     // one row per class: the token-set array itself + rep = min member
     val reps = t.groupBy(col("h")).agg(min(col(idCol)).as("__rep"))
@@ -537,26 +476,18 @@ object Dedup {
 
     // candidate CLASS pairs: probe side = units holding a new member
     // (every unit, for the full-corpus operator); index side = all
-    val n0 = pref.filter(col("is_new"))
+    val n = pref.filter(col("is_new"))
       .select(col("blk"), col("tok"), col(idCol).as("id_n"),
         col("sz").as("sn"), col("pos").as("pn"))
-    val o0 = pref.select(col("blk"), col("tok"), col(idCol).as("id_o"),
+    val o = pref.select(col("blk"), col("tok"), col(idCol).as("id_o"),
       col("sz").as("so"), col("pos").as("po"), col("is_new").as("new_o"))
-    // salt columns only exist when salting is ON — the default path
-    // must not pay a hash/pmod per posting plus a 1-way explode
-    val (n, o, joinKeys) =
-      if (saltBuckets > 1)
-        (n0.withColumn("__salt", explode(lit((0 until saltBuckets).toArray))),
-          o0.withColumn("__salt", pmod(hash(col("id_o")), lit(saltBuckets))),
-          Seq("blk", "tok", "__salt"))
-      else (n0, o0, Seq("blk", "tok"))
+    val joinKeys = Seq("blk", "tok")
     // r17-opt (guide §8): the candidate join's cost is its FAN-OUT —
     // every posting collision pays the ppjoin bounds check — not its
     // input bytes, so AQE's bytes-based coalescing would run it on one
     // task. Explicit key-hash partitioning at defaultParallelism keeps
     // the join parallel at every SF (the shape the 100× SCALEBENCH
-    // runs proved out with the same partition count); the opt-in salt
-    // (saltBuckets) remains the hot-key remedy.
+    // runs proved out with the same partition count).
     val par = all.sparkSession.sparkContext.defaultParallelism
     val repPairs = n.repartition(par, joinKeys.map(col): _*)
       .join(o.repartition(par, joinKeys.map(col): _*), joinKeys)
@@ -571,7 +502,7 @@ object Dedup {
       // work on a slim id-pair stream that AQE's bytes-based
       // coalescing would serialize onto one task. ONE pair-keyed hash
       // exchange both dedups the candidates and declares the verify's
-      // width: the join output is partitioned by (blk, tok[, salt])
+      // width: the join output is partitioned by (blk, tok)
       // and each (pair, posting) row is unique, so pair duplicates
       // are strictly cross-partition — the former `.distinct()`'s
       // map-side partial agg removed nothing, and its round-robin
@@ -586,17 +517,7 @@ object Dedup {
       col("h").as("ha"))
     val tb = reps.select(col("__rep").as("id_b"), size(col("h")).as("sb"),
       col("h").as("hb"))
-    val attached =
-      if (saltBuckets > 1) {
-        val salts = lit((0 until saltBuckets).toArray)
-        repPairs
-          .withColumn("__vsa", pmod(hash(col("id_b")), lit(saltBuckets)))
-          .join(ta.withColumn("__vsa", explode(salts)), Seq("id_a", "__vsa"))
-          .withColumn("__vsb", pmod(hash(col("id_a")), lit(saltBuckets)))
-          .join(tb.withColumn("__vsb", explode(salts)), Seq("id_b", "__vsb"))
-          .drop("__vsa", "__vsb")
-      } else repPairs.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
-    val repJac = attached
+    val repJac = repPairs.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
       .withColumn("inter",
         graft.functions.ArrayFunctions.sortedIntersectSize(col("ha"), col("hb")))
       .withColumn("jaccard", col("inter").cast("double") /
@@ -698,8 +619,7 @@ object Dedup {
   private def classPairCountRows(all: DataFrame, idCol: String,
                                  textCol: String, blockCol: String,
                                  threshold: Double): DataFrame = {
-    val (repJac, m) = classPairCore(all, idCol, textCol, blockCol,
-      threshold, saltBuckets = 1)
+    val (repJac, m) = classPairCore(all, idCol, textCol, blockCol, threshold)
     // per (class, block) member counts — sz carried for the non-empty
     // same-class guard (members of one class share sz by construction)
     val cnt = m.groupBy(col("__rep"), col("blk"))
@@ -741,22 +661,15 @@ object Dedup {
     * with ONLY the increment's prefixes (at class granularity — see
     * [[classPairJaccard]]) — shuffle volume is O(increment tokens +
     * corpus prefix tokens), linear per run, and the quadratic-in-corpus
-    * candidate space never exists. `saltBuckets > 1` opts into salted
-    * joins for near-twin/boilerplate-heavy corpora whose hot prefix
-    * tokens would otherwise concentrate in a few reducers — with exact
-    * twins already collapsed by the classing, the knob measured ~free
-    * at the 10×/100× twin fixtures (SCALEBENCH.md); enable it when the
-    * corpus is known boilerplate-heavy. */
+    * candidate space never exists. */
   def jaccardPairsPrefixIncremental(newDocs: DataFrame, corpus: DataFrame,
                                     idCol: String, textCol: String,
-                                    blockCol: String, threshold: Double,
-                                    saltBuckets: Int = 1): DataFrame = {
-    require(saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets")
+                                    blockCol: String, threshold: Double): DataFrame = {
     val all = newDocs.select(col(idCol), col(blockCol), col(textCol))
       .withColumn("is_new", lit(true))
       .unionByName(corpus.select(col(idCol), col(blockCol), col(textCol))
         .withColumn("is_new", lit(false)))
-    classPairJaccard(all, idCol, textCol, blockCol, threshold, saltBuckets)
+    classPairJaccard(all, idCol, textCol, blockCol, threshold)
   }
 
   // ------------------------------------------------- connected components

@@ -712,15 +712,8 @@ object Hnsw {
       .orderBy(col("cluster_id")).collect()
       .map(_.getSeq[Float](1).toArray)
     val p = spark.read.parquet(s"$dir/params").head()
-    // layouts persisted before the tombstone column exist in the wild
-    // (any saveHnsw dir from an earlier version) — default them
-    // to all-live instead of failing the column resolution
-    val raw = spark.read.parquet(s"$dir/graph")
-    val withDeleted =
-      if (raw.columns.contains("deleted")) raw
-      else raw.withColumn("deleted", lit(false))
     HnswIndex(
-      withDeleted
+      spark.read.parquet(s"$dir/graph")
         .select(col("shard").cast("int").as("shard"), col("vec_id"),
           col("level"), col("layer"), col("neighbors"), col("embedding"),
           col("deleted")),

@@ -38,31 +38,29 @@ object LinkGraph {
 
   /** Outgoing hyperlinks per page, as frontier keys: every `<a href>`
     * ([[graft.sources.HtmlText.links]] — comment/script-hidden anchors
-    * never emitted, `rel=nofollow` honored when `skipNofollow`)
+    * never emitted, `rel=nofollow` anchors dropped)
     * resolved against the page URL ([[Urls.resolveUrl]]) and
     * normalized ([[Urls.normalizeUrl]]). Only http(s) targets survive
     * (a `mailto:`/`javascript:` href is not a crawlable edge);
     * duplicate targets within a page collapse to one (the link-graph
-    * convention — PageRank counts an edge once); with `dropSelf` a
-    * link resolving to the page's own normalized URL (fragment-only
-    * hrefs do) is dropped. Null-URL pages drop (no base to resolve
-    * against — the [[Urls.canonicalCollapse]] hygiene rule).
+    * convention — PageRank counts an edge once); a link resolving to
+    * the page's own normalized URL (fragment-only hrefs do) is
+    * dropped. Null-URL pages drop (no base to resolve against — the
+    * [[Urls.canonicalCollapse]] hygiene rule).
     *
     * Output: the input columns + `link`, one row per distinct
     * surviving target; pages with none emit no rows. The extraction
     * is one narrow projection in the scan task — zero shuffle. */
   def extractLinks(pages: DataFrame, urlCol: String = "url",
-                   htmlCol: String = "html",
-                   skipNofollow: Boolean = true,
-                   dropSelf: Boolean = true): DataFrame = {
+                   htmlCol: String = "html"): DataFrame = {
     val extract = udf { (pageUrl: String, html: String) =>
       val self = Urls.normalizeUrl(pageUrl)
       val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-      graft.sources.HtmlText.links(html, skipNofollow).foreach { href =>
+      graft.sources.HtmlText.links(html).foreach { href =>
         val l = Urls.normalizeUrl(Urls.resolveUrl(pageUrl, href))
         if (l != null &&
           (l.startsWith("http://") || l.startsWith("https://")) &&
-          !(dropSelf && l == self)) seen += l
+          l != self) seen += l
       }
       seen.toSeq
     }
@@ -86,11 +84,10 @@ object LinkGraph {
     * collect_list, so a mega-target (every page links to the home
     * page) costs O(1) aggregation state, not O(in-degree) memory. */
   def anchorStats(pages: DataFrame, urlCol: String = "url",
-                  htmlCol: String = "html",
-                  skipNofollow: Boolean = true): DataFrame = {
+                  htmlCol: String = "html"): DataFrame = {
     val extract = udf { (pageUrl: String, html: String) =>
       val self = Urls.normalizeUrl(pageUrl)
-      graft.sources.HtmlText.anchors(html, skipNofollow).flatMap {
+      graft.sources.HtmlText.anchors(html).flatMap {
         case (href, text) =>
           val l = Urls.normalizeUrl(Urls.resolveUrl(pageUrl, href))
           if (text.nonEmpty && l != null &&

@@ -10,73 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  /** Restore a table whose compaction swap was interrupted: if `path`
-    * is missing but `<path>__old` exists (the crash window between the
-    * two renames in [[compactParquet]]), rename the original back.
-    * Returns true when a restore happened. Call at startup for any
-    * compaction-managed table, or rely on [[compactParquet]] calling it. */
-  def restoreIfInterrupted(spark: SparkSession, path: String): Boolean = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldPath = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__old")
-    if (!fs.exists(hPath) && fs.exists(oldPath)) fs.rename(oldPath, hPath)
-    else false
-  }
-
-  /** Compact a parquet directory to ~targetBytes files: size the
-    * partition count from actual on-disk bytes, rewrite, swap. The
-    * rewrite preserves rows exactly (count-checked before the swap) and
-    * the swap is rename-original-aside first, so any failure leaves the
-    * original either in place or restorable at `<path>__old` (an
-    * interrupted swap is auto-restored on the next call, or explicitly
-    * via [[restoreIfInterrupted]]). A hive-partitioned layout
-    * (collection=... dirs) is preserved.
-    *
-    * Concurrency contract: SINGLE WRITER, and no concurrent readers
-    * during the swap — between the two renames the table path briefly
-    * does not exist. Readers holding an already-planned DataFrame are
-    * unaffected only until their next file listing. This flat variant
-    * exists for tables whose path other systems hard-code; when readers
-    * can resolve through a pointer, [[compactParquetVersioned]] removes
-    * the window entirely and is the 100 TB answer. */
-  def compactParquet(spark: SparkSession, path: String,
-                     targetBytes: Long = 128L * 1024 * 1024): Long = {
-    restoreIfInterrupted(spark, path)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(hPath).getLength
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-
-    // preserve hive-style partition columns (dirs named col=value)
-    val partitionCols = fs.listStatus(hPath).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.contains("=")).map(_.split("=", 2)(0)).distinct
-
-    val df = spark.read.parquet(path)
-    val expected = df.count()
-    val tmp = path.stripSuffix("/") + "__compacting"
-    val writer = df.repartition(nFiles).write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(tmp)
-
-    val actual = spark.read.parquet(tmp).count()
-    require(actual == expected,
-      s"compaction row mismatch: $expected before, $actual after — aborting swap")
-
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val oldPath = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__old")
-    if (fs.exists(oldPath)) fs.delete(oldPath, true)
-    require(fs.rename(hPath, oldPath),
-      s"compaction: could not move original aside ($path -> $oldPath); original untouched")
-    if (!fs.rename(tmpPath, hPath)) {
-      fs.rename(oldPath, hPath) // restore
-      throw new IllegalStateException(
-        s"compaction: swap failed for $path; original restored, rewrite left at $tmp")
-    }
-    fs.delete(oldPath, true)
-    expected
-  }
-
   /** Resolve the live data directory of a pointer-managed table: when
     * `<path>/_current` exists its contents name the live version subdir
     * (`<path>/v<N>`); otherwise the table is a legacy flat layout and
@@ -106,23 +39,23 @@ object Maintenance {
     }
   }
 
-  /** Atomic-swap compaction: versioned data subdirs + a pointer file,
-    * the manifest-pointer design that removes [[compactParquet]]'s
-    * reader-visible non-existence window. The rewrite lands in a NEW
-    * `v<N+1>` subdir (count-checked, like the flat variant), then the
-    * swap is a single atomic rename of the pointer file — a reader that
-    * resolves the pointer one instant before the flip reads `v<N>`,
-    * one instant after reads `v<N+1>`, and NEVER sees a missing table.
-    * The `retainPrevious` most recent prior versions are retained for
-    * in-flight readers (default 1 = one compaction cycle of grace);
-    * versions older than that are vacuumed — [[vacuumVersions]] is the
-    * standalone knob when retention policy runs on its own schedule.
+  /** Atomic-swap compaction: versioned data subdirs + a pointer file.
+    * The rewrite lands in a NEW `v<N+1>` subdir (count-checked before
+    * it is published), then the swap is a single atomic rename of the
+    * pointer file — a reader that resolves the pointer one instant
+    * before the flip reads `v<N>`, one instant after reads `v<N+1>`,
+    * and NEVER sees a missing table. The `retainPrevious` most recent
+    * prior versions are retained for in-flight readers (default 1 =
+    * one compaction cycle of grace); versions older than that are
+    * vacuumed — [[vacuumVersions]] is the standalone knob when
+    * retention policy runs on its own schedule. A hive-partitioned
+    * layout (collection=... dirs) is preserved.
     *
     * First call on a legacy flat layout migrates it (flat files →
     * `v1` + pointer) and deletes the flat files — that one migration
-    * needs the single-writer-no-reader window the flat swap always
-    * needed; every SUBSEQUENT compaction is fully online. Readers must
-    * resolve through [[resolveCurrent]]. Returns the row count.
+    * needs a single-writer, no-reader window; every SUBSEQUENT
+    * compaction is fully online. Readers must resolve through
+    * [[resolveCurrent]]. Returns the row count.
     *
     * CONCURRENT writers are safe (post-migration): each compactor
     * claims a distinct version number via [[claimVersion]]'s atomic
@@ -138,88 +71,103 @@ object Maintenance {
     val basePath = new org.apache.hadoop.fs.Path(base)
     val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = resolveCurrent(spark, path)
-    val curVer = if (cur == base) 0 else cur.substring(cur.lastIndexOf("/v") + 2).toInt
-    // next = max EXISTING version + 1, not curVer + 1: after a hand
-    // rollback (pointer at v3 while v4 exists — a state vacuumVersions
-    // deliberately preserves) curVer+1 would OVERWRITE the retained v4
-    // that in-flight readers may hold open
-    val maxVer = (curVer +: fs.listStatus(basePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v[0-9]+"))
-      .map(_.getPath.getName.substring(1).toInt)).max
-    // CONCURRENT-WRITER safety: two compactors that both observed
-    // maxVer would both target v<max+1> and overwrite each other's
-    // rewrite mid-write. Each writer therefore CLAIMS its version
-    // number first via an atomic create-exclusive marker file — the
-    // loser of the race moves to the next number, so no two writers
-    // ever share a version dir. (Atomicity contract: create(overwrite=
-    // false) is atomic on HDFS and posix filesystems; on stores
-    // without atomic create-exclusive, front this with a coordination
-    // service.) The rewrite then lands in v<N>__writing and is RENAMED
-    // to v<N> — a version dir either doesn't exist or is complete.
-    val nextVer = claimVersion(fs, base, maxVer + 1)
     val curPath = new org.apache.hadoop.fs.Path(cur)
 
     val totalBytes = fs.getContentSummary(curPath).getLength
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    // preserve hive-style partition columns (dirs named col=value)
     val partitionCols = fs.listStatus(curPath).toSeq
       .filter(_.isDirectory).map(_.getPath.getName)
       .filter(_.contains("=")).map(_.split("=", 2)(0)).distinct
 
     val df = spark.read.parquet(cur)
     val expected = df.count()
-    val next = s"$base/v$nextVer"
-    val writing = s"${next}__writing"
-    val writer = df.repartition(nFiles).write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(writing)
-    val actual = spark.read.parquet(writing).count()
-    require(actual == expected,
-      s"compaction row mismatch: $expected before, $actual after — pointer not flipped")
-    // publish the complete rewrite under its claimed name. The claim
-    // guarantees exclusivity, so a pre-existing dest is a hard error
-    // (Hadoop rename would otherwise move the source INTO it).
-    val nextPath = new org.apache.hadoop.fs.Path(next)
-    require(!fs.exists(nextPath),
-      s"compaction: claimed version dir $next already exists — claim protocol violated")
-    require(fs.rename(new org.apache.hadoop.fs.Path(writing), nextPath),
-      s"compaction: could not publish $writing -> $next")
-    // the claim marker survives until AFTER the pointer flip: a
-    // published-but-not-yet-flipped version must not be vacuumable by
-    // a faster concurrent compactor (vacuumVersions keeps any version
-    // with a live marker)
-
-    // atomic flip: write the new pointer aside, rename OVER _current.
-    // FileContext.rename(OVERWRITE) is atomic on HDFS and posix — the
-    // pointer file always exists with either the old or the new value.
-    // The aside file is PER-VERSION (concurrent flippers must not
-    // co-write one tmp name; each renames its own, last writer wins).
-    flipCurrent(fs, spark.sparkContext.hadoopConfiguration, base, nextVer)
-
-    // retain `retainPrevious` prior versions for in-flight readers
-    // (default 1 = the cycle of grace), vacuum anything older — but
-    // ALWAYS keep the version that was current until this flip: after
-    // a hand rollback it is not among the highest-numbered, yet it is
-    // exactly the one in-flight readers are on. Legacy flat files
-    // (curVer == 0) cannot be retained alongside the version dirs —
-    // migration is the one offline step, so delete them.
-    vacuumVersions(spark, path, keep = retainPrevious + 1,
-      alwaysKeep = if (curVer > 0) Set(s"v$curVer") else Set.empty)
-    if (curVer == 0) fs.listStatus(basePath).foreach { st =>
+    publishVersion(spark, base, cur, retainPrevious) { writing =>
+      val writer = df.repartition(nFiles).write.mode("overwrite")
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+        .parquet(writing)
+      val actual = spark.read.parquet(writing).count()
+      require(actual == expected,
+        s"compaction row mismatch: $expected before, $actual after — pointer not flipped")
+    }
+    // legacy flat files cannot be retained alongside the version dirs
+    // — migration is the one offline step, so delete them
+    if (cur == base) fs.listStatus(basePath).foreach { st =>
       if (!st.isDirectory && st.getPath.getName.endsWith(".parquet"))
         fs.delete(st.getPath, false)
     }
-    // claim released only now — pointer flipped, version protected by
-    // the normal retention rules from here on
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/.claim_v$nextVer"), false)
     expected
   }
 
-  /** Atomically flip `<base>/_current` to `v<nextVer>` — factored from
-    * [[compactParquetVersioned]] so every pointer-managed layout
-    * (compaction, model registry) flips through the ONE protocol.
-    * The aside file is PER-VERSION (concurrent flippers must not
+  /** The ONE pointer-publish sequence, shared by
+    * [[compactParquetVersioned]] and the model registry
+    * ([[CorpusModels.publishModelVersion]]): claim → write
+    * `v<N>__writing` → rename to `v<N>` → [[flipCurrent]] →
+    * [[vacuumVersions]] → release the claim. `cur` is the live dir
+    * the caller resolved (`base` itself for a legacy flat layout).
+    * Returns N.
+    *
+    *  - Claim: N is the max EXISTING version + 1, not current + 1 —
+    *    after a hand rollback (pointer at v3 while v4 exists, a state
+    *    vacuumVersions deliberately preserves) current + 1 would
+    *    OVERWRITE the retained v4 that in-flight readers may hold
+    *    open. Two writers that both observed the same max would both
+    *    target v<max+1>, so each CLAIMS its number via
+    *    [[claimVersion]]'s create-exclusive marker and the loser moves
+    *    on; a version dir either doesn't exist or is complete.
+    *  - Failure: a `write` that throws deletes its writing dir and its
+    *    claim — a stranded marker would burn version N forever
+    *    (claimVersion skips live claims). Hard crashes that skip this
+    *    are covered by [[reapAbandoned]] on the root.
+    *  - Retention: `retainPrevious` prior versions are kept for
+    *    in-flight readers, and ALWAYS the version that was current
+    *    until this flip — after a hand rollback it is not among the
+    *    highest-numbered, yet it is exactly the one readers are on.
+    *  - The claim is released only after the flip: a published-but-
+    *    not-yet-flipped version must not be vacuumable by a faster
+    *    concurrent writer (vacuumVersions keeps any version with a
+    *    live marker). */
+  private[graft] def publishVersion(spark: SparkSession, base: String, cur: String,
+                                    retainPrevious: Int)
+                                   (write: String => Unit): Int = {
+    val basePath = new org.apache.hadoop.fs.Path(base)
+    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val curVer = if (cur == base) 0 else cur.substring(cur.lastIndexOf("/v") + 2).toInt
+    val maxVer = (curVer +: fs.listStatus(basePath).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.matches("v[0-9]+"))
+      .map(_.getPath.getName.substring(1).toInt)).max
+    val v = claimVersion(fs, base, maxVer + 1)
+    val writing = s"$base/v${v}__writing"
+    val writingPath = new org.apache.hadoop.fs.Path(writing)
+    val claim = new org.apache.hadoop.fs.Path(s"$base/.claim_v$v")
+    try {
+      write(writing)
+      // the claim guarantees exclusivity, so a pre-existing dest is a
+      // hard error (Hadoop rename would otherwise move the source INTO it)
+      val nextPath = new org.apache.hadoop.fs.Path(s"$base/v$v")
+      require(!fs.exists(nextPath),
+        s"publish: claimed version dir $nextPath already exists — claim protocol violated")
+      require(fs.rename(writingPath, nextPath),
+        s"publish: could not publish $writing -> $nextPath")
+    } catch {
+      case e: Throwable =>
+        fs.delete(writingPath, true)
+        fs.delete(claim, false)
+        throw e
+    }
+    flipCurrent(fs, spark.sparkContext.hadoopConfiguration, base, v)
+    vacuumVersions(spark, base, keep = retainPrevious + 1,
+      alwaysKeep = if (curVer > 0) Set(s"v$curVer") else Set.empty)
+    fs.delete(claim, false)
+    v
+  }
+
+  /** Atomically flip `<base>/_current` to `v<nextVer>` (the flip step
+    * of [[publishVersion]]): write the new pointer aside, rename it
+    * OVER `_current`, so the pointer file always exists with either
+    * the old or the new value. The aside file is PER-VERSION (concurrent flippers must not
     * co-write one tmp name; each renames its own, last writer wins). */
-  private[graft] def flipCurrent(fs: org.apache.hadoop.fs.FileSystem,
+  private def flipCurrent(fs: org.apache.hadoop.fs.FileSystem,
                                  conf: org.apache.hadoop.conf.Configuration,
                                  base: String, nextVer: Int): Unit = {
     val tmpPtr = new org.apache.hadoop.fs.Path(s"$base/_current.tmp.v$nextVer")
@@ -253,7 +201,7 @@ object Maintenance {
     * each number, losers advance. A number is also skipped when its
     * version dir already exists (a finished writer may have deleted
     * its marker). Bounded so a pathological store cannot spin. */
-  private[graft] def claimVersion(fs: org.apache.hadoop.fs.FileSystem, base: String,
+  private def claimVersion(fs: org.apache.hadoop.fs.FileSystem, base: String,
                            from: Int): Int = {
     var v = from
     while (v - from < 1000) {

@@ -160,18 +160,12 @@ object Positional {
     Bm25.deleteFromShardedLayout(victimDocs, idCol, textCol, path)
 
   /** Read only the ranges whose [min,max] key interval can hold one of
-    * `terms` — the ONE zone-map pruning rule,
-    * [[Bm25.overlappingRangeIds]] — then filter to the terms. */
+    * `terms` — the ONE zone-map pruned read,
+    * [[Bm25.readRangePostings]] — then filter to the terms. */
   def readPostings(spark: org.apache.spark.sql.SparkSession,
                    path: String, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "terms must be non-empty")
-    val base = path.stripSuffix("/")
-    val overlapping = Bm25.overlappingRangeIds(spark, base, terms)
-    if (overlapping.isEmpty) spark.read.parquet(s"$base/schema")
-    else spark.read.option("basePath", s"$base/postings")
-      .parquet(overlapping.map(id => s"$base/postings/range_id=$id"): _*)
-      .filter(col("term").isin(terms.distinct: _*))
-      .drop("range_id")
+    Bm25.readRangePostings(spark, path.stripSuffix("/"), terms.distinct)
   }
 
   /** Phrase search against a [[buildPersistedIndex]] layout: pruned

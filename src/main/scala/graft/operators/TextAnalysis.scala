@@ -225,7 +225,7 @@ object TextAnalysis {
     * corpus-sized gram stream at 100 TB is a second copy of the
     * corpus on scratch disk. A (doc, gram) pre-agg buys nothing —
     * adjacent n-grams barely repeat within a document (the
-    * dsirWeights argument); the original formulation also paid it,
+    * dsirTrainScore argument); the original formulation also paid it,
     * un-persisted, on BOTH join inputs (3.3 s at sf0.1 vs ~1 s now).
     * All counts are exact integers; the ratio is a single IEEE
     * division of two exact longs (bitwise cross-engine). Docs with

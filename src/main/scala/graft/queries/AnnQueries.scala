@@ -315,9 +315,9 @@ object AnnQueries {
     "outlier_knn_refined" -> { (s, dir) =>
       val index = ModelQueries.semdedupIndex(s, dir)
       writeIvfHandoff(s, index, GraphCentsHandoff, GraphAsgHandoff)
-      // the shared wide graph's rank-4 row == knnOutliers(refined,
-      // k = 4, workK = 20): same refined candidate set, same (dist,
-      // nbr) re-rank — one persisted build serves both graph gates
+      // the shared wide graph's rank-4 row == knnGraphRefined(k = 4,
+      // workK = 20)'s: same refined candidate set, same (dist, nbr)
+      // re-rank — one persisted build serves both graph gates
       s.read.parquet(s"${refinedGraphPath(s, dir)}/graph.parquet")
         .filter(col("rn") === 4)
         .select(col("src_id"), col("dist").as("knn_dist"))
@@ -435,8 +435,7 @@ object AnnQueries {
       val full = persistedIvf(s, dir)
       writeIvfHandoff(s, full)
       val src = new java.io.File(persistedIvfPath(s, dir))
-      val tmp = java.nio.file.Files.createTempDirectory("ivfdel").toFile
-      try {
+      HybridQueries.withTempDir("ivfdel") { tmp =>
         HybridQueries.copyTree(src, tmp)
         val victims = Tables.embeddings(s, dir)
           .where(col("vec_id") % 10 === 0)
@@ -452,12 +451,6 @@ object AnnQueries {
           .as[(Long, Int, Int, Double)].collect().toSeq
           .toDF("vec_id", "label", "ivf_cluster", "dist")
           .orderBy(col("dist"), col("vec_id"))
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(tmp)
       }
     },
     // embedding-space domain discovery: per-cluster census over the

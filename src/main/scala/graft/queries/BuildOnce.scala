@@ -50,17 +50,12 @@ object BuildOnce {
         Option(tmp.listFiles()).toSeq.flatten.filter { f =>
           f.getName != dir && f.getName.startsWith(slot) &&
             f.getName.substring(slot.length).matches("[0-9a-f]{16}")
-        }.foreach(rmTree)
+        }.foreach(HybridQueries.rmTree)
       }
     }
     s"$tmp/$dir"
   }
   private val lock = new Object
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete()
-  }
 
   /** MD5 of graft's code source, computed once per JVM: the jar's
     * bytes, or every file under the classes directory (relative path

@@ -215,8 +215,7 @@ object CurationQueries {
     // layout, not semantics; disjoint/covering/sorted invariants are
     // ShardingSpec-gated)
     "export_sorted_manifest" -> { (s, dir) =>
-      val tmp = java.nio.file.Files.createTempDirectory("sorted").toFile
-      try {
+      HybridQueries.withTempDir("sorted") { tmp =>
         val manifest = graft.operators.Sharding.exportSorted(
           Tables.documents(s, dir).select(col("doc_id"), col("lang")),
           "doc_id", nRanges = 8, tmp.getAbsolutePath)
@@ -232,12 +231,6 @@ object CurationQueries {
           if (r.isNullAt(i)) None else Some(r.getLong(i))
         Seq((total, optLong(1), optLong(2)))
           .toDF("total_rows", "min_key", "max_key")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(tmp)
       }
     },
     // doc-granularity next-fit sequence packing (shard-parallel,

@@ -266,14 +266,11 @@ object DedupQueries {
         Dedup.minHashBandRows(reps, "doc_id", "text",
           numHashes = 128, bands = 32, shingle = 3),
         MinhashHandoff)
-      // reps hold one row per DISTINCT text by construction, so the
-      // verify's internal re-classing was an identity transform (~4
-      // redundant exchanges — r12 deferred finding): take the
-      // distinct-texts fast path, then assemble multiplicities with
-      // the ONE shared class-pair builder (the cosine family's).
+      // reps hold one row per DISTINCT text by construction: verify
+      // the rep pairs, then assemble multiplicities with the ONE
+      // shared class-pair builder (the cosine family's).
       val repPairs = Dedup.minHashVerifyPairs(bandRows, reps,
-        "doc_id", "text", shingle = 3, threshold = 0.7,
-        textsAreDistinct = true)
+        "doc_id", "text", shingle = 3, threshold = 0.7)
       val out = classPairDigest(
         Dedup.classPairCountsFromReps(cls.select(col("__rep"), col("__k")),
           repPairs, "jaccard", sameClassQualifies = 1.0 >= 0.7),

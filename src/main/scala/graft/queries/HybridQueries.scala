@@ -70,8 +70,7 @@ object HybridQueries {
     // corpus write.
     "bm25_append" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("bm25app").toFile
-      try {
+      withTempDir("bm25app") { tmp =>
         copyTree(new java.io.File(baselineBm25(s, dir)), tmp)
         Bm25.appendToPersistedIndex(docs.where(col("doc_id") % 10 === 0),
           "doc_id", "text", tmp.getAbsolutePath)
@@ -82,12 +81,6 @@ object HybridQueries {
         import s.implicits._
         r.as[(Long, Long, Long)].collect().toSeq
           .toDF("doc_id", "bm25_fp", "n_terms")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(tmp)
       }
     },
     // DELETE-maintenance gate: copy the FULL-corpus persisted index,
@@ -100,8 +93,7 @@ object HybridQueries {
     // mutates the layout in place.
     "bm25_delete" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("bm25del").toFile
-      try {
+      withTempDir("bm25del") { tmp =>
         copyTree(new java.io.File(persistedBm25(s, dir)), tmp)
         Bm25.deleteFromPersistedIndex(docs.where(col("doc_id") % 10 === 0),
           "doc_id", "text", tmp.getAbsolutePath)
@@ -112,12 +104,6 @@ object HybridQueries {
         import s.implicits._
         r.as[(Long, Long, Long)].collect().toSeq
           .toDF("doc_id", "bm25_fp", "n_terms")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(tmp)
       }
     },
     // RRF fusion of dense cosine top-50 and BM25 top-50 over the
@@ -299,6 +285,20 @@ object HybridQueries {
         java.nio.file.Files.copy(from.toPath, to.toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
+  }
+
+  /** Run `body` on a fresh temp dir named `prefix`…, deleting the dir
+    * however `body` ends — so `body` must materialize any result that
+    * reads from it. */
+  private[graft] def withTempDir[T](prefix: String)(body: java.io.File => T): T = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(tmp) finally rmTree(tmp)
+  }
+
+  /** Delete `f` and everything under it; true when `f` is gone. */
+  private[graft] def rmTree(f: java.io.File): Boolean = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete() || !f.exists()
   }
 
   /** Shared BM25 CTE text, parameterized on the corpus CTE name so the

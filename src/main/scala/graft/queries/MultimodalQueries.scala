@@ -106,8 +106,7 @@ object MultimodalQueries {
     // beyond these columns stays JsonlSpec-gated.
     "jsonl_roundtrip" -> { (s, dir) =>
       import org.apache.spark.sql.types._
-      val tmp = java.nio.file.Files.createTempDirectory("jsonl").toFile
-      try {
+      HybridQueries.withTempDir("jsonl") { tmp =>
         val path = s"${tmp.getAbsolutePath}/docs"
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("text"))
@@ -131,12 +130,6 @@ object MultimodalQueries {
         import s.implicits._
         Seq((r.getLong(0), r.getLong(1), r.getLong(2)))
           .toDF("n_good", "content_sig", "n_quarantined")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(tmp)
       }
     },
     // CSV round-trip with quarantine — the [[jsonl_roundtrip]] matrix
@@ -148,8 +141,7 @@ object MultimodalQueries {
     // documented line-split contract; scrub upstream otherwise).
     "csv_roundtrip" -> { (s, dir) =>
       import org.apache.spark.sql.types._
-      val tmp = java.nio.file.Files.createTempDirectory("csvrt").toFile
-      try {
+      HybridQueries.withTempDir("csvrt") { tmp =>
         val path = s"${tmp.getAbsolutePath}/docs"
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("text"))
@@ -170,12 +162,6 @@ object MultimodalQueries {
         import s.implicits._
         Seq((r.getLong(0), r.getLong(1), r.getLong(2)))
           .toDF("n_good", "content_sig", "n_quarantined")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(tmp)
       }
     },
     // zip explode + parse, HASH-GATED against the source table (the

@@ -221,8 +221,6 @@ object Serving {
                                       pages: PageReadStore, createdBy: String) {
     val rows: Int = pages.getRowCount.toInt
 
-    def has(col: String): Boolean = schema.containsField(col)
-
     /** Throw for a null where `col` requires a value. */
     def nullIn(col: String): Nothing =
       throw new IllegalStateException(s"$file: null in required column '$col'")
@@ -1828,9 +1826,7 @@ object Serving {
         val ids = rg.longs("vec_id"); val levels = rg.ints("level")
         val layers = rg.ints("layer"); val nbrs = rg.longLists("neighbors")
         val embs = rg.floatLists("embedding", nullable = true)
-        // pre-tombstone layouts lack the column — default all-live,
-        // the same compat rule as Hnsw.loadHnsw
-        val del = if (rg.has("deleted")) rg.bools("deleted") else new Array[Boolean](rg.rows)
+        val del = rg.bools("deleted")
         var i = 0
         while (i < rg.rows) {
           // a null embedding stays null (not an empty list)

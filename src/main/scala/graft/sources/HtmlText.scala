@@ -537,29 +537,30 @@ object HtmlText {
     * the page URL and normalizes them into frontier keys. Rides the same
     * scanner as the head signals, so links inside comments or
     * script/style raw text are never emitted (a scripted
-    * `document.write('<a href=…>')` is not a crawlable edge). With
-    * `skipNofollow` set, anchors whose `rel` carries the `nofollow`
-    * token (whitespace-split, case-insensitive — `rel="nofollow
-    * noopener"` counts) are dropped, the link-graph convention since
-    * the tag was introduced. Empty hrefs and valueless `href` drop;
-    * duplicates are KEPT (multiplicity is the caller's call — a
-    * frontier dedups on the normalized key, an anchor-stats consumer
-    * wants the raw count). Null HTML yields no links, never throws. */
-  def links(html: String, skipNofollow: Boolean = false): Seq[String] = {
+    * `document.write('<a href=…>')` is not a crawlable edge). Anchors
+    * whose `rel` carries the `nofollow` token (whitespace-split,
+    * case-insensitive — `rel="nofollow noopener"` counts) are dropped,
+    * the link-graph convention since the tag was introduced. Empty
+    * hrefs and valueless `href` drop; duplicates are KEPT
+    * (multiplicity is the caller's call — a frontier dedups on the
+    * normalized key, an anchor-stats consumer wants the raw count).
+    * Null HTML yields no links, never throws. */
+  def links(html: String): Seq[String] = {
     if (html == null) return Seq.empty
     val out = Seq.newBuilder[String]
     val it = tagBodiesMulti(html, AnchorTags)
     while (it.hasNext) {
       val a = parseAttrs(it.next()._2)
       val href = a.getOrElse("href", "")
-      if (href.nonEmpty && !(skipNofollow && a.get("rel").exists(
-          _.toLowerCase.split("\\s+").contains("nofollow"))))
-        out += href
+      if (href.nonEmpty && !nofollow(a)) out += href
     }
     out.result()
   }
 
   private val AnchorTags = Array("a")
+
+  private def nofollow(attrs: Map[String, String]): Boolean =
+    attrs.get("rel").exists(_.toLowerCase.split("\\s+").contains("nofollow"))
 
   /** Anchors WITH their link text — the inbound-anchor retrieval
     * signal (a target page is described by what other pages call it;
@@ -571,9 +572,8 @@ object HtmlText {
     * nest in valid HTML, and an unclosed anchor takes the rest of the
     * document (never throws). Same scanner as [[links]] — comment and
     * script/style-hidden anchors are never emitted — and the same
-    * `skipNofollow`/empty-href rules. */
-  def anchors(html: String, skipNofollow: Boolean = false)
-      : Seq[(String, String)] = {
+    * nofollow/empty-href rules. */
+  def anchors(html: String): Seq[(String, String)] = {
     if (html == null) return Seq.empty
     val out = Seq.newBuilder[(String, String)]
     val it = tagBodiesMulti(html, AnchorTags)
@@ -581,8 +581,7 @@ object HtmlText {
       val (_, body, innerStart) = it.next()
       val a = parseAttrs(body)
       val href = a.getOrElse("href", "")
-      if (href.nonEmpty && !(skipNofollow && a.get("rel").exists(
-          _.toLowerCase.split("\\s+").contains("nofollow")))) {
+      if (href.nonEmpty && !nofollow(a)) {
         val close = indexOfCloseTagMarkup(html, innerStart, "a")
         out += href -> extractText(html.substring(innerStart, close))
       }

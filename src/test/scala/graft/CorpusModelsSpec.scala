@@ -351,31 +351,18 @@ class CorpusModelsSpec extends SparkSpec {
     assert(w(3).getAs[Double]("weight") === 0.0)
   }
 
-  test("dsirPipeline == dsirModel + dsirWeights (fused path changes no integer)") {
+  test("dsirTrainScore == dsirModel + dsirWeights (fused form changes no integer)") {
+    // dsirWeights hashes every occurrence; dsirTrainScore hashes each
+    // distinct gram once and joins the dictionary back: same integers
     val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(200)
     val lbl = docs.select(col("doc_id"), (col("doc_id") % 4 =!= 0).as("t"))
     val labeled = docs.join(lbl, Seq("doc_id"))
     val (model, _) = CorpusModels.dsirModel(labeled, "text", "t", 128)
     val split = CorpusModels.dsirWeights(labeled, "doc_id", "text", model, 128)
       .orderBy("doc_id").collect().toSeq
-    val fused = CorpusModels.dsirPipeline(labeled, "doc_id", "text", "t", 128)
+    val fused = CorpusModels.dsirTrainScore(labeled, "doc_id", "text", "t", 128)._2
       .orderBy("doc_id").collect().toSeq
     assert(fused === split)
-  }
-
-  test("DSIR per-occurrence-hash scoring (dictEncode=false) == dictionary form, every integer") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(150)
-    val lbl = docs.select(col("doc_id"), (col("doc_id") % 4 =!= 0).as("t"))
-    val labeled = docs.join(lbl, Seq("doc_id"))
-    val (model, _) = CorpusModels.dsirModel(labeled, "text", "t", 128)
-    val dict = CorpusModels.dsirWeights(labeled, "doc_id", "text", model, 128)
-      .orderBy("doc_id").collect().toSeq
-    val direct = CorpusModels.dsirWeights(labeled, "doc_id", "text", model, 128,
-      dictEncode = false).orderBy("doc_id").collect().toSeq
-    assert(direct === dict)
-    val fusedDirect = CorpusModels.dsirPipeline(labeled, "doc_id", "text", "t", 128,
-      dictEncode = false).orderBy("doc_id").collect().toSeq
-    assert(fusedDirect === dict)
   }
 
   test("dsirShared build-once cache == a fresh train+score pass, and is stable across calls") {
@@ -386,8 +373,8 @@ class CorpusModelsSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     val labels = SparkEntry.queries("t_quality_gate")(spark, dir)
       .select(col("doc_id"), col("keep"))
-    val fresh = CorpusModels.dsirPipeline(docs.join(labels, Seq("doc_id")),
-      "doc_id", "text", "keep", 1024)
+    val fresh = CorpusModels.dsirTrainScore(docs.join(labels, Seq("doc_id")),
+      "doc_id", "text", "keep", 1024)._2
     assert(w.orderBy("doc_id").collect().toSeq ===
       fresh.orderBy("doc_id").collect().toSeq,
       "cached weights must be integer-identical to a fresh pipeline")

@@ -554,41 +554,6 @@ class HnswSpec extends SparkSpec {
     assert(hits.contains(0L), "re-ingested id not searchable")
   }
 
-  test("pre-tombstone persisted layouts load as all-live (batch + serving)") {
-    withTempDir("hnsw-old-layout") { dir =>
-      val index = graft.queries.AnnQueries.persistedIvf(spark, sfDir)
-      val graph = Hnsw.buildShards(index.assigned, P)
-      Hnsw.saveHnsw(graph, index.centroids, P, dir.getPath)
-      // rewrite the graph dir WITHOUT the deleted column — the layout
-      // every pre-tombstone version persisted (incl. the streaming
-      // chain's previous published version)
-      val legacy = spark.read.parquet(s"${dir.getPath}/graph")
-        .drop("deleted")
-      val tmp = s"${dir.getPath}/graph_legacy"
-      legacy.write.partitionBy("shard").parquet(tmp)
-      val gd = new java.io.File(s"${dir.getPath}/graph")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(gd)
-      new java.io.File(tmp).renameTo(gd)
-      // batch loader defaults deleted=false
-      val idx = Hnsw.loadHnsw(spark, dir.getPath)
-      assert(idx.graph.filter($"deleted").count() === 0)
-      val q = qvec(0)
-      val probes = Hnsw.route(idx, q, 4)
-      val batch = Hnsw.searchShards(idx.graph,
-          Seq(HnswQuery(0L, q, probes)), ef = 32, P)
-        .select($"vec_id", $"dist").as[(Long, Double)].collect()
-        .sortBy(h => (h._2, h._1)).take(10).toSeq
-      assert(batch.nonEmpty && batch.head._1 === 0L)
-      // serving reader defaults too, and still matches batch
-      val served = Serving.searchHnsw(dir.getPath, q, k = 10, ef = 32,
-        nprobe = 4)
-      assert(served.map(h => (h.vecId, h.dist)) === batch)
-    }
-  }
-
   test("persisted tombstones serve: saveHnsw round-trip keeps deletes") {
     withTempDir("hnsw-del-persist") { dir =>
       val index = graft.queries.AnnQueries.persistedIvf(spark, sfDir)

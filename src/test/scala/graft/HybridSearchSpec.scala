@@ -114,16 +114,16 @@ class HybridSearchSpec extends SparkSpec {
       assert(Bm25.searchPersistedIndex(spark, dir.getAbsolutePath,
         Seq("zzzz"), k = 5).count() === 0L)
     }
-    // a legacy index (persisted before schema/ existed) must fall back
-    // to the postings files' own schema on the no-range path, not crash
+    // a layout without schema/ (no current build writes one) fails
+    // loudly on the no-range path instead of guessing a schema
     withTempDir("bm25idx-legacy") { dir =>
       Bm25.buildPersistedIndex(Seq((1L, "alpha beta")).toDF("doc_id", "text"),
         "doc_id", "text", nRanges = 2, path = dir.getAbsolutePath)
       val fs = new org.apache.hadoop.fs.Path(dir.getAbsolutePath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(s"${dir.getAbsolutePath}/schema"), true)
-      assert(Bm25.searchPersistedIndex(spark, dir.getAbsolutePath,
-        Seq("zzzz"), k = 5).count() === 0L)
+      intercept[org.apache.spark.sql.AnalysisException](
+        Bm25.searchPersistedIndex(spark, dir.getAbsolutePath, Seq("zzzz"), k = 5))
     }
     // the no-range path must return the SAME schema as a populated read
     // — including a non-long id type

@@ -19,16 +19,13 @@ class LinkGraphSpec extends SparkSpec {
     assert(HtmlText.links(html) === Seq("/a", "b/c", "/a"))
   }
 
-  test("links: rel=nofollow honored only when asked, token-split and " +
-    "case-insensitive; null html never throws") {
+  test("links: rel=nofollow dropped, token-split and case-insensitive; " +
+    "null html empty") {
     val html =
       """<a rel="nofollow" href="/n1"></a>
         |<a rel="NoFollow noopener" href="/n2"></a>
         |<a rel="noopener" href="/keep"></a><a href="/plain"></a>""".stripMargin
-    assert(HtmlText.links(html) ===
-      Seq("/n1", "/n2", "/keep", "/plain"))
-    assert(HtmlText.links(html, skipNofollow = true) ===
-      Seq("/keep", "/plain"))
+    assert(HtmlText.links(html) === Seq("/keep", "/plain"))
     assert(HtmlText.links(null) === Seq.empty)
   }
 
@@ -43,14 +40,12 @@ class LinkGraphSpec extends SparkSpec {
         |<a href="/c">upper close</A><p>after</p>
         |<a rel="nofollow" href="/d">nf</a>
         |<a href="/e">unclosed <i>tail""".stripMargin
+    // the rel=nofollow anchor /d is dropped
     assert(HtmlText.anchors(html) === Seq(
       "/a" -> "Doc & co",
       "/b" -> "",
       "/c" -> "upper close",
-      "/d" -> "nf",
       "/e" -> "unclosed tail"))
-    assert(HtmlText.anchors(html, skipNofollow = true).map(_._1) ===
-      Seq("/a", "/b", "/c", "/e"))
     assert(HtmlText.anchors(null) === Seq.empty)
   }
 
@@ -119,17 +114,6 @@ class LinkGraphSpec extends SparkSpec {
     // narrow projection: no exchange in the plan
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"extractLinks must not shuffle:\n$plan")
-  }
-
-  test("extractLinks: skipNofollow=false keeps rel=nofollow targets; " +
-    "dropSelf=false keeps the fragment self-link") {
-    val pages = Seq(("https://h.org/p",
-      "<a rel=\"nofollow\" href=\"/n\"></a><a href=\"#top\"></a>"))
-      .toDF("url", "html")
-    val keep = LinkGraph.extractLinks(pages,
-      skipNofollow = false, dropSelf = false)
-      .select($"link").as[String].collect().sorted
-    assert(keep.toSeq === Seq("https://h.org/n", "https://h.org/p"))
   }
 
   // ---- hostGraph ----

@@ -288,7 +288,7 @@ class PlanSpec extends SparkSpec {
     assert(modelSmj.isEmpty, "model join must not sort-merge:\n" + pPpl)
     val lbl = docs.select($"doc_id", ($"doc_id" % 3 === 0).as("t"))
     val labeled = docs.join(lbl, Seq("doc_id"))
-    val w = CorpusModels.dsirPipeline(labeled, "doc_id", "text", "t", 256)
+    val w = CorpusModels.dsirTrainScore(labeled, "doc_id", "text", "t", 256)._2
     val pW = plan(w)
     assert(pW.contains("BroadcastExchange"), pW)
     // multiclass tagger: the K·cap model and the K-row class table ride
@@ -343,12 +343,12 @@ class PlanSpec extends SparkSpec {
 
   test("minhash gate verify: distinct-reps fast path leaves no re-classing in the plan") {
     // the r12 deferred finding: the gate fed already-distinct rep
-    // texts into minHashVerifyPairs' internal text-classing — an
-    // identity transform costing ~4 exchanges (class groupBy, id→rep
-    // join pair, rep-pair distinct). The fast path must keep the
-    // classing's private columns (__ctext / __tid / __pra) out of the
-    // physical plan entirely; the gate's ONE legitimate text groupBy
-    // (its own class collapse) uses different names.
+    // texts into a verify-side text-classing — an identity transform
+    // costing ~4 exchanges (class groupBy, id→rep join pair, rep-pair
+    // distinct). minHashVerifyPairs now verifies candidates directly;
+    // the old classing's private columns (__ctext / __tid / __pra)
+    // must stay out of the physical plan; the gate's ONE legitimate
+    // text groupBy (its own class collapse) uses different names.
     sys.props("graft.bench.mode") = "true" // skip the handoff write
     try {
       val p = graft.SparkEntry.queries("dedup_minhash_lsh")(spark, sfDir)

@@ -100,41 +100,6 @@ class StorageSpec extends SparkSpec {
     }
   }
 
-  test("compactParquet: many small files -> few, rows preserved exactly") {
-    import graft.operators.Maintenance
-    val dir = tmpDir("compact") + "/table"
-    val df = Tables.documents(spark, sfDir).limit(200)
-    df.repartition(40).write.parquet(dir) // fragment into 40 small files
-    val (filesBefore, _) = Maintenance.fileStats(spark, dir)
-    assert(filesBefore >= 30)
-    val rows = Maintenance.compactParquet(spark, dir, targetBytes = 64L * 1024 * 1024)
-    assert(rows === 200)
-    val (filesAfter, _) = Maintenance.fileStats(spark, dir)
-    assert(filesAfter <= 2, s"expected compaction, got $filesAfter files")
-    assert(spark.read.parquet(dir).count() === 200)
-  }
-
-  test("compactParquet: interrupted swap auto-restores from __old") {
-    import graft.operators.Maintenance
-    val dir = tmpDir("restore") + "/table"
-    Tables.documents(spark, sfDir).limit(50).write.parquet(dir)
-    // simulate a crash between the two swap renames: table moved aside
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + "__old"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir)))
-    assert(Maintenance.restoreIfInterrupted(spark, dir))
-    assert(spark.read.parquet(dir).count() === 50)
-    // idempotent when nothing to restore
-    assert(!Maintenance.restoreIfInterrupted(spark, dir))
-    // and compactParquet itself restores before compacting
-    fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + "__old"))
-    assert(Maintenance.compactParquet(spark, dir) === 50)
-    assert(spark.read.parquet(dir).count() === 50)
-  }
-
   test("compactParquetVersioned: atomic pointer swap — mid-swap reader still succeeds") {
     import graft.operators.Maintenance
     val dir = tmpDir("versioned") + "/table"
@@ -160,6 +125,18 @@ class StorageSpec extends SparkSpec {
       .filter(_.isDirectory).map(_.getPath.getName).sorted
     assert(dirs === Array("v2", "v3"), s"got ${dirs.mkString(",")}")
     assert(spark.read.parquet(Maintenance.resolveCurrent(spark, dir)).count() === 50)
+
+    // many small files -> few, rows preserved exactly
+    val frag = tmpDir("compact") + "/table"
+    Tables.documents(spark, sfDir).limit(200).repartition(40).write.parquet(frag)
+    val (filesBefore, _) = Maintenance.fileStats(spark, frag)
+    assert(filesBefore >= 30)
+    assert(Maintenance.compactParquetVersioned(spark, frag,
+      targetBytes = 64L * 1024 * 1024) === 200)
+    // the flat files are migrated away: v1 holds every parquet file left
+    val (filesAfter, _) = Maintenance.fileStats(spark, frag)
+    assert(filesAfter <= 2, s"expected compaction, got $filesAfter files")
+    assert(spark.read.parquet(Maintenance.resolveCurrent(spark, frag)).count() === 200)
   }
 
   test("compactParquetVersioned: two concurrent compactors claim distinct versions") {
@@ -281,6 +258,29 @@ class StorageSpec extends SparkSpec {
       fs.setTimes(p(n), now - olderThanMs - 60000, -1))
     val reaped2 = Maintenance.reapAbandoned(spark, dir, olderThanMs)
     assert(reaped2.toSet === Set(".claim_v8", "v8__writing"))
+  }
+
+  test("publishVersion: a write that throws leaves no claim, no writing dir, pointer unchanged") {
+    import graft.operators.Maintenance
+    withTempDir("publish-fail") { root =>
+      val dir = s"$root/table"
+      Tables.documents(spark, sfDir).limit(10).write.parquet(dir)
+      Maintenance.compactParquetVersioned(spark, dir) // migrate -> v1 + pointer
+      val cur = Maintenance.resolveCurrent(spark, dir)
+      intercept[IllegalStateException] {
+        Maintenance.publishVersion(spark, dir, cur, retainPrevious = 1) { writing =>
+          new java.io.File(writing).mkdirs()
+          throw new IllegalStateException("write failed")
+        }
+      }
+      assert(Maintenance.resolveCurrent(spark, dir) === cur)
+      val left = new java.io.File(dir).list().toSeq
+        .filter(n => n.contains("writing") || n.startsWith(".claim"))
+      assert(left.isEmpty, s"failed publish left $left")
+      // the released claim is not burned: the next compaction takes v2
+      assert(Maintenance.compactParquetVersioned(spark, dir) === 10)
+      assert(Maintenance.resolveCurrent(spark, dir).endsWith("/v2"))
+    }
   }
 
   test("tokenBudgetMix: greedy prefix per domain in draw order, bounded overshoot") {
